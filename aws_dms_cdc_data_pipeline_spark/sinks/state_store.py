@@ -34,8 +34,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark import schema as S
@@ -84,6 +85,11 @@ class StateStore:
     def _bucket_expr(self):
         return F.expr(f"pmod(hash({self.key}), {self.num_buckets})")
 
+    def _read(self, dirs: list[str]) -> DataFrame:
+        # the layout's schema is known: passing it skips the footer-read
+        # job that schema inference launches on every read
+        return self.spark.read.schema(S.KEYED_ENVELOPE_SCHEMA).parquet(*dirs)
+
     # -- read --------------------------------------------------------------
     def envelopes(self) -> DataFrame | None:
         """Latest envelope per key, including delete tombstones."""
@@ -93,7 +99,7 @@ class StateStore:
         dirs = [self._bdir(int(b), v) for b, v in manifest["buckets"].items()]
         if not dirs:  # every key erased: live store with zero buckets
             return self.spark.createDataFrame([], S.KEYED_ENVELOPE_SCHEMA)
-        return self.spark.read.parquet(*dirs)
+        return self._read(dirs)
 
     def table(self) -> DataFrame:
         """The analyst-facing current-state table (live rows only)."""
@@ -143,16 +149,20 @@ class StateStore:
         ]
         if not dirs:
             return self.table().limit(0)
-        env = self.spark.read.parquet(*dirs)
+        env = self._read(dirs)
         live = env.filter(F.col("metadata.operation") != F.lit(S.OP_DELETE))
         return live.filter(F.expr(self.key).isin(keys)).select("data.*")
 
     # -- write -------------------------------------------------------------
-    def merge(self, batch_envelopes: DataFrame) -> int:
+    def merge(
+        self, batch_envelopes: DataFrame, changes: ChangeCapture | None = None
+    ) -> int:
         """Upsert one micro-batch of keyed envelopes; returns new generation.
 
         Only buckets whose keys appear in the batch are read, merged,
         and rewritten; everything else is untouched metadata-only.
+        ``changes`` (optional) collects the merge's signed change set
+        on the staging write itself — see :class:`ChangeCapture`.
         """
         cols = ["data", "metadata", "doc_id"]
         batch = batch_envelopes.select(*cols).withColumn("_b", self._bucket_expr())
@@ -172,16 +182,25 @@ class StateStore:
             for b in touched
             if str(b) in manifest["buckets"]
         ]
-        merged_src = batch
+        merged_src = batch.withColumn("_new", F.lit(True))
         if old_dirs:
             old = (
-                self.spark.read.parquet(*old_dirs)
+                self._read(old_dirs)
                 .select(*cols)
                 .withColumn("_b", self._bucket_expr())
+                .withColumn("_new", F.lit(False))
             )
-            merged_src = old.unionByName(batch)
+            merged_src = old.unionByName(merged_src)
         # keep tombstones so a late pre-delete change can't resurrect the row
-        latest = _latest_envelope(merged_src, self.key)
+        ranked = _ranked(merged_src, self.key)
+        if changes is not None:
+            # a stored row that ranks below 1 lost to a batch row (the
+            # store holds one row per key); batch rows below 1 never
+            # reached the store
+            first, new = F.col("_rn") == 1, F.col("_new")
+            sign = F.when(first & new, 1).when(~first & ~new, -1).otherwise(0)
+            ranked = changes._observe(ranked, sign)
+        latest = ranked.filter(F.col("_rn") == 1).drop("_rn", "_new")
         return self._swap_buckets(latest, touched, manifest, new_gen)
 
     def _swap_buckets(
@@ -307,8 +326,9 @@ def _versions_below(bucket_root: str, keep_floor: int) -> list[int]:
     return out
 
 
-def _latest_envelope(envelopes: DataFrame, key: str) -> DataFrame:
-    """current_state minus the delete-filter/projection: full envelopes."""
+def _ranked(envelopes: DataFrame, key: str) -> DataFrame:
+    """Every envelope with ``_rn``, its rank within its key (1 = the
+    latest: event time, then transaction id, then doc id)."""
     from pyspark.sql import Window
 
     order = [
@@ -317,14 +337,46 @@ def _latest_envelope(envelopes: DataFrame, key: str) -> DataFrame:
         F.col("doc_id").desc(),
     ]
     w = Window.partitionBy(F.col(key)).orderBy(*order)
-    return (
-        envelopes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return envelopes.withColumn("_rn", F.row_number().over(w))
 
 
-__all__ = ["StateStore", "current_state", "changes_in_generation", "reshard", "fsck"]
+class ChangeCapture:
+    """The signed change set of one :meth:`StateStore.merge`, observed
+    on the merge's own staging write: no extra Spark job, nothing
+    persisted, nothing written under the store.
+
+    The merge ranks the batch together with the stored rows of its
+    keys and signs each ranked row: +1 for a batch row that becomes
+    the stored winner, -1 for a stored row that a batch row
+    supersedes, 0 otherwise. ``row(sign)`` maps a ranked envelope
+    (``data``/``metadata``/``doc_id``) and its sign to the value to
+    keep (NULL = nothing); after a successful merge :meth:`rows`
+    returns that value for every +/-1 row. Replayed records cancel:
+    a content-identical row either keeps its stored twin (0) or
+    replaces it (+1 and -1 of equal content).
+
+    Every merge attempt observes into a fresh ``Observation``, so
+    after a retried merge :meth:`rows` reflects the committed attempt
+    alone. An empty batch writes nothing and leaves :meth:`rows`
+    empty.
+    """
+
+    def __init__(self, row: Callable[[Column], Column]):
+        self._row = row
+        self._obs: Observation | None = None
+
+    def _observe(self, ranked: DataFrame, sign: Column) -> DataFrame:
+        self._obs = Observation()
+        return ranked.observe(
+            self._obs,
+            F.collect_list(F.when(sign != 0, self._row(sign))).alias("rows"),
+        )
+
+    def rows(self) -> list:
+        return [] if self._obs is None else self._obs.get["rows"]
+
+
+__all__ = ["StateStore", "ChangeCapture", "current_state", "changes_in_generation", "reshard", "fsck"]
 
 
 def changes_in_generation(store: StateStore) -> DataFrame | None:
@@ -340,11 +392,10 @@ def changes_in_generation(store: StateStore) -> DataFrame | None:
     replayed epoch emits an empty feed. Returns None before the first
     merge.
 
-    Cites the same store layout contract the incremental matview
-    uses (streaming/matview.py): previous versions survive exactly
-    one generation, so call this between merges (e.g. from the
-    foreachBatch hook); after a crash-gap, downstream consumers
-    re-baseline from :meth:`StateStore.table`.
+    Relies on the store's GC contract that a touched bucket's previous
+    version survives exactly one generation, so call this between
+    merges (e.g. from the foreachBatch hook); after a crash-gap,
+    downstream consumers re-baseline from :meth:`StateStore.table`.
     """
     from aws_dms_cdc_data_pipeline_spark.operators.diff import snapshot_diff
 
@@ -357,7 +408,7 @@ def changes_in_generation(store: StateStore) -> DataFrame | None:
     def _live(dirs: list[str]) -> DataFrame:
         if not dirs:
             return store.spark.createDataFrame([], S.DATA_SCHEMA)
-        env = store.spark.read.parquet(*dirs)
+        env = store._read(dirs)
         return env.filter(
             F.col("metadata.operation") != F.lit(S.OP_DELETE)
         ).select("data.*")

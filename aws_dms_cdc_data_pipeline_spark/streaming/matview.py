@@ -5,45 +5,47 @@ version per key" (OpenSearch index / Athena over S3 — reference
 README.md:457, firehose.py:114-155). Any dashboard query over that
 surface is a GROUP BY over current state — recomputed from scratch
 on every refresh. This module maintains such an aggregate
-*incrementally*: per micro-batch work is O(batch + touched groups),
-never O(state), which at 100 TB state with a 60 s trigger is the
-difference between a sub-second view refresh and a full-table scan
-per minute.
+*incrementally*: the Spark work per micro-batch is O(batch), never
+O(state), which at 100 TB state with a 60 s trigger is the difference
+between a sub-second view refresh and a full-table scan per minute.
 
 How (classic incremental view maintenance over abelian aggregates):
 
-- :class:`~aws_dms_cdc_data_pipeline_spark.sinks.state_store.StateStore`
-  already versions its key-hashed buckets and keeps each touched
-  bucket's previous version directory for one generation. The view
-  snapshots the store manifest BEFORE a merge and diffs it against
-  the manifest AFTER: the changed buckets' old and new directories
-  are both on disk, so per-group contributions of `old` and `new`
-  (COUNT of live rows + SUMs, computed on integer/decimal-exact
-  types) subtract into an exact per-group delta — no re-read of any
-  untouched bucket, no change-data beyond what the store already
-  writes.
+- :meth:`~aws_dms_cdc_data_pipeline_spark.sinks.state_store.StateStore.merge`
+  already ranks every batch row against the stored row of its key.
+  Handed a :class:`~aws_dms_cdc_data_pipeline_spark.sinks.state_store.ChangeCapture`
+  built from :meth:`IncrementalAggView.signed_row`, it signs the
+  ranked rows (+1 new winner, -1 superseded stored row) and collects
+  each signed row's contribution — (group, signed live count, signed
+  SUMs, on integer-exact types) — through an ``Observation`` on its
+  own staging write. The view leg runs no Spark job: :meth:`advance`
+  is a keyed add of those contributions onto the current view rows,
+  in the driver.
 - COUNT and SUM form an abelian group (subtraction is well-defined),
   so delta application is a keyed add; AVG and friends derive from
   (count, sum) at read time. Non-subtractable aggregates (MIN/MAX/
   DISTINCT) are out of scope by design — they need per-group
   recomputation on retraction, which `rebuild()` provides.
 - The view table itself is versioned-and-swapped exactly like the
-  store (``v=N`` dirs + ``_MANIFEST``): readers are never torn, a
+  store (``v=N`` dirs + ``_MANIFEST``), one parquet file per version
+  written by a driver-side pyarrow writer: readers are never torn, a
   crashed writer's partial directory is invisible, and a replayed
-  epoch is harmless — a replayed ``merge`` writes content-identical
-  buckets, so the old-vs-new diff is zero rows.
+  epoch is harmless — a replayed record either loses to its stored
+  twin or replaces it with equal content, so its contributions
+  cancel.
 - Crash recovery: the view records the store generation it reflects.
   If an ``advance`` finds it has missed a generation (crash between
-  a merge and the view apply), or a needed old directory was already
-  garbage-collected, it falls back to ``rebuild()`` — a one-off full
-  recompute, correct by construction. The normal path never pays it.
+  a merge and the view apply, or a store write the view never saw,
+  such as an erasure), it falls back to ``rebuild()`` — a one-off
+  full recompute, correct by construction. The normal path never
+  pays it.
 
 Scale note: the view table is one row per group and is rewritten per
-batch. For group cardinalities where that rewrite matters, shard the
-view by ``pmod(hash(group), B)`` exactly as StateStore shards keys
-and rewrite only shards whose groups appear in the delta; the diff
-side needs no change. Not needed at the fixture scales this repo
-tests, so the simple layout stays.
+batch, in the driver. For group cardinalities where that rewrite
+matters, shard the view by ``pmod(hash(group), B)`` exactly as
+StateStore shards keys and rewrite only shards whose groups appear in
+the delta; the change capture needs no change. Not needed at the
+fixture scales this repo tests, so the simple layout stays.
 """
 
 from __future__ import annotations
@@ -52,16 +54,21 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark import schema as S
-from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore
+from aws_dms_cdc_data_pipeline_spark.sinks.state_store import (
+    StateStore,
+    _versions_below,
+)
 
 
 class IncrementalAggView:
     """COUNT + SUM aggregate over live current-state rows, maintained
-    incrementally from StateStore generation diffs.
+    incrementally from the signed change set of each StateStore merge.
 
     ``group_expr`` is a SQL expression over the envelope (e.g.
     ``data.device``); ``sums`` maps output column name → SQL
@@ -123,85 +130,52 @@ class IncrementalAggView:
         return f"{self.group_alias} string, n_rows long, {sum_cols}"
 
     # -- maintenance protocol ----------------------------------------------
-    def begin(self) -> dict:
-        """Snapshot the store manifest; call immediately BEFORE merge."""
-        return self.store._manifest()
+    def signed_row(self, sign: Column) -> Column:
+        """This view's contribution of one ranked store row carrying
+        ``sign``: (group, sign, sign × each sum) for a live row, NULL
+        for a delete tombstone. Hand it to the merge as
+        ``StateStore.merge(batch, ChangeCapture(view.signed_row))``."""
+        live = F.col("metadata.operation") != F.lit(S.OP_DELETE)
+        return F.when(
+            live,
+            F.struct(
+                self._group(),
+                sign.cast("long").alias("n_rows"),
+                *[
+                    (sign * F.coalesce(F.expr(e).cast("long"), F.lit(0)))
+                    .cast("long")
+                    .alias(a)
+                    for a, e in self.sums.items()
+                ],
+            ),
+        )
 
-    def advance(self, pre_manifest: dict) -> int:
-        """Apply the delta between ``pre_manifest`` and the store's
-        current manifest; call immediately AFTER a successful merge.
-        Returns the new view version. Falls back to :meth:`rebuild`
-        when the incremental path is impossible (missed generation or
-        GC'd old directory)."""
-        post = self.store._manifest()
+    def advance(self, generation: int, rows: list) -> int:
+        """Apply ``rows`` — the :meth:`signed_row` values the merge that
+        produced store ``generation`` collected — as a keyed add onto
+        the current view, in the driver (no Spark job). Returns the new
+        view version. Falls back to :meth:`rebuild` when the view missed
+        a generation."""
         m = self._manifest()
-        if post["generation"] <= m["store_gen"]:
+        if generation <= m["store_gen"]:
             return m["v"]  # already reflects this (or a later) merge
-        if m["v"] >= 0 and pre_manifest["generation"] != m["store_gen"]:
-            # the view missed at least one merge (crash between merge
-            # and advance): the intermediate diff is unrecoverable
+        if m["v"] < 0 or generation != m["store_gen"] + 1:
+            # never built, or the view missed at least one store write
+            # (crash between merge and advance): the intermediate
+            # delta is unrecoverable
             return self.rebuild()
-        if m["v"] < 0:
-            return self.rebuild()
-
-        changed = [
-            b
-            for b, v in post["buckets"].items()
-            if pre_manifest["buckets"].get(b) != v
-        ]
-        old_dirs = [
-            self.store._bdir(int(b), pre_manifest["buckets"][b])
-            for b in changed
-            if b in pre_manifest["buckets"]
-        ]
-        if any(not os.path.isdir(d) for d in old_dirs):
-            return self.rebuild()  # previous version already GC'd
-        new_dirs = [self.store._bdir(int(b), post["buckets"][b]) for b in changed]
-
-        old_c = self._contrib(old_dirs)
-        new_c = self._contrib(new_dirs)
-        g = self.group_alias
         metrics = ["n_rows", *self.sums]
-        delta = (
-            new_c.alias("n")
-            .join(old_c.alias("o"), on=g, how="full")
-            .select(
-                F.col(g),
-                *[
-                    (
-                        F.coalesce(F.col(f"n.{c}"), F.lit(0))
-                        - F.coalesce(F.col(f"o.{c}"), F.lit(0))
-                    ).alias(c)
-                    for c in metrics
-                ],
-            )
-            .filter(
-                " OR ".join(f"{c} != 0" for c in metrics)
-            )
+        groups = {
+            r[self.group_alias]: [r[c] for c in metrics]
+            for r in pq.read_table(self._vdir(m["v"])).to_pylist()
+        }
+        for r in rows:
+            acc = groups.setdefault(r[self.group_alias], [0] * len(metrics))
+            for i, c in enumerate(metrics):
+                acc[i] += r[c]
+        return self._swap_in(
+            [(g, *acc) for g, acc in groups.items() if acc[0] > 0], generation
         )
-        merged = (
-            self.table()
-            .alias("cur")
-            .join(delta.alias("d"), on=g, how="full")
-            .select(
-                F.col(g),
-                *[
-                    (
-                        F.coalesce(F.col(f"cur.{c}"), F.lit(0))
-                        + F.coalesce(F.col(f"d.{c}"), F.lit(0))
-                    ).cast("long").alias(c)
-                    for c in metrics
-                ],
-            )
-            .filter(F.col("n_rows") > 0)
-        )
-        return self._swap_in(merged, post["generation"])
-
-    def update(self, merge_fn) -> int:
-        """Convenience: ``begin`` → ``merge_fn()`` → ``advance``."""
-        pre = self.begin()
-        merge_fn()
-        return self.advance(pre)
 
     def rebuild(self) -> int:
         """Full recompute from the store (initial build / crash
@@ -209,23 +183,21 @@ class IncrementalAggView:
         rare."""
         env = self.store.envelopes()
         gen = self.store.version()
-        if env is None:
-            empty = self.spark.createDataFrame([], self._schema_ddl())
-            return self._swap_in(empty, gen)
-        return self._swap_in(self._contrib_df(env), gen)
+        rows = [] if env is None else [tuple(r) for r in self._contrib_df(env).collect()]
+        return self._swap_in(rows, gen)
 
     # -- internals ----------------------------------------------------------
+    def _group(self) -> Column:
+        # NULL group values fold to a sentinel so every group is a
+        # plain string key; NULL-valued sum inputs contribute 0 so the
+        # incremental and rebuilt tables are identical.
+        return F.coalesce(
+            F.expr(self.group_expr).cast("string"), F.lit("<null>")
+        ).alias(self.group_alias)
+
     def _contrib_df(self, env: DataFrame) -> DataFrame:
-        # NULL group values fold to a sentinel so the delta/apply
-        # full-outer joins (which don't match NULL = NULL) stay keyed;
-        # NULL-valued sum inputs contribute 0 so the incremental and
-        # rebuilt tables are byte-identical.
         live = env.filter(F.col("metadata.operation") != F.lit(S.OP_DELETE))
-        return live.groupBy(
-            F.coalesce(
-                F.expr(self.group_expr).cast("string"), F.lit("<null>")
-            ).alias(self.group_alias)
-        ).agg(
+        return live.groupBy(self._group()).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             *[
                 F.coalesce(F.sum(F.expr(e).cast("long")), F.lit(0))
@@ -235,23 +207,30 @@ class IncrementalAggView:
             ],
         )
 
-    def _contrib(self, dirs: list[str]) -> DataFrame:
-        if not dirs:
-            return self.spark.createDataFrame([], self._schema_ddl())
-        return self._contrib_df(self.spark.read.parquet(*dirs))
-
-    def _swap_in(self, df: DataFrame, store_gen: int) -> int:
+    def _swap_in(self, rows: list[tuple], store_gen: int) -> int:
         m = self._manifest()
         new_v = m["v"] + 1
         out = self._vdir(new_v)
         if os.path.exists(out):
             shutil.rmtree(out)  # crashed earlier attempt
-        # the view is small (one row per group): single file keeps
-        # reads cheap; shard by group hash before this matters
-        df.coalesce(1).write.mode("overwrite").parquet(out)
+        os.makedirs(out)
+        # the view is small (one row per group): one file written from
+        # the driver keeps reads cheap and costs no Spark job; shard by
+        # group hash before this matters
+        schema = pa.schema(
+            [(self.group_alias, pa.string())]
+            + [(c, pa.int64()) for c in ["n_rows", *self.sums]]
+        )
+        rows = sorted(rows)
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)],
+            schema=schema,
+        )
+        pq.write_table(table, os.path.join(out, "part-00000.parquet"))
         self._write_manifest({"v": new_v, "store_gen": store_gen})
-        # keep one previous version for in-flight readers, GC the rest
-        for v in range(new_v - 1):
+        # keep one previous version for in-flight readers; GC only the
+        # older versions that are actually on disk
+        for v in _versions_below(self.path, new_v - 1):
             shutil.rmtree(self._vdir(v), ignore_errors=True)
         return new_v
 

@@ -33,7 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from aws_dms_cdc_data_pipeline_spark import schema as S
 from aws_dms_cdc_data_pipeline_spark.operators.selection import select_table
-from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore
+from aws_dms_cdc_data_pipeline_spark.sinks.state_store import ChangeCapture, StateStore
 from aws_dms_cdc_data_pipeline_spark.sources.envelope_stream import read_envelope_stream
 
 
@@ -84,10 +84,13 @@ def _merge_with_retry(
     selected: DataFrame,
     budget_seconds: float,
     backoff_seconds: float,
-) -> tuple[Exception | None, int]:
+    changes: ChangeCapture | None = None,
+) -> tuple[Exception | None, int, int | None]:
     """Retry ``store.merge`` with exponential backoff until the budget
-    is spent; return (None, attempts) on success or (last_error,
-    attempts) once exhausted. Always attempts at least once.
+    is spent; return (None, attempts, generation) on success or
+    (last_error, attempts, None) once exhausted. Always attempts at
+    least once. ``changes`` is handed to every attempt, which observes
+    afresh, so it ends up holding the committed attempt's change set.
 
     Matches the reference's bounded delivery retry (firehose.py:150-152:
     RetryOptions duration_in_seconds=60) — a poison batch must NOT
@@ -99,12 +102,15 @@ def _merge_with_retry(
     while True:
         attempts += 1
         try:
-            store.merge(selected)
-            return None, attempts
+            if changes is None:  # wrappers of merge(self, df) keep working
+                gen = store.merge(selected)
+            else:
+                gen = store.merge(selected, changes)
+            return None, attempts, gen
         except Exception as exc:  # noqa: BLE001 — any failure is retryable
             delay = backoff_seconds * (2 ** (attempts - 1))
             if time.monotonic() + delay > deadline:
-                return exc, attempts
+                return exc, attempts, None
             time.sleep(delay)
 
 
@@ -112,8 +118,8 @@ def _deliver(cfg: CdcStreamConfig, store: StateStore, view=None):
     """Build the foreachBatch delivery function.
 
     ``view`` (optional ``IncrementalAggView``) is advanced after each
-    successful merge from the store's generation diff — per-batch cost
-    O(batch + touched groups), never O(state).
+    successful merge from the signed change set that merge observed on
+    its own write job — the view leg runs no Spark job of its own.
     """
 
     def deliver(batch: DataFrame, epoch_id: int) -> None:
@@ -203,17 +209,20 @@ def _deliver(cfg: CdcStreamConfig, store: StateStore, view=None):
             delivery_dlq = os.path.join(
                 cfg.error_path, f"batch_id={epoch_id}", "delivery"
             )
-            pre_manifest = view.begin() if view is not None else None
-            err, attempts = _merge_with_retry(
+            changes = (
+                ChangeCapture(view.signed_row) if view is not None else None
+            )
+            err, attempts, gen = _merge_with_retry(
                 store,
                 selected,
                 cfg.delivery_retry_seconds,
                 cfg.delivery_retry_backoff_seconds,
+                changes,
             )
             if err is None and view is not None:
-                # replayed epochs are safe: a content-identical merge
-                # diffs to zero rows; a missed window rebuilds
-                view.advance(pre_manifest)
+                # replayed epochs are safe: replayed records cancel in
+                # the change set; a missed generation rebuilds
+                view.advance(gen, changes.rows())
             if err is None:
                 # A crash between a failed attempt's DLQ write and the
                 # checkpoint commit can leave a stale delivery DLQ for
