@@ -1,8 +1,1 @@
 """Maintenance jobs: storage-layout hygiene for long-running pipelines."""
-
-from aws_dms_cdc_data_pipeline_spark.maintenance.compact import (  # noqa: F401
-    compact_archive,
-)
-from aws_dms_cdc_data_pipeline_spark.maintenance.erasure import (  # noqa: F401
-    erase_keys,
-)

@@ -1,77 +1,1 @@
 """Operator library — each module maps to SURVEY.md §2 inventory rows."""
-
-from aws_dms_cdc_data_pipeline_spark.operators.selection import select_table  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.envelope import (  # noqa: F401
-    parse_envelopes,
-    serialize_envelopes,
-    to_envelope,
-    wrap_rows,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.partitioning import partition_by_key  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.upsert import current_state  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.asof import asof_join  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.sessionize import (  # noqa: F401
-    daily_streaks,
-    sessionize,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.intervals import interval_coverage  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.features import ewma_by_key  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.checksum import (  # noqa: F401
-    checksum_oracle_sql,
-    table_checksum,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.outliers import flag_outliers  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.search import (  # noqa: F401
-    bm25_search,
-    bool_search_many,
-    fuzzy_search,
-    match_phrase_prefix,
-    rare_terms,
-    termvectors,
-    wildcard_search,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (  # noqa: F401
-    composite_agg_page,
-    date_histogram,
-    histogram_pipeline,
-    numeric_histogram,
-    range_buckets,
-    significant_terms,
-    top_hits_per_facet,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.multimodal import (  # noqa: F401
-    extract_features,
-    resize_images,
-    sample_frames,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.phash import (  # noqa: F401
-    phash_images,
-    phash_near_dup_pairs,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.audiofp import (  # noqa: F401
-    audio_fingerprints,
-    audio_near_dup_pairs,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.bpe import (  # noqa: F401
-    fertility_stats,
-    learn_bpe_merges,
-    segment_words,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.embed import embed_documents  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.operators.dedup import (  # noqa: F401
-    duplicated_spans,
-    excise_spans,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.expectations import (  # noqa: F401
-    quarantine_violations,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.lucene import (  # noqa: F401
-    compile_query_string,
-    query_string_oracle_sql,
-    query_string_search,
-)
-from aws_dms_cdc_data_pipeline_spark.operators.painless import (  # noqa: F401
-    parse_script,
-    script_score_oracle_sql,
-    script_score_search,
-)

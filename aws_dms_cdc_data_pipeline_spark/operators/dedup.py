@@ -380,8 +380,7 @@ def simhash_pairs(
 
     # the simhash fold (per-token hash + 64 bit-position tallies) is
     # per-row heavy; restore parallelism on poorly-split sources
-    # before it (lower bytes bar than tokenize-weight ops — see
-    # contamination.py for the measurement pattern)
+    # before it (lower bytes bar than tokenize-weight ops)
     sh = with_simhash(
         fan_out_scan(
             df.select(id_col, text_col),

@@ -39,14 +39,13 @@ def local_relation(spark, data, schema: str) -> DataFrame:
 
 def stats_memo_key(df: DataFrame, *extra) -> tuple | None:
     """Memo key for collected model/index statistics — the shared key
-    shape for every stats memo (BM25 corpus stats, NB training
-    counts, the DSIR model, the IVF quantizer).
+    shape for every stats memo (the BM25 corpus stats of the search,
+    query-string and DSL operators, the DSIR model of sampling.py).
 
     ``(appId, analyzed-plan semanticHash, input file set, *extra)``:
     the plan hash keys the computation, the FILE SET keys staleness —
     an in-place overwrite of a source table at the same path writes
-    new part files, so the memo re-collects (the ``_ARTIFACT_MEMO``
-    key shape from vector_index.py; r17 verdict ask #5 — a
+    new part files, so the memo re-collects (r17 verdict ask #5 — a
     semanticHash-only key served stale stats after an in-place
     overwrite within one session). The semanticHash raises exactly
     where the former hash-only keys raised; a file-set lookup failure

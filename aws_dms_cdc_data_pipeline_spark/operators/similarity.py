@@ -387,8 +387,8 @@ def nearest_centroid_classify(
 
     The semantic-domain-assignment staple: centroids learned from the
     labeled corpus classify vectors by maximum mean-dot-product —
-    the single-iteration nearest-centroid cousin of the IVF
-    quantizer's Lloyd step (operators/ivf.py).
+    the single-iteration nearest-centroid cousin of a k-means Lloyd
+    step.
 
     Determinism by construction: vectors quantize to integer
     ``floor(x·1e6)`` arrays up front, centroid accumulation and the

@@ -30,13 +30,11 @@ from pyspark.sql import functions as F
 from aws_dms_cdc_data_pipeline_spark import schema as S
 
 
-def current_state(
-    envelopes: DataFrame,
-    *,
-    key: str = "data.trans_id",
-    keep_deleted: bool = False,
-) -> DataFrame:
-    """Latest row version per key → one bare data row per live key."""
+def ranked(envelopes: DataFrame, key: str = "data.trans_id") -> DataFrame:
+    """Every envelope with ``_rn``, its rank within its key (1 = the
+    latest: event time, then transaction id, then doc id when the
+    envelopes carry one). The one per-key order of the engine: the
+    batch view below and the state store's merge both rank with it."""
     order = [
         F.col("metadata.timestamp").desc(),
         F.col(S.meta("transaction-id")).desc(),
@@ -44,12 +42,17 @@ def current_state(
     if "doc_id" in envelopes.columns:
         order.append(F.col("doc_id").desc())
     w = Window.partitionBy(F.col(key)).orderBy(*order)
+    return envelopes.withColumn("_rn", F.row_number().over(w))
 
-    latest = (
-        envelopes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+
+def current_state(
+    envelopes: DataFrame,
+    *,
+    key: str = "data.trans_id",
+    keep_deleted: bool = False,
+) -> DataFrame:
+    """Latest row version per key → one bare data row per live key."""
+    latest = ranked(envelopes, key).filter(F.col("_rn") == 1).drop("_rn")
     if not keep_deleted:
         latest = latest.filter(F.col("metadata.operation") != F.lit(S.OP_DELETE))
     return latest.select("data.*")

@@ -33,7 +33,6 @@ from aws_dms_cdc_data_pipeline_spark.operators.partitioning import (
 from aws_dms_cdc_data_pipeline_spark.session import load_table
 from aws_dms_cdc_data_pipeline_spark.operators import components as C
 from aws_dms_cdc_data_pipeline_spark.operators import dedup as D
-from aws_dms_cdc_data_pipeline_spark.operators import multimodal as M
 from aws_dms_cdc_data_pipeline_spark.operators import similarity as V
 from aws_dms_cdc_data_pipeline_spark.operators import text as X
 
@@ -1251,28 +1250,6 @@ def ann_quantized_topk_q(spark, sf_dir):
 
 
 @q(
-    "ann_ivf_topk",
-    None,  # trained-quantizer cell assignment is engine-internal
-    "IVF approximate top-10: k-means coarse quantizer (trained "
-    "in-engine), n_probe nearest cells per query, exact re-rank. "
-    "Rows-only.",
-)
-def ann_ivf_topk(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.ivf import (
-        ivf_topk,
-        train_quantizer,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    centroids = train_quantizer(emb, n_lists=16, iterations=3)
-    out = ivf_topk(emb, queries_df, centroids, k=10, n_probe=4)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@q(
     "embedding_similarity_pairs",
     """
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1329,74 +1306,6 @@ def _near_dup_lsh_oracle() -> str:
 def embedding_near_dup_lsh(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     return V.embedding_near_dup_pairs(emb, dim=64, num_planes=6, threshold=0.4)
-
-
-@q(
-    "multimodal_media_stats",
-    """
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-           CAST(octet_length(encode(text)) % 640 + 1 AS INTEGER) AS width,
-           CAST(octet_length(encode(text)) % 480 + 1 AS INTEGER) AS height
-    FROM documents
-    """,
-    "Multimodal plumbing: binary media column through mapInPandas "
-    "feature extraction (deterministic fake decode); scalar outputs "
-    "verified against byte-length arithmetic.",
-)
-def multimodal_media_stats(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    media = M.documents_as_media(docs)
-    feats = M.extract_features(media, dim=16, fake=True)
-    return feats.select("media_id", "byte_len", "width", "height")
-
-
-@q(
-    "multimodal_features",
-    # Full value oracle for the fake-decode math: DuckDB re-derives the
-    # per-slot byte sums from hex(blob) and applies the identical
-    # sum/255.0 float32 round-trip; fixed-point micro-units make the
-    # float comparison exact (see label_centroids for the trick).
-    """
-    WITH b AS (
-        SELECT doc_id, hex(encode(text)) AS h,
-               octet_length(encode(text)) AS n
-        FROM documents WHERE text IS NOT NULL
-    ),
-    e AS (SELECT doc_id, h, unnest(generate_series(0, n - 1)) AS i FROM b),
-    sums AS (
-        SELECT doc_id, CAST(i % 16 AS INT) AS pos,
-               SUM((strpos('0123456789ABCDEF',
-                           substr(h, CAST(2 * i + 1 AS INT), 1)) - 1) * 16
-                 + (strpos('0123456789ABCDEF',
-                           substr(h, CAST(2 * i + 2 AS INT), 1)) - 1)) AS s
-        FROM e GROUP BY 1, 2
-    ),
-    grid0 AS (SELECT doc_id, unnest(generate_series(0, 15)) AS p FROM b),
-    grid AS (SELECT doc_id, CAST(p AS INT) AS pos FROM grid0)
-    SELECT g.doc_id AS media_id, g.pos,
-           CAST(floor(CAST(CAST(COALESCE(s.s, 0) / 255.0 AS FLOAT) AS DOUBLE)
-                      * 1000000.0) AS BIGINT) AS value_fp
-    FROM grid g LEFT JOIN sums s ON g.doc_id = s.doc_id AND g.pos = s.pos
-    """,
-    "Full mapInPandas featurization, exploded to one (media_id, pos, "
-    "value) row per feature slot so every float is value-checked; the "
-    "array<float> column itself stays the library API "
-    "(operators/multimodal.py extract_features).",
-)
-def multimodal_features(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    media = M.documents_as_media(docs)
-    feats = M.extract_features(media, dim=16, fake=True)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("pos", "value")
-    ).select(
-        "media_id",
-        F.col("pos").cast("int").alias("pos"),
-        F.floor(F.col("value").cast("double") * 1000000.0)
-        .cast("long")
-        .alias("value_fp"),
-    )
 
 
 @q(
@@ -2185,57 +2094,6 @@ def tfidf_top_terms_q(spark, sf_dir):
     return X.tfidf_top_terms(docs, k=5)
 
 
-# Decontamination probe suite: two 10-word spans lifted verbatim from
-# the sf0.01 corpus (hits: the source docs + any near-dups sharing the
-# span) and one out-of-vocabulary span (must hit nothing). Literal on
-# both sides so Spark and the oracle see the identical benchmark.
-_CONTAM_PROBES = [
-    (1, "key agg row scan slow fast table value part hash"),
-    (2, "batch window spark order data column agg join small line"),
-    (3, "purple elephants orchestrate midnight quantum tango beyond saturn rings"),
-]
-
-
-@q(
-    "benchmark_contamination",
-    f"""
-    WITH probes(probe_id, probe_text) AS (VALUES
-        {", ".join(f"(CAST({i} AS BIGINT), '{t}')" for i, t in _CONTAM_PROBES)}
-    ),
-    dn AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
-    dw AS (SELECT doc_id, string_split(t, ' ') AS ws FROM dn),
-    dg AS (
-        SELECT DISTINCT doc_id, array_to_string(list_slice(ws, i, i + 7), ' ') AS g
-        FROM dw, UNNEST(generate_series(1, len(ws) - 7)) AS s(i)
-    ),
-    pn AS (SELECT probe_id,
-                  regexp_replace(lower(trim(probe_text)), '\\s+', ' ', 'g') AS t
-           FROM probes),
-    pw AS (SELECT probe_id, string_split(t, ' ') AS ws FROM pn),
-    pg AS (
-        SELECT DISTINCT probe_id, array_to_string(list_slice(ws, i, i + 7), ' ') AS g
-        FROM pw, UNNEST(generate_series(1, len(ws) - 7)) AS s(i)
-    )
-    SELECT doc_id, probe_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
-    FROM dg JOIN pg USING (g) GROUP BY doc_id, probe_id
-    """,
-    "Benchmark decontamination: documents sharing any word-8-gram "
-    "with a probe suite, via broadcast of the probe gram set — the "
-    "corpus side streams through a broadcast-hash join, never "
-    "shuffled (operators/contamination.py).",
-)
-def benchmark_contamination_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.contamination import (
-        flag_contaminated,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    probes = _local_rel(
-        spark, _CONTAM_PROBES, "probe_id long, probe_text string"
-    )
-    return flag_contaminated(docs, probes, n=8)
-
-
 # Domain mixture: heavy on src0, moderate src1-3, light everything else
 _MIX_FRACTIONS = {"src0": 0.9, "src1": 0.5, "src2": 0.5, "src3": 0.5}
 _MIX_DEFAULT = 0.1
@@ -2550,31 +2408,6 @@ def cdc_schema_drift_q(spark, sf_dir):
     )
     return schema_drift_report(
         wire, ["event_id", "user_id", "event_type", "value"]
-    )
-
-
-@q(
-    "kmeans_cluster_sizes",
-    None,  # trained centroids are float-iterative — not SQL-replayable;
-    # clustering QUALITY is pytest-asserted (tests/test_ivf.py recall,
-    # tests/test_llm_ops.py planted clusters)
-    "Corpus k-means clustering (the IVF coarse quantizer run as a "
-    "first-class operator): Lloyd iterations stay distributed, only "
-    "the k×dim centroid matrix reaches the driver; output is the "
-    "cluster-cardinality histogram (operators/ivf.py:train_quantizer).",
-)
-def kmeans_cluster_sizes_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators import ivf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = ivf.train_quantizer(emb, n_lists=8, iterations=3)
-    normed = emb.select(
-        F.col("vec_id"), ivf._normalize(F.col("embedding")).alias("_v")
-    )
-    assigned = ivf._assign_cells(normed, centroids, id_col="vec_id")
-    return (
-        assigned.groupBy(F.col("_cell").alias("cluster"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
     )
 
 
@@ -5887,44 +5720,6 @@ def lineitem_correlation_matrix_q(spark, sf_dir):
 
 
 @q(
-    "whitened_embedding_norms",
-    None,  # trained float transform (like IVF): no cross-engine oracle;
-    # decorrelation/orthonormality proofs live in tests/test_whitening.py
-    "PCA-whitening of the embedding corpus (operators/whitening.py): "
-    "one mapInPandas pass accumulates per-partition moments (count, "
-    "sum, dim^2 Gram — ONE ~33 KB row per partition, nothing "
-    "data-sized moves), eigendecomposition runs driver-side on the "
-    "dim x dim covariance (bounded like IVF centroids), and the "
-    "k x dim projection broadcasts back for an Arrow-vectorized "
-    "matmul per batch. Query emits per-vector whitened norms + "
-    "leading-component value (rows-only).",
-)
-def whitened_embedding_norms_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.whitening import (
-        apply_whitening,
-        fit_whitening,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    model = fit_whitening(emb, k=8)
-    out = apply_whitening(emb, model)
-    return out.select(
-        "vec_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.transform("whitened", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-            4,
-        ).alias("whitened_norm"),
-        F.round(F.col("whitened")[0], 4).alias("pc1"),
-    )
-
-
-@q(
     "events_value_outliers_robust",
     """
     WITH b AS (
@@ -6247,32 +6042,6 @@ def training_export_wide_q(spark, sf_dir):
             F.col("s_acctbal").alias("supp_acctbal"),
         )
     )
-
-
-@q(
-    "embedded_doc_neighbors",
-    None,  # md5 feature hashing isn't SQL-expressible; rows-only +
-    # determinism/similarity/composition proofs in tests/test_embed.py
-    "Text→vector→ANN composition: embed the corpus with the Arrow-"
-    "batched encoder plumbing (operators/embed.py — deterministic "
-    "feature hashing standing in for a real model, one encoder "
-    "instance per partition) and run exact cosine top-3 for the five "
-    "lowest doc_ids via brute_force_topk. The narrow embed map adds "
-    "no shuffle; queries broadcast; corpus never shuffles. Each "
-    "query's own document ranks first at cosine 1.0 by construction "
-    "— a built-in sanity invariant the rows-only check preserves.",
-)
-def embedded_doc_neighbors_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.embed import embed_documents
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = embed_documents(docs)
-    corpus = emb.withColumnRenamed("doc_id", "vec_id")
-    queries = emb.filter(F.col("doc_id") < 5).select(
-        F.col("doc_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    return V.brute_force_topk(corpus, queries, k=3)
 
 
 @q(
@@ -7933,39 +7702,6 @@ def diversified_sample_hits_q(spark, sf_dir):
     )
 
 
-def _nb_confusion_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.classify import (
-        nb_confusion_oracle_sql,
-    )
-
-    return nb_confusion_oracle_sql(label_col="lang")
-
-
-@q(
-    "nb_lang_confusion",
-    _nb_confusion_oracle(),
-    "Multinomial Naive-Bayes document classification (the CCNet/"
-    "fastText-style domain/quality-labeling pipeline stage reduced "
-    "to its aggregation core — training IS a groupBy, so unlike "
-    "iterative classifiers the whole train+classify pipeline "
-    "carries the cross-engine oracle): train on lang labels, "
-    "classify the corpus, emit the (label, predicted, n) confusion "
-    "matrix. Log-probs quantize to 6-dp longs at the (term, class) "
-    "grain; from there scoring is exact long arithmetic via the "
-    "alpha-floor algebra (sparse over observed (term, class) pairs "
-    "only). One tokenize pass; the corpus text never shuffles "
-    "(operators/classify.py:nb_classify).",
-)
-def nb_lang_confusion_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.classify import (
-        nb_confusion,
-    )
-
-    return nb_confusion(
-        load_table(spark, sf_dir, "documents"), label_col="lang"
-    )
-
-
 def _bigram_lp_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.text import (
         bigram_logprob_oracle_sql,
@@ -8697,59 +8433,6 @@ def has_parent_lineitems_q(spark, sf_dir):
     )
 
 
-@q(
-    "semdedup_groups",
-    None,  # k-means is iterative — rows-only by design (E25/E51
-    # precedent); planted-duplicate + transitivity property tests
-    # pin the semantics (tests/test_semdedup.py)
-    "SemDeDup (arXiv:2303.09540) — semantic dedup: k-means-cluster "
-    "the embedding space (distributed Lloyd, deterministic "
-    "hash-sample init), score cosine pairs ONLY within a cluster "
-    "(the cell-keyed exchange partitions pair work by cluster — "
-    "Σ|cell|² ≈ N²/k, the paper's scale knob), connect pairs ≥ τ "
-    "with min-label components, keep the min-id survivor per group. "
-    "Returns (vec_id, group, is_kept) for every corpus vector "
-    "(operators/semdedup.py:semdedup).",
-)
-def semdedup_groups_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.semdedup import semdedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return semdedup(emb, n_clusters=8, iterations=3, threshold=0.4)
-
-
-@q(
-    "ann_pq_topk",
-    None,  # PQ codebooks are k-means-trained — rows-only by design
-    # (E25/E51 precedent); ADC-exactness + recall property tests pin
-    # the semantics (tests/test_pq.py)
-    "Product-quantization ANN (Jégou et al. 2011; FAISS PQx) — the "
-    "memory-scale tier of the ANN ladder: 8 subspaces × 16-centroid "
-    "codebooks trained driver-side on a deterministic hash sample, "
-    "corpus encoded in one zero-shuffle Arrow argmin pass (16× "
-    "smaller than the float vectors), queries scored by asymmetric "
-    "distance: a per-query (m×k) table gather + row-sum per code — "
-    "no per-candidate float vector math "
-    "(operators/pq.py:train_pq/encode_pq/pq_topk).",
-)
-def ann_pq_topk_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.pq import (
-        encode_pq,
-        pq_topk,
-        train_pq,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    books = train_pq(emb, m=8, k=16, sample=2048, iterations=6)
-    codes = encode_pq(emb, books)
-    out = pq_topk(codes, books, queries_df, k=10)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
 def _bpe_segment_cte(ms) -> str:
     """Shared WITH-body computing the per-doc BPE token relation
     ``tok(doc_id, t)`` in SQL: each merge is one greedy left-to-right
@@ -9272,35 +8955,6 @@ def supplier_pagerank_q(spark, sf_dir):
 
 
 @q(
-    "semdedup_incremental_batch",
-    None,  # iterative k-means centroids — rows-only by design;
-    # planted corpus-dup / novel / batch-internal-dup property tests
-    # in tests/test_semdedup.py
-    "Incremental SemDeDup ingestion — the E100 contract on the "
-    "semantic tier: an arriving batch (vec_id < 50 here) dedups "
-    "against the existing corpus and itself WITHOUT re-pairing the "
-    "corpus; centroids reuse the corpus' trained (memoized) "
-    "quantizer, pair work is |batch| x touched-cell sizes, duplicate "
-    "target = min id among matches (consistent with the full "
-    "rebuild's survivor rule) "
-    "(operators/semdedup.py:semdedup_incremental).",
-)
-def semdedup_incremental_batch_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.ivf import (
-        train_quantizer,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.semdedup import (
-        semdedup_incremental,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 50)
-    batch = emb.filter(F.col("vec_id") < 50)
-    cents = train_quantizer(corpus, n_lists=8, iterations=3)
-    return semdedup_incremental(corpus, batch, cents, threshold=0.4)
-
-
-@q(
     "hybrid_search_normalized",
     f"""
     WITH lex AS (
@@ -9373,35 +9027,6 @@ def hybrid_search_normalized_q(spark, sf_dir):
         F.col("vec_id").alias("doc_id"), F.col("cosine").alias("score")
     )
     return normalized_hybrid_fuse([lex, dense], [0.7, 0.3], top_k=15)
-
-
-@q(
-    "late_interaction_topk",
-    None,  # the hashing token encoder has no SQL expression —
-    # rows-only (the E107 encoder-plumbing precedent); MaxSim values
-    # pinned against a numpy reference in
-    # tests/test_late_interaction.py
-    "ColBERT-style late-interaction retrieval (Khattab & Zaharia "
-    "2020): score = Σ_query-token max_doc-token inner product "
-    "(MaxSim) over per-token embedding matrices — term-level "
-    "alignment single-vector retrieval collapses away; the "
-    "representation ladder's multi-vector tier (E107 single vector "
-    "→ E209 PQ codes → token matrices). Corpus token matrices build "
-    "in one zero-shuffle Arrow pass; each batch scores as one "
-    "matmul per doc with batch-local top-k "
-    "(operators/embed.py:embed_tokens/late_interaction_topk).",
-)
-def late_interaction_topk_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.embed import (
-        embed_tokens,
-        late_interaction_topk,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    dv = embed_tokens(docs, dim=32, seed=7)
-    return late_interaction_topk(
-        dv, "spark shuffle merge", dim=32, seed=7, k=15
-    )
 
 
 _DSL_BODY = {
@@ -9947,102 +9572,6 @@ def percolate_sqs_alerts_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return percolate(docs, _SQS_STANDING)
-
-
-def _vector_index_for(spark, sf_dir, *, pq=False):
-    """Build-or-reuse the persisted vector index for a fixture dir
-    (name encodes the dir, the _token_index_for precedent)."""
-    import re as _re
-
-    from aws_dms_cdc_data_pipeline_spark.operators.vector_index import (
-        ensure_vector_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    name = _re.sub(r"[^a-zA-Z0-9]+", "_", sf_dir.strip("/")).lower()
-    kw = dict(n_lists=16, iterations=3)
-    if pq:
-        kw.update(pq_m=8, pq_k=16, pq_sample=2048, pq_iterations=8)
-    return ensure_vector_index(spark, emb, name, **kw)
-
-
-@q(
-    "ann_ivf_indexed_topk",
-    # FULL-PROBE exact gate (r15 ask #7): with n_probe = n_lists the
-    # served result is provably the exact top-k — the oracle below is
-    # the brute-force cosine ranking, so the gate proves the persisted
-    # cells table holds every vector exactly once and the
-    # gather+score+rank machinery is cross-engine exact. The PRUNED
-    # serving shape (n_probe=4) keeps its bit-parity suite
-    # (tests/test_vector_index.py) and plan-asserted partition pruning.
-    """
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-               FROM embeddings WHERE vec_id < 8),
-    scored AS (
-        SELECT q.query_id, e.vec_id,
-               round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6)
-                   AS cosine
-        FROM embeddings e CROSS JOIN q
-    )
-    SELECT query_id, vec_id, cosine, CAST(rank AS BIGINT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cosine DESC, vec_id) AS rank
-          FROM scored)
-    WHERE rank <= 10
-    """,
-    "IVF top-10 served FROM the persisted vector index "
-    "(vecidx_* catalog tables): centroids + cell-assigned corpus "
-    "materialize once (ensure_vector_index — the token-index "
-    "lifecycle for ANN), then every query statically prunes the "
-    "cell-PARTITIONED table to its n_probe cells with no training "
-    "and no corpus assignment pass. Gated at FULL probe (n_probe = "
-    "n_lists), where the served result provably equals the exact "
-    "brute-force ranking — the oracle certifies the index holds "
-    "every vector exactly once and the gather+score+rank path is "
-    "cross-engine exact; the pruned n_probe=4 serving shape is "
-    "bit-parity-tested and plan-asserted in "
-    "tests/test_vector_index.py "
-    "(operators/vector_index.py:ivf_topk_indexed).",
-)
-def ann_ivf_indexed_topk_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.vector_index import (
-        ivf_topk_indexed,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    tables = _vector_index_for(spark, sf_dir)
-    out = ivf_topk_indexed(spark, tables, queries_df, k=10, n_probe=16)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@q(
-    "ann_pq_indexed_topk",
-    None,  # iterative PQ codebooks are engine-internal (E209)
-    "PQ/ADC top-10 served FROM the persisted vector index: "
-    "codebooks + 16x-compressed corpus codes materialize once and "
-    "a fresh session scores queries with one table-gather + row-sum "
-    "pass over the codes table — float vectors never re-read, no "
-    "re-encoding. Bit-identical to pq_topk on the same artifacts "
-    "(tests/test_vector_index.py). Rows-only "
-    "(operators/vector_index.py:pq_topk_indexed).",
-)
-def ann_pq_indexed_topk_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.vector_index import (
-        pq_topk_indexed,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    tables = _vector_index_for(spark, sf_dir, pq=True)
-    out = pq_topk_indexed(spark, tables, queries_df, k=10)
-    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 def _dsl_bool_filter_oracle() -> str:
@@ -11391,7 +10920,6 @@ _R17_WINDOW = [
     "grouped_quantiles_qty",
     "heavy_hitter_event_types",
     "interval_coverage_user",
-    "kmeans_cluster_sizes",
     "lineitem_contract_checks",
     "lineitem_correlation_matrix",
     "match_phrase_prefix_docs",
@@ -11411,13 +10939,15 @@ _R17_WINDOW = [
     "unpivot_lineitem_metrics",
     "upsample_code_math_mixture",
     "user_last_value_features",
-    "whitened_embedding_norms",
     "wildcard_search_docs",
     # oldest r12 band, alphabetical - 8 of 41; the remaining 33 r12
     # rows queue for r18
     "agg_cube_status_priority",
     "bm25_keyword_search_indexed",
     "chunked_documents",
+    # CDC core entries, definition order
+    "cdc_current_state",
+    "cdc_event_time_range",
 ]
 
 assert len(_R17_WINDOW) == 50, f"window must fill exactly 50 slots, got {len(_R17_WINDOW)}"

@@ -1,7 +1,1 @@
 """Sinks: upsertable current-state store, raw archive, DLQ."""
-
-from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore  # noqa: F401
-from aws_dms_cdc_data_pipeline_spark.sinks.bucketed import (  # noqa: F401
-    ensure_fact_buckets,
-    write_bucketed,
-)

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark import schema as S
-from aws_dms_cdc_data_pipeline_spark.operators.upsert import current_state
+from aws_dms_cdc_data_pipeline_spark.operators.upsert import ranked
 
 
 class StateStore:
@@ -192,15 +192,15 @@ class StateStore:
             )
             merged_src = old.unionByName(merged_src)
         # keep tombstones so a late pre-delete change can't resurrect the row
-        ranked = _ranked(merged_src, self.key)
+        by_key = ranked(merged_src, self.key)
         if changes is not None:
             # a stored row that ranks below 1 lost to a batch row (the
             # store holds one row per key); batch rows below 1 never
             # reached the store
             first, new = F.col("_rn") == 1, F.col("_new")
             sign = F.when(first & new, 1).when(~first & ~new, -1).otherwise(0)
-            ranked = changes._observe(ranked, sign)
-        latest = ranked.filter(F.col("_rn") == 1).drop("_rn", "_new")
+            by_key = changes._observe(by_key, sign)
+        latest = by_key.filter(F.col("_rn") == 1).drop("_rn", "_new")
         return self._swap_buckets(latest, touched, manifest, new_gen)
 
     def _swap_buckets(
@@ -312,32 +312,15 @@ class StateStore:
         return new_gen
 
 
-def _versions_below(bucket_root: str, keep_floor: int) -> list[int]:
+def _versions_below(version_root: str, floor: int) -> list[int]:
+    """The ``v=<N>`` versions on disk under ``version_root`` with
+    ``N < floor``, ascending (none when the directory is missing)."""
     try:
-        entries = os.listdir(bucket_root)
+        entries = os.listdir(version_root)
     except FileNotFoundError:
         return []
-    out = []
-    for e in entries:
-        if e.startswith("v="):
-            v = int(e.removeprefix("v="))
-            if v < keep_floor:
-                out.append(v)
-    return out
-
-
-def _ranked(envelopes: DataFrame, key: str) -> DataFrame:
-    """Every envelope with ``_rn``, its rank within its key (1 = the
-    latest: event time, then transaction id, then doc id)."""
-    from pyspark.sql import Window
-
-    order = [
-        F.col("metadata.timestamp").desc(),
-        F.col(S.meta("transaction-id")).desc(),
-        F.col("doc_id").desc(),
-    ]
-    w = Window.partitionBy(F.col(key)).orderBy(*order)
-    return envelopes.withColumn("_rn", F.row_number().over(w))
+    versions = (int(e.removeprefix("v=")) for e in entries if e.startswith("v="))
+    return sorted(v for v in versions if v < floor)
 
 
 class ChangeCapture:
@@ -376,7 +359,7 @@ class ChangeCapture:
         return [] if self._obs is None else self._obs.get["rows"]
 
 
-__all__ = ["StateStore", "ChangeCapture", "current_state", "changes_in_generation", "reshard", "fsck"]
+__all__ = ["StateStore", "ChangeCapture", "changes_in_generation", "reshard", "fsck"]
 
 
 def changes_in_generation(store: StateStore) -> DataFrame | None:
@@ -417,13 +400,9 @@ def changes_in_generation(store: StateStore) -> DataFrame | None:
     new_dirs, old_dirs = [], []
     for b in touched:
         new_dirs.append(store._bdir(b, gen))
-        prev = [
-            int(e.removeprefix("v="))
-            for e in os.listdir(os.path.join(store.path, f"b={b}"))
-            if e.startswith("v=") and int(e.removeprefix("v=")) < gen
-        ]
+        prev = _versions_below(os.path.join(store.path, f"b={b}"), gen)
         if prev:
-            old_dirs.append(store._bdir(b, max(prev)))
+            old_dirs.append(store._bdir(b, prev[-1]))
     return snapshot_diff(_live(old_dirs), _live(new_dirs), keys=key_leaf)
 
 
@@ -508,14 +487,16 @@ def fsck(store: StateStore, *, clean: bool = False) -> dict:
             continue
         b_str = entry.removeprefix("b=")
         current = manifest["buckets"].get(b_str)
+        below = _versions_below(full, current) if current is not None else []
+        previous = below[-1] if below else None
         for vdir in sorted(os.listdir(full)):
             if not vdir.startswith("v="):
                 continue
             v = int(vdir.removeprefix("v="))
             rel = f"{entry}/{vdir}"
-            if current is not None and v == current:
+            if v == current:
                 live.append(rel)
-            elif current is not None and v == _prev_version(full, current):
+            elif v == previous:
                 retained.append(rel)
             else:
                 orphans.append(rel)
@@ -533,16 +514,6 @@ def fsck(store: StateStore, *, clean: bool = False) -> dict:
     }
 
 
-def _prev_version(bucket_root: str, current: int) -> int | None:
-    versions = sorted(
-        int(e.removeprefix("v="))
-        for e in os.listdir(bucket_root)
-        if e.startswith("v=")
-    )
-    below = [v for v in versions if v < current]
-    return below[-1] if below else None
-
-
 def snapshot_store(store: StateStore, dest: str) -> dict:
     """Point-in-time snapshot of a live store — the OpenSearch
     snapshot API parity (the reference's terminal store relies on
@@ -558,8 +529,6 @@ def snapshot_store(store: StateStore, dest: str) -> dict:
     Returns {"generation", "buckets", "files"} — the snapshot
     inventory. Restore with :func:`restore_store`.
     """
-    import shutil
-
     if os.path.exists(os.path.join(dest, "_MANIFEST")):
         raise ValueError(f"snapshot target {dest!r} already has a store")
     manifest = store._manifest()
@@ -594,8 +563,6 @@ def restore_store(
     so restore is a copy + StateStore handle; post-restore ``fsck``
     must come back clean (asserted in tests).
     """
-    import shutil
-
     if not os.path.exists(os.path.join(snapshot_path, "_MANIFEST")):
         raise ValueError(f"{snapshot_path!r} is not a snapshot")
     if os.path.exists(os.path.join(dest, "_MANIFEST")):

@@ -1,13 +1,1 @@
 """Sources: batch fixture readers and the CDC envelope stream."""
-
-from aws_dms_cdc_data_pipeline_spark.sources.envelope_stream import (  # noqa: F401
-    parse_envelope_lines,
-    read_envelope_batch,
-    read_envelope_kafka,
-    read_envelope_kinesis,
-    read_envelope_stream,
-)
-from aws_dms_cdc_data_pipeline_spark.sources.full_load import (  # noqa: F401
-    full_load_jdbc,
-    full_load_snapshot,
-)

@@ -4,20 +4,3 @@ from aws_dms_cdc_data_pipeline_spark.streaming.pipeline import (  # noqa: F401
     CdcStreamConfig,
     start_cdc_stream,
 )
-from aws_dms_cdc_data_pipeline_spark.streaming.metrics import (  # noqa: F401
-    JsonlMetricsListener,
-    attach_metrics_listener,
-)
-from aws_dms_cdc_data_pipeline_spark.streaming.matview import (  # noqa: F401
-    IncrementalAggView,
-)
-from aws_dms_cdc_data_pipeline_spark.streaming.sketches import (  # noqa: F401
-    streaming_distinct_sketches,
-)
-from aws_dms_cdc_data_pipeline_spark.streaming.monitor import (  # noqa: F401
-    monitor_arrival_order,
-)
-from aws_dms_cdc_data_pipeline_spark.streaming.changepoint import (  # noqa: F401
-    ChangePointConfig,
-    start_change_point_monitor,
-)

@@ -106,11 +106,9 @@ HEADLINE = (
     "docs_string_stats",
     "events_t_test",
     "diversified_sample_hits",
-    # r13 late additions with corpus-scale cost shapes: the bigram-LM
-    # quality filter (token-pair model over the whole corpus) and the
-    # NB classifier (train+classify, two corpus-token aggregations)
+    # r13 late addition with a corpus-scale cost shape: the bigram-LM
+    # quality filter (token-pair model over the whole corpus)
     "bigram_logprob_scores",
-    "nb_lang_confusion",
     # r14 additions: the published curation filters (Gopher / DSIR /
     # CCNet — one corpus-token pass each) and the OpenSearch ML-agg
     # family (change_point / rate / KS / bucket_correlation — daily
@@ -128,35 +126,28 @@ HEADLINE = (
     # (simple_query_string / dis_max — one tokenize with in-row
     # phrase counting), the exact market-basket agg (in-row pair
     # expansion over the corpus), the parent/child fact-fact join,
-    # the CMS sketch build (one ×depth explode over events), and the
-    # two iterative trainers with corpus-scale passes (SemDeDup
-    # cluster+pair, PQ encode+ADC). The bounded scoring queries
-    # (rank_feature/pinned/distance/decay/percentiles_bucket) are
-    # wall-noise and stay out; bpe_encoded_docs and semdedup_groups
-    # stay out (sequential merge-learning / label-propagation job
-    # chains measure the scheduler floor, not the operators — their
-    # per-pass costs are covered by the pair/ANN entries).
+    # the CMS sketch build (one ×depth explode over events). The
+    # bounded scoring queries (rank_feature/pinned/distance/decay/
+    # percentiles_bucket) are wall-noise and stay out; bpe_encoded_docs
+    # stays out (a sequential merge-learning job chain measures the
+    # scheduler floor, not the operator).
     "simple_query_string_docs",
     "dis_max_docs",
     "frequent_token_sets",
     "has_child_orders",
     "weekly_event_counts_from_cms",
-    "ann_pq_topk",
     # r15: the switch-over execution paths with corpus-scale cost
     # shapes — sqs percolation (one positional corpus pass), the
-    # recursive nested-bool tree (one tokenize pass), the two hybrid
-    # page shapes (tokenize + full vector scan), and the persisted
-    # vector-index serving paths (partition-pruned IVF probe, PQ/ADC
-    # codes scan). The bounded DSL routing queries (terms_set / knn /
-    # meta-filter pages over indexed or pre-cut relations) are
-    # wall-noise and stay out — dsl_nested_bool_search covers the
-    # clause-executor family's corpus cost.
+    # recursive nested-bool tree (one tokenize pass) and the two
+    # hybrid page shapes (tokenize + full vector scan). The bounded
+    # DSL routing queries (terms_set / knn / meta-filter pages over
+    # indexed or pre-cut relations) are wall-noise and stay out —
+    # dsl_nested_bool_search covers the clause-executor family's
+    # corpus cost.
     "percolate_sqs_alerts",
     "dsl_nested_bool_search",
     "search_request_hybrid_sum",
     "search_request_retriever_rrf",
-    "ann_ivf_indexed_topk",
-    "ann_pq_indexed_topk",
     # r17: the Discover query bar (one tokenize pass; the expansions
     # variant adds the distinct-vocabulary job) and the bucketed-fact
     # star serving paths (the ad-hoc stars above stay benched so the

@@ -1,5 +1,5 @@
 """Planted-fixture tests for the LLM-data-pipeline operators
-(dedup / similarity / text / multimodal).
+(dedup / similarity / text).
 """
 
 import math
@@ -9,7 +9,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark.operators import dedup as D
-from aws_dms_cdc_data_pipeline_spark.operators import multimodal as M
 from aws_dms_cdc_data_pipeline_spark.operators import similarity as V
 from aws_dms_cdc_data_pipeline_spark.operators import text as X
 
@@ -316,31 +315,8 @@ def test_exact_cosine_pairs_enforces_corpus_bound(spark):
 
 
 # ---------------------------------------------------------------------------
-# multimodal plumbing
+# repetition scores
 # ---------------------------------------------------------------------------
-
-def test_fake_media_features_deterministic(spark):
-    df = _docs(spark, [(1, "abc"), (2, "some longer payload here")])
-    media = M.documents_as_media(df)
-    out = {r.media_id: r for r in
-           M.extract_features(media, dim=4, fake=True).collect()}
-    assert out[1].byte_len == 3
-    assert out[1].width == 4 and out[1].height == 4      # (3 % 640)+1
-    # feature fold: bytes of "abc" = 97,98,99 into 4 buckets
-    assert out[1].features == pytest.approx(
-        [97 / 255, 98 / 255, 99 / 255, 0.0], abs=1e-6
-    )
-    again = {r.media_id: r.features for r in
-             M.extract_features(media, dim=4, fake=True).collect()}
-    assert again[2] == out[2].features
-
-
-def test_real_decode_is_explicit_stub(spark):
-    df = _docs(spark, [(1, "x")])
-    media = M.documents_as_media(df)
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        M.extract_features(media, fake=False).collect()
-
 
 def test_repetition_scores_planted(spark):
     from aws_dms_cdc_data_pipeline_spark.operators.text import (

@@ -107,9 +107,11 @@ def test_heavy_text_passes_fan_out_on_poorly_split_sources(spark, tmp_path):
     """The r7 straggler class: per-row-heavy text passes inheriting a
     single-task scan from a single-row-group source. Each heavy
     operator's plan must contain the fan-out's ROUNDROBIN exchange
-    when fed a 1-partition source big enough to matter (>=128 KB per
-    partition, the heavy-pass bar) — if the guard's threshold or
-    wiring regresses, this fails before a 30x serial stage ships."""
+    when fed a 1-partition source big enough to matter (the source
+    estimates at ~1.3 MB, over both the 128 KB-per-partition bar the
+    shingling passes use and the default 1 MB bar of the tokenizing
+    passes) — if the guard's threshold or wiring regresses, this fails
+    before a 30x serial stage ships."""
     from pyspark.sql import functions as F
 
     # ~1 MB of INCOMPRESSIBLE text in ONE partition (hash-derived
@@ -124,31 +126,39 @@ def test_heavy_text_passes_fan_out_on_poorly_split_sources(spark, tmp_path):
     docs = spark.read.parquet(src)
     assert docs.rdd.getNumPartitions() == 1
 
-    from aws_dms_cdc_data_pipeline_spark.operators.contamination import (
-        flag_contaminated,
-    )
     from aws_dms_cdc_data_pipeline_spark.operators.dedup import (
         duplicated_spans,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
         simhash_pairs,
     )
-
-    probes = spark.createDataFrame(
-        [(1, "lorem ipsum dolor sit amet consectetur lorem ipsum")],
-        "probe_id long, probe_text string",
+    from aws_dms_cdc_data_pipeline_spark.operators.lucene import (
+        query_string_search,
     )
+    from aws_dms_cdc_data_pipeline_spark.operators.querystring import (
+        simple_query_string,
+    )
+    from aws_dms_cdc_data_pipeline_spark.operators.search import (
+        bm25_search,
+        tokenize,
+        tokenize_positions,
+    )
+
     cases = {
-        "contamination": flag_contaminated(docs, probes, n=8),
         "simhash": simhash_pairs(docs),
         "duplicated_spans": duplicated_spans(docs),
         "ngram_jaccard": ngram_jaccard_pairs(docs),
         "minhash": minhash_lsh_pairs(docs),
+        "tokenize": tokenize(docs, "text", "doc_id"),
+        "bm25": bm25_search(docs, ["abc", "def"]),
+        "positions": tokenize_positions(docs, "text", "doc_id"),
+        "query_string": query_string_search(docs, "abc OR def"),
+        "simple_query_string": simple_query_string(docs, "abc def"),
     }
     for name, df in cases.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ROUND_ROBIN" in plan.upper() or "RoundRobin" in plan, (
-            f"{name}: no fan-out exchange on a 1-partition 400 KB source"
+            f"{name}: no fan-out exchange on a 1-partition ~1.3 MB source"
         )
 
 

@@ -1113,7 +1113,7 @@ def test_multi_match_wide_equals_union_fallback(spark, monkeypatch):
         assert wide == union, (terms, mode, tb)
 
 
-def test_multi_match_oracle_parity(spark):
+def test_multi_match_oracle_parity(spark, sf_dir):
     """Spark and the DuckDB oracle agree bit-exactly on a derived
     second field across modes and tie-breakers."""
     import duckdb
@@ -1124,7 +1124,7 @@ def test_multi_match_oracle_parity(spark):
     )
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d2 = docs.withColumn(
         "title", F.concat_ws(" ", F.col("source"), F.col("lang"))
     )
@@ -1467,7 +1467,7 @@ def test_termvectors_endpoint(spark):
         termvectors(docs, [])
 
 
-def test_termvectors_registry_projection_is_canonically_sortable(spark):
+def test_termvectors_registry_projection_is_canonically_sortable(spark, oracle_sf_dir):
     """The REGISTERED termvectors query serializes positions as a
     comma-joined string (r18): the driver's pandas canonicalizer
     sorts every column with sort_values, which raises `unhashable
@@ -1476,7 +1476,7 @@ def test_termvectors_registry_projection_is_canonically_sortable(spark):
     only the compared projection is string-shaped."""
     from aws_dms_cdc_data_pipeline_spark.plans.queries import REGISTRY
 
-    df = REGISTRY["termvectors_docs"].fn(spark, "/root/testdata/sf0.01")
+    df = REGISTRY["termvectors_docs"].fn(spark, oracle_sf_dir)
     schema = dict(df.dtypes)
     assert schema["positions"] == "string"
     pdf = df.toPandas()

@@ -1,8 +1,7 @@
-"""Salted skew mitigation equals unsalted results; frame sampling fans out."""
+"""Salted skew mitigation equals unsalted results."""
 
 from pyspark.sql import functions as F
 
-from aws_dms_cdc_data_pipeline_spark.operators import multimodal as M
 from aws_dms_cdc_data_pipeline_spark.operators.skew import salted_join, salted_sum
 from aws_dms_cdc_data_pipeline_spark.session import load_table
 
@@ -57,23 +56,6 @@ def test_salted_sum_matches_direct_sum(spark):
         .count()
     )
     assert n_buckets > 1
-
-
-def test_sample_frames_fan_out(spark):
-    docs = spark.createDataFrame(
-        [(1, "x" * 300), (2, "short")], ["doc_id", "text"]
-    )
-    media = M.documents_as_media(docs)
-    frames = M.sample_frames(media, frame_bytes=64, stride=2, dim=4, fake=True)
-    rows = frames.collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r.media_id, []).append(r)
-    # 300 bytes → 4 full frames → indices 0, 2 (stride 2); 5 bytes → 1 frame
-    assert sorted(r.frame_idx for r in by_id[1]) == [0, 2]
-    assert [r.frame_idx for r in by_id[2]] == [0]
-    f0 = next(r for r in by_id[1] if r.frame_idx == 0)
-    assert len(bytes(f0.frame)) == 64 and len(f0.frame_features) == 4
 
 
 def test_skew_report_to_salted_join_roundtrip(spark):
