@@ -5,8 +5,7 @@ when relations matter more than counts (supplier co-supply networks,
 domain link graphs for web-corpus quality, user interaction graphs):
 PageRank (Page et al. 1999) as the canonical representative of the
 iterative message-passing class, complementing the engine's other
-iterative operators (min-label propagation in components.py, greedy
-BPE in bpe.py).
+iterative operator (min-label propagation in components.py).
 
 Spark shape per iteration: ONE shuffle — contributions = edges ⋈
 ranks keyed on the source, summed per destination (map-side

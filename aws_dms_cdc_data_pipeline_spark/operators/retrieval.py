@@ -2743,8 +2743,7 @@ def _quantile_at_ranks(dist: DataFrame, ranks) -> tuple:
     None}, total_count) — None only when the rank exceeds the total.
 
     Scale shape — the global cumulative count WITHOUT any
-    single-partition window (the E91 prefix pattern,
-    operators/packing.py:pack_fixed_blocks): range-partition the
+    single-partition window (the E91 prefix pattern): range-partition the
     distribution by qv, cumsum within each partition via an
     order-preserving Arrow pass, then collect the ≤P one-row
     per-partition totals and turn them into driver-side offsets.
@@ -3704,15 +3703,6 @@ def change_point_agg(
         .groupBy("day")
         .agg(F.sum("_vq").cast("long").alias("_m"))
     )
-    return change_point_over_buckets(buckets)
-
-
-def change_point_over_buckets(buckets: DataFrame) -> DataFrame:
-    """The argmax split over a prepared (day, _m) quantized bucket
-    series — shared by :func:`change_point_agg` and the streaming
-    monitor (streaming/changepoint.py), which maintains the buckets
-    incrementally and re-runs only this bounded pass per trigger."""
-    from pyspark.sql import Window
 
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.orderBy("day").rowsBetween(

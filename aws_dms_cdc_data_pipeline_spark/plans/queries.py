@@ -1968,34 +1968,6 @@ def near_dedup_canonical_q(spark, sf_dir):
     ).select("doc_id", "n_members")
 
 
-@q(
-    "chunk_documents",
-    r"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        FROM documents WHERE length(trim(text)) > 0
-    ),
-    st AS (
-        SELECT doc_id, ws, len(ws) AS n, i
-        FROM toks, UNNEST(generate_series(1, greatest(len(ws) - 8, 1), 56)) AS s(i)
-    )
-    SELECT doc_id, CAST((i - 1) / 56 AS BIGINT) AS chunk_id,
-           array_to_string(list_slice(ws, i, i + 63), ' ') AS chunk_text,
-           CAST(least(64, n - i + 1) AS BIGINT) AS n_tokens
-    FROM st
-    """,
-    "Token-window chunking (64-token chunks, 8-token overlap): the "
-    "corpus→tokenizer step of a training pipeline, as a pure JVM "
-    "generator explode with reconstructible (doc, offset) lineage — "
-    "no shuffle, no UDF (operators/chunking.py).",
-)
-def chunk_documents_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.chunking import chunk_documents
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, chunk_tokens=64, overlap_tokens=8)
-
-
 def _redact_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.text import PII_PATTERNS
 
@@ -2669,28 +2641,6 @@ def cdc_state_as_of_q(spark, sf_dir):
         F.col("event_id").alias("last_event_id"),
         F.col("ts").alias("last_ts"),
         F.col("value").alias("last_value"),
-    )
-
-
-@q(
-    "pack_training_sequences",
-    None,  # FFD packing is sequential state — not relational algebra;
-    # driver records rows-only (row count = #chunks, deterministic),
-    # invariants are pytest-enforced (tests/test_packing.py)
-    "Sequence packing for pretraining: chunks → fixed-256-token "
-    "sequences via first-fit-decreasing per xxhash shard "
-    "(Arrow-batched applyInPandas; operators/packing.py).",
-)
-def pack_training_sequences_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.chunking import chunk_documents
-    from aws_dms_cdc_data_pipeline_spark.operators.packing import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    chunks = chunk_documents(docs, chunk_tokens=64, overlap_tokens=8).select(
-        "doc_id", "chunk_id", "n_tokens"
-    )
-    return pack_sequences(
-        chunks, max_tokens=256, num_shards=8
     )
 
 
@@ -5443,61 +5393,6 @@ def boilerplate_line_removal_q(spark, sf_dir):
 
 
 @q(
-    "pack_fixed_token_blocks",
-    r"""
-    WITH t AS (
-      SELECT doc_id,
-             CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END
-                  AS BIGINT) AS n_tokens
-      FROM documents
-    ),
-    s AS (
-      SELECT doc_id, n_tokens,
-             COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS gstart
-      FROM t WHERE n_tokens > 0
-    ),
-    e AS (
-      SELECT doc_id, gstart, n_tokens, b.b AS block_id
-      FROM s, UNNEST(generate_series(CAST(gstart // 256 AS BIGINT),
-                                     CAST((gstart + n_tokens - 1) // 256
-                                          AS BIGINT))) b(b)
-    )
-    SELECT doc_id,
-           CAST(block_id AS BIGINT) AS block_id,
-           CAST(GREATEST(gstart, block_id * 256) - gstart AS BIGINT)
-               AS doc_tok_start,
-           CAST(LEAST(gstart + n_tokens, (block_id + 1) * 256) - gstart
-               AS BIGINT) AS doc_tok_end,
-           CAST(GREATEST(gstart, block_id * 256) - block_id * 256 AS BIGINT)
-               AS block_offset
-    FROM e
-    """,
-    "GPT-style concat-and-chunk packing (operators/packing.py:"
-    "pack_fixed_blocks, the zero-waste complement of FFD "
-    "pack_sequences): token streams concatenate in doc_id order and "
-    "cut into fixed 256-token blocks, documents splitting across "
-    "boundaries. The global exclusive prefix sum runs WITHOUT a "
-    "single-partition window: range-partition by id, per-partition "
-    "cumsum keyed on the partition id, per-partition totals (<= P "
-    "rows) prefix-summed and broadcast back. Pure integer arithmetic "
-    "-> bit-exact oracle.",
-)
-def pack_fixed_token_blocks_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.packing import (
-        pack_fixed_blocks,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    items = X.with_token_counts(docs).select(
-        "doc_id", F.col("ws_tokens").alias("n_tokens")
-    )
-    return pack_fixed_blocks(items, block_tokens=256)
-
-
-@q(
     "heavy_hitter_event_types",
     """
     WITH base AS (SELECT event_type FROM events WHERE event_type IS NOT NULL),
@@ -5769,163 +5664,6 @@ def events_value_outliers_robust_q(spark, sf_dir):
         ev, "event_type", "value",
         keep_cols=["event_type", "event_id", "value"],
     )
-
-
-@q(
-    "bpe_merge_candidates",
-    r"""
-    WITH w AS (
-        SELECT unnest(regexp_split_to_array(text, '\s+')) AS word
-        FROM documents
-    ),
-    wc AS (
-        SELECT word, COUNT(*) AS weight
-        FROM w WHERE LENGTH(word) >= 2 GROUP BY word
-    ),
-    pos AS (
-        SELECT word, weight,
-               unnest(generate_series(1, LENGTH(word) - 1)) AS i
-        FROM wc
-    )
-    SELECT substring(word, i, 1) AS left_sym,
-           substring(word, i + 1, 1) AS right_sym,
-           CAST(SUM(weight) AS BIGINT) AS pair_weight
-    FROM pos GROUP BY 1, 2
-    ORDER BY pair_weight DESC, left_sym, right_sym LIMIT 20
-    """,
-    "First BPE iteration: weighted adjacent-symbol-pair counts over "
-    "the word-frequency table (operators/bpe.py:pair_counts). The "
-    "scalable BPE formulation: the corpus collapses to (word, weight) "
-    "in one map-side-combined pass, pair extraction is a JVM "
-    "transform over an index sequence — pair cardinality is bounded "
-    "by alphabet², not corpus size. Top-20 with full deterministic "
-    "tie-break (weight DESC, then pair lexicographic).",
-)
-def bpe_merge_candidates_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.bpe import (
-        pair_counts,
-        word_symbol_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        pair_counts(word_symbol_table(docs))
-        .select(
-            F.col("left").alias("left_sym"),
-            F.col("right").alias("right_sym"),
-            "pair_weight",
-        )
-        .orderBy(F.desc("pair_weight"), "left_sym", "right_sym")
-        .limit(20)
-    )
-
-
-_BPE_REF_CACHE: dict = {}
-
-
-def _ref_bpe_merges(n_merges: int):
-    """Pure-Python reference BPE learner (the Sennrich et al. 2016
-    greedy formulation — the same reference tests/test_bpe.py pins
-    the engine against) run over the fixture documents at
-    REGISTRY-BUILD time: an INDEPENDENT implementation on an
-    independent read path (duckdb parquet scan + Python loop), so the
-    pinned merge table is a true cross-implementation oracle, not an
-    echo of the engine. Fully deterministic: integer pair weights,
-    (-weight, (left, right)) lexicographic argmax — no floats
-    anywhere. Returns [] when the fixture is absent (oracle degrades
-    to rows-only). Runs LAZILY: the @q sites pass the builder
-    functions themselves (QueryDef.oracle_spec), so the duckdb scan
-    happens on first ``QueryDef.oracle`` access — binding to the
-    SPARK_GRAFT_SF_DIR in effect at VERIFY time, never at import —
-    and results are cached per (path, n_merges) (r16 ADVICE)."""
-    import os
-    import re as _re
-
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
-        "documents.parquet",
-    )
-    if not os.path.exists(path):
-        return []
-    cached = _BPE_REF_CACHE.get((path, n_merges))
-    if cached is not None:
-        return cached
-    import duckdb
-
-    rows = duckdb.sql(
-        f"SELECT text FROM read_parquet('{path}')"
-    ).fetchall()
-    counts: dict[str, int] = {}
-    for (text,) in rows:
-        # java \s+ split + len >= 2, the word_symbol_table contract
-        for w in _re.split(r"\s+", text or ""):
-            if len(w) >= 2:
-                counts[w] = counts.get(w, 0) + 1
-    vocab = {w: list(w) for w in counts}
-    merges = []
-    for rank in range(n_merges):
-        pc: dict[tuple[str, str], int] = {}
-        for w, syms in vocab.items():
-            wt = counts[w]
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] = pc.get((a, b), 0) + wt
-        if not pc:
-            break
-        (a, b), wt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((rank, a, b, a + b, wt))
-        for w, syms in vocab.items():
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            vocab[w] = out
-    _BPE_REF_CACHE[(path, n_merges)] = merges
-    return merges
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
-def _bpe_merges_oracle():
-    ms = _ref_bpe_merges(12)
-    if not ms:
-        return None
-    rows = ",\n        ".join(
-        f"({r}, {_sql_str(a)}, {_sql_str(b)}, {_sql_str(m)}, {w})"
-        for r, a, b, m, w in ms
-    )
-    return f"""
-    SELECT CAST(rank AS BIGINT) AS rank, "left", "right", merged,
-           CAST(weight AS BIGINT) AS weight
-    FROM (VALUES {rows})
-        AS t(rank, "left", "right", merged, weight)
-    ORDER BY rank
-    """
-
-
-@q(
-    "bpe_learned_merges",
-    _bpe_merges_oracle,  # LAZY fixture-derived INDEPENDENT reference pin
-    # (pure-Python Sennrich learner at registry-build time) — the
-    # iterative argmax loop itself is not SQL-expressible, but its
-    # output on the gated fixture is bit-deterministic (integer
-    # weights, lexicographic ties), so the oracle pins it
-    "Full greedy BPE merge learning (operators/bpe.py:"
-    "learn_bpe_merges): 12 iterations of distributed pair-count → "
-    "argmax (ONE collected row per iteration) → pure-JVM aggregate "
-    "fold rewriting the symbol arrays, localCheckpoint every 4 "
-    "iterations to keep lineage flat. Deterministic merge sequence "
-    "(ties break lexicographic); matches the pure-Python reference "
-    "BPE bit-for-bit in tests/test_bpe.py.",
-)
-def bpe_learned_merges_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.bpe import learn_bpe_merges
-
-    docs = load_table(spark, sf_dir, "documents")
-    return learn_bpe_merges(docs, 12)
 
 
 @q(
@@ -7132,35 +6870,6 @@ def function_score_docs_q(spark, sf_dir):
         boost_mode="multiply",
         top_k=25,
     )
-
-
-def _chunk_documents_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.packing import (
-        chunk_documents_oracle_sql,
-    )
-
-    return chunk_documents_oracle_sql(size=64, stride=48)
-
-
-@q(
-    "chunked_documents",
-    _chunk_documents_oracle(),
-    "Sliding-window token chunking — the RAG / long-context training "
-    "shape: overlapping 64-token windows every 48 tokens (16-token "
-    "overlap), chunk i at i*stride, count 1+ceil((n-size)/stride) so "
-    "coverage stops without redundant tails; the engine's standard "
-    "tokenizer, so boundaries agree with token counts and packing. "
-    "NO shuffle anywhere: tokenize, sequence-explode, slice+concat "
-    "projection — all codegen'd; pure integer boundary arithmetic is "
-    "bit-exact cross-engine (operators/packing.py:chunk_documents).",
-)
-def chunked_documents_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.packing import (
-        chunk_documents,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, size=64, stride=48)
 
 
 def _span_first_oracle() -> str:
@@ -8433,95 +8142,6 @@ def has_parent_lineitems_q(spark, sf_dir):
     )
 
 
-def _bpe_segment_cte(ms) -> str:
-    """Shared WITH-body computing the per-doc BPE token relation
-    ``tok(doc_id, t)`` in SQL: each merge is one greedy left-to-right
-    list_reduce rewrite over the distinct-word relation (the same
-    vocabulary-not-corpus shape the engine uses), then word
-    occurrences join back. Used by the encode and fertility
-    oracles."""
-
-    def rewrite(step: int, a: str, b: str, m: str) -> str:
-        return (
-            f"v{step} AS (SELECT w, list_reduce("
-            f"list_transform(syms, x -> [x]), (acc, x) -> "
-            f"CASE WHEN acc[len(acc)] = {_sql_str(a)} "
-            f"AND x[1] = {_sql_str(b)} "
-            f"THEN list_slice(acc, 1, len(acc) - 1) || [{_sql_str(m)}] "
-            f"ELSE acc || x END) AS syms FROM v{step - 1})"
-        )
-
-    steps = ",\n    ".join(
-        rewrite(i + 1, a, b, m)
-        for i, (_r, a, b, m, _w) in enumerate(ms)
-    )
-    last = len(ms)
-    return f"""
-    w0 AS (
-        SELECT doc_id, u.w AS w
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(text, '\\s+'),
-                                 x -> x <> '') AS ws
-              FROM documents) d, UNNEST(d.ws) AS u(w)
-    ),
-    v0 AS (SELECT w, regexp_extract_all(w, '.') AS syms
-           FROM (SELECT DISTINCT w FROM w0)),
-    {steps},
-    tok AS (
-        SELECT w0.doc_id, u.t AS t
-        FROM w0 JOIN v{last} USING (w), UNNEST(v{last}.syms) AS u(t)
-    )"""
-
-
-def _bpe_encoded_oracle():
-    """DuckDB mirror of tokenizer inference: the 24 merges come from
-    the independent reference learner (_ref_bpe_merges); the
-    SEGMENTATION itself is computed IN SQL (_bpe_segment_cte), then
-    counts aggregate per doc."""
-    ms = _ref_bpe_merges(24)
-    if not ms:
-        return None
-    return f"""
-    WITH {_bpe_segment_cte(ms)}
-    SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(COUNT(DISTINCT t) AS BIGINT) AS n_unique_tokens
-    FROM tok GROUP BY doc_id
-    """
-
-
-@q(
-    "bpe_encoded_docs",
-    _bpe_encoded_oracle,  # LAZY; merges pinned from the independent
-    # reference learner; segmentation + counts computed in SQL
-    "BPE tokenizer INFERENCE — encode the corpus with 24 learned "
-    "merges: each DISTINCT word segments once (merge folds run over "
-    "the vocabulary relation, never the corpus), then one word-keyed "
-    "join maps occurrences back and per-doc token sequences "
-    "reassemble position-sorted. Returns (doc_id, n_tokens, "
-    "n_unique_tokens) (operators/bpe.py:encode_documents).",
-)
-def bpe_encoded_docs_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.bpe import (
-        encode_documents,
-        learn_bpe_merges,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges_df = learn_bpe_merges(docs, 24)
-    merges = [
-        (r["left"], r["right"])
-        for r in merges_df.orderBy("rank").collect()
-    ]
-    enc = encode_documents(docs, merges)
-    return enc.select(
-        "doc_id",
-        "n_tokens",
-        F.size(F.array_distinct("tokens")).cast("long").alias(
-            "n_unique_tokens"
-        ),
-    )
-
-
 _FIS_TX_SQL = """
 SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
                    x -> x <> '') AS items
@@ -8798,31 +8418,6 @@ def hard_negative_mining_q(spark, sf_dir):
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-@q(
-    "span_corruption_examples",
-    None,  # the greedy per-doc span walk has no SQL expression —
-    # rows-only by design; reconstruction/determinism/density
-    # property tests in tests/test_span_corruption.py
-    "T5/UL2 span corruption — denoising training examples (Raffel "
-    "et al. 2020): ~15% of each doc's tokens masked in mean-3 "
-    "contiguous spans, input keeps one <extra_id_K> sentinel per "
-    "span, target holds the masked tokens; input+target reconstruct "
-    "the original exactly. DETERMINISTIC where the paper samples "
-    "(seeded per-(doc, position) hash thresholds), so re-runs and "
-    "repartitions produce identical examples. One Arrow mapInPandas "
-    "pass, zero shuffles "
-    "(operators/packing.py:span_corruption).",
-)
-def span_corruption_examples_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.packing import (
-        span_corruption,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = span_corruption(docs, noise_density=0.15, seed=42)
-    return out.select("doc_id", "n_masked", "n_spans")
-
-
 def _bm25_explain_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.querystring import (
         bm25_explain_oracle_sql,
@@ -8887,35 +8482,6 @@ def categorize_event_messages_q(spark, sf_dir):
         )
     )
     return categorize_text_agg(msgs, "msg", max_categories=25)
-
-
-@q(
-    "ul2_denoiser_examples",
-    None,  # the greedy span walks have no SQL expression — rows-only
-    # by design; partition/reconstruction/aggressiveness property
-    # tests in tests/test_span_corruption.py
-    "UL2 mixture-of-denoisers (Tay et al. 2022) — every doc "
-    "hash-assigned one objective ([R] regular span corruption 50% / "
-    "[X] extreme 25% / [S] prefix-LM 25%) with the mode token "
-    "prepended; assignment, span selection, and split points are all "
-    "seeded pure functions of (doc, position), so the mixture is "
-    "identical across runs and partitionings. Each leg filters to "
-    "its hash subset at the scan "
-    "(operators/packing.py:ul2_denoiser_mix).",
-)
-def ul2_denoiser_examples_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.packing import (
-        ul2_denoiser_mix,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = ul2_denoiser_mix(docs, seed=42)
-    return out.select(
-        "doc_id",
-        "denoiser",
-        F.size("input_tokens").cast("long").alias("n_input"),
-        F.size("target_tokens").cast("long").alias("n_target"),
-    )
 
 
 @q(
@@ -10503,75 +10069,6 @@ def runtime_field_request_q(spark, sf_dir):
     return page
 
 
-def _fertility_oracle():
-    """Fertility stats from the SAME independent components the BPE
-    gates pin: reference-learned merges (_ref_bpe_merges) + SQL
-    segmentation (_bpe_segment_cte); word/char counts and the two
-    single-division ratios compute directly in SQL."""
-    ms = _ref_bpe_merges(24)
-    if not ms:
-        return None
-    return f"""
-    WITH {_bpe_segment_cte(ms)},
-    doc_tok AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens
-        FROM tok GROUP BY doc_id
-    ),
-    doc_base AS (
-        SELECT doc_id, lang, source,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                    x -> x <> '')) AS BIGINT)
-                   AS n_words,
-               CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-                    AS BIGINT) AS n_chars
-        FROM documents
-    )
-    SELECT b.lang, b.source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(b.n_words) AS BIGINT) AS n_words,
-           CAST(SUM(b.n_chars) AS BIGINT) AS n_chars,
-           CAST(SUM(t.n_tokens) AS BIGINT) AS n_tokens,
-           CAST(SUM(t.n_tokens) AS DOUBLE)
-               / CAST(SUM(b.n_words) AS DOUBLE) AS tokens_per_word,
-           CAST(SUM(b.n_chars) AS DOUBLE)
-               / CAST(SUM(t.n_tokens) AS DOUBLE) AS chars_per_token
-    FROM doc_base b JOIN doc_tok t USING (doc_id)
-    GROUP BY b.lang, b.source
-    ORDER BY b.lang ASC, b.source ASC
-    """
-
-
-@q(
-    "tokenizer_fertility_stats",
-    _fertility_oracle,  # LAZY; merges pinned from the independent
-    # reference learner; segmentation + ratios computed in SQL
-    "E250: tokenizer fertility / compression statistics per corpus "
-    "stratum — tokens-per-word and chars-per-token by (lang, "
-    "source) under the 24-merge BPE tokenizer: the numbers a "
-    "tokenizer owner watches before training on a new mixture "
-    "(fertility >1 = words fragment; chars/token = compression). "
-    "Grouped sums are exact BIGINTs; each ratio is ONE IEEE "
-    "division of exact sums — bit-identical cross-engine. Token "
-    "counts ride encode_documents (merge folds over the DISTINCT-"
-    "WORD relation + one word-keyed join — never per-corpus-row "
-    "Python); the stats are one |strata|-sized aggregate "
-    "(operators/bpe.py:fertility_stats).",
-)
-def tokenizer_fertility_stats_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.bpe import (
-        fertility_stats,
-        learn_bpe_merges,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges_df = learn_bpe_merges(docs, 24)
-    merges = [
-        (r["left"], r["right"])
-        for r in merges_df.orderBy("rank").collect()
-    ]
-    return fertility_stats(docs, merges)
-
-
 def _termvectors_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
         termvectors_oracle_sql,
@@ -10883,7 +10380,7 @@ def search_request_suggest_q(spark, sf_dir):
 # the 12 queries NEW in r17 (E243 query_string / Kibana-DQL, E244
 # bucketed-fact star serving, E245 script_score, E246 terms lookup,
 # E247 Discover session, E248 percolate query, E249 runtime fields,
-# E250 tokenizer fertility, E251 termvectors — each oracle-gated) +
+# E251 termvectors — each oracle-gated) +
 # the ENTIRE 30-query r11 stale band (clearing the oldest band —
 # the r16 judge re-verified 12 of the 30 full-oracle green at HEAD,
 # so this is bookkeeping, but the driver record is the contract) +
@@ -10891,7 +10388,9 @@ def search_request_suggest_q(spark, sf_dir):
 # queries outrank stale-but-judge-reverified rows for slots: the
 # displaced r12 tail queues for r18, and the WHOLE registry was
 # locally re-verified green this round (251 oracle PASS + 22
-# rows-only at HEAD, tools/verify_correctness.py full run).
+# rows-only at HEAD, tools/verify_correctness.py full run). A slot
+# freed by a deleted entry goes to the next CDC core entry, in
+# definition order.
 _R17_WINDOW = [
     # new in r17 (never driver-checked): E243-E251
     "query_string_docs",
@@ -10904,7 +10403,6 @@ _R17_WINDOW = [
     "discover_session_request",
     "percolate_query_docs",
     "runtime_field_request",
-    "tokenizer_fertility_stats",
     "termvectors_docs",
     "intervals_search_docs",
     "count_request_docs",
@@ -10923,8 +10421,6 @@ _R17_WINDOW = [
     "lineitem_contract_checks",
     "lineitem_correlation_matrix",
     "match_phrase_prefix_docs",
-    "pack_fixed_token_blocks",
-    "pack_training_sequences",
     "part_supplier_variety",
     "profile_lineitem",
     "proximity_search_docs",
@@ -10944,10 +10440,13 @@ _R17_WINDOW = [
     # rows queue for r18
     "agg_cube_status_priority",
     "bm25_keyword_search_indexed",
-    "chunked_documents",
     # CDC core entries, definition order
     "cdc_current_state",
     "cdc_event_time_range",
+    "cdc_envelope_roundtrip",
+    "cdc_selection_filter",
+    "cdc_dedup_replay",
+    "cdc_schema_drift",
 ]
 
 assert len(_R17_WINDOW) == 50, f"window must fill exactly 50 slots, got {len(_R17_WINDOW)}"

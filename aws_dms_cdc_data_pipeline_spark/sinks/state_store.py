@@ -63,17 +63,10 @@ class StateStore:
         return os.path.join(self.path, "_MANIFEST")
 
     def _manifest(self) -> dict:
-        try:
-            with open(self._manifest_file) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"generation": -1, "buckets": {}}
+        return _read_manifest(self._manifest_file, {"generation": -1, "buckets": {}})
 
     def _write_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_file)  # atomic pointer swap
+        _swap_manifest(self._manifest_file, manifest)
 
     def version(self) -> int:
         """Monotonic store generation (bumped once per merge)."""
@@ -312,6 +305,24 @@ class StateStore:
         return new_gen
 
 
+def _read_manifest(path: str, default: dict) -> dict:
+    """The JSON manifest at ``path``, or ``default`` before the first swap."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
+
+
+def _swap_manifest(path: str, manifest: dict) -> None:
+    """Replace the JSON manifest at ``path`` atomically: readers see the
+    old or the new manifest whole, never a partial write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, path)  # atomic pointer swap
+
+
 def _versions_below(version_root: str, floor: int) -> list[int]:
     """The ``v=<N>`` versions on disk under ``version_root`` with
     ``N < floor``, ascending (none when the directory is missing)."""
@@ -541,8 +552,7 @@ def snapshot_store(store: StateStore, dest: str) -> dict:
         dst_dir = os.path.join(dest, f"b={b}", f"v={v}")
         shutil.copytree(src_dir, dst_dir)
         n_files += sum(len(fs) for _, _, fs in os.walk(dst_dir))
-    with open(os.path.join(dest, "_MANIFEST"), "w") as f:
-        json.dump(manifest, f)
+    _swap_manifest(os.path.join(dest, "_MANIFEST"), manifest)
     return {
         "generation": manifest["generation"],
         "buckets": len(manifest["buckets"]),

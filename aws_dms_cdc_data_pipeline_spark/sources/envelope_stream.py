@@ -13,7 +13,7 @@ same downstream plan:
          .option(...)
          .load()
          .select(col("value").cast("string"))
-         → parse_envelopes(...)
+         → parse_envelope_lines(...)
 
 The wire format carries ``doc_id`` (shard-sequence-number analog,
 reference README.md:457) alongside the envelope.

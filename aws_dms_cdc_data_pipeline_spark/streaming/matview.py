@@ -50,7 +50,6 @@ fixture scales this repo tests, so the simple layout stays.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -62,6 +61,8 @@ from pyspark.sql import functions as F
 from aws_dms_cdc_data_pipeline_spark import schema as S
 from aws_dms_cdc_data_pipeline_spark.sinks.state_store import (
     StateStore,
+    _read_manifest,
+    _swap_manifest,
     _versions_below,
 )
 
@@ -102,17 +103,10 @@ class IncrementalAggView:
         return os.path.join(self.path, "_MANIFEST")
 
     def _manifest(self) -> dict:
-        try:
-            with open(self._manifest_file) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"v": -1, "store_gen": -1}
+        return _read_manifest(self._manifest_file, {"v": -1, "store_gen": -1})
 
     def _write_manifest(self, m: dict) -> None:
-        tmp = self._manifest_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_file)
+        _swap_manifest(self._manifest_file, m)
 
     def _vdir(self, v: int) -> str:
         return os.path.join(self.path, f"v={v}")

@@ -102,11 +102,7 @@ def _merge_with_retry(
     while True:
         attempts += 1
         try:
-            if changes is None:  # wrappers of merge(self, df) keep working
-                gen = store.merge(selected)
-            else:
-                gen = store.merge(selected, changes)
-            return None, attempts, gen
+            return None, attempts, store.merge(selected, changes)
         except Exception as exc:  # noqa: BLE001 — any failure is retryable
             delay = backoff_seconds * (2 ** (attempts - 1))
             if time.monotonic() + delay > deadline:
@@ -230,7 +226,7 @@ def _deliver(cfg: CdcStreamConfig, store: StateStore, view=None):
                 shutil.rmtree(delivery_dlq, ignore_errors=True)
             else:
                 # raw = the full KEYED wire line (doc_id included) so a
-                # parked record replays through parse_envelopes intact.
+                # parked record replays through parse_envelope_lines intact.
                 selected.select(
                     F.to_json(F.struct("data", "metadata", "doc_id")).alias("raw"),
                     F.lit("delivery-error").alias("error"),

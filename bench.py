@@ -8,9 +8,9 @@ prints ONE JSON line::
 
 The driver captures only a bounded tail of stdout, so the printed line
 is a SLIM summary (headline per-query map + per-tier totals) and the
-complete payload — scale-tier per-query maps, CDC drain, serving tier,
-sf10 probe — is written compactly to ``BENCH_LOCAL.json`` at the repo
-root (committed per-round; the stdout line carries its path in
+complete payload — scale-tier per-query maps, sf10 probe — is
+written compactly to ``BENCH_LOCAL.json`` at the repo root
+(committed per-round; the stdout line carries its path in
 ``"full"``). r7's artifact lost the per-query map to the tail cap.
 
 Each query is forced with a full-result materialization
@@ -128,9 +128,7 @@ HEADLINE = (
     # expansion over the corpus), the parent/child fact-fact join,
     # the CMS sketch build (one ×depth explode over events). The
     # bounded scoring queries (rank_feature/pinned/distance/decay/
-    # percentiles_bucket) are wall-noise and stay out; bpe_encoded_docs
-    # stays out (a sequential merge-learning job chain measures the
-    # scheduler floor, not the operator).
+    # percentiles_bucket) are wall-noise and stay out.
     "simple_query_string_docs",
     "dis_max_docs",
     "frequent_token_sets",
@@ -417,34 +415,6 @@ def main() -> None:
             },
         }
 
-    # CDC streaming tier: one availableNow drain of a generated
-    # envelope backlog through the FULL triple-sink pipeline (parse →
-    # contract gate → hourly archive → state-store merge) — the
-    # streaming path measured at volume, not toy test scale.
-    # Generation is off the clock and cached under .benchdata/.
-    if not os.environ.get("SPARK_GRAFT_SKIP_CDC"):
-        try:
-            from tools.bench_cdc import run as cdc_run
-
-            payload["cdc_throughput"] = cdc_run(
-                int(os.environ.get("SPARK_GRAFT_CDC_N", "1000000")),
-                spark=spark,
-            )
-        except Exception as e:  # optional tier — never fail the bench
-            print(f"cdc tier skipped: {e}", file=sys.stderr)
-
-    # search-serving tier: percolator query-count scaling (shared
-    # anchor-vote pass — wall at 100 standing queries should be far
-    # under 10× the wall at 10) + streaming token-index maintenance
-    # (append docs/s through the maintainer + freshness-to-searchable)
-    if not os.environ.get("SPARK_GRAFT_SKIP_SERVING"):
-        try:
-            from tools.bench_serving import run as serving_run
-
-            payload["search_serving"] = serving_run(spark=spark, sf_dir=sf_dir)
-        except Exception as e:  # optional tier — never fail the bench
-            print(f"serving tier skipped: {e}", file=sys.stderr)
-
     # sf10 scale probe: dedup/text one decade past the scale tier
     # (500 k docs, documents-only build off the clock) — candidate
     # volume must grow linearly and walls stay disk-bound
@@ -486,9 +456,6 @@ def main() -> None:
     sc = payload.get("scale_check")
     if sc:
         slim["ratio_vs_duckdb_sf1"] = sc["ratio_vs_duckdb"]
-    cdc = payload.get("cdc_throughput")
-    if cdc:
-        slim["cdc_envelopes_per_sec"] = cdc.get("envelopes_per_sec")
     line = json.dumps(slim, separators=(",", ":"))
     if len(line) > 1500:  # hard cap: drop to scalars only
         slim.pop("queries", None)

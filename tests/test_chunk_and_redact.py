@@ -1,39 +1,10 @@
-"""Chunking (operators/chunking.py) + PII redaction (operators/text.py)."""
+"""PII redaction and TF-IDF top terms (operators/text.py)."""
 
-import pytest
-
-from aws_dms_cdc_data_pipeline_spark.operators.chunking import chunk_documents
 from aws_dms_cdc_data_pipeline_spark.operators.text import redact_pii
 
 
 def _mk_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_chunk_windows_cover_every_token_with_overlap(spark):
-    words = [f"w{i}" for i in range(10)]
-    docs = _mk_docs(spark, [(1, " ".join(words))])
-    out = {
-        r.chunk_id: (r.chunk_text.split(" "), r.n_tokens)
-        for r in chunk_documents(docs, chunk_tokens=8, overlap_tokens=2).collect()
-    }
-    # starts: 1, 7  (stride 6, up to n-overlap=8)
-    assert out[0] == (words[0:8], 8)
-    assert out[1] == (words[6:10], 4)  # short final chunk, 2-token overlap
-
-
-def test_chunk_short_and_empty_docs(spark):
-    docs = _mk_docs(spark, [(1, "only three words"), (2, "   "), (3, "")])
-    rows = chunk_documents(docs, chunk_tokens=64, overlap_tokens=8).collect()
-    assert len(rows) == 1  # doc 1 → one short chunk; empty docs → none
-    assert rows[0].doc_id == 1 and rows[0].n_tokens == 3
-    assert rows[0].chunk_text == "only three words"
-
-
-def test_chunk_validates_overlap(spark):
-    docs = _mk_docs(spark, [(1, "a b c")])
-    with pytest.raises(ValueError, match="overlap_tokens < chunk_tokens"):
-        chunk_documents(docs, chunk_tokens=8, overlap_tokens=8)
 
 
 def test_redact_pii_planted_spans(spark):

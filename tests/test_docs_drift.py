@@ -1,4 +1,4 @@
-"""Docs drift gate: QUERIES.md / PLANS.md must cover the registry.
+"""Docs drift gate: QUERIES.md / PLANS.md must match the registry, both ways.
 
 The registry is 146+ queries and both docs are regenerated manually
 per change (tools/gen_query_docs.py, tools/plan_audit.py) — at this
@@ -13,14 +13,24 @@ import re
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _doc_names(path: str) -> set:
-    names = set()
+def _doc_rows(path: str) -> list[list[str]]:
+    """The cells of every table row below the header, in file order.
+    Any row counts, whatever its first cell looks like, so a stale
+    row cannot hide from the checks by its shape."""
+    rows = []
     with open(os.path.join(REPO, path)) as f:
         for line in f:
-            m = re.match(r"\| (\w+) \|", line)
-            if m and m.group(1) != "query":
-                names.add(m.group(1))
-    return names
+            if not line.startswith("|") or line.startswith("|---"):
+                continue
+            cells = line.strip().strip("|").split("|")
+            cells = [c.strip().strip("`") for c in cells]
+            if cells[0] != "query":
+                rows.append(cells)
+    return rows
+
+
+def _doc_names(path: str) -> set:
+    return {cells[0] for cells in _doc_rows(path)}
 
 
 def test_queries_md_covers_registry():
@@ -75,3 +85,30 @@ def test_docs_have_no_ghost_queries():
     for path in ("QUERIES.md", "PLANS.md"):
         ghosts = _doc_names(path) - set(REGISTRY)
         assert not ghosts, f"{path} lists unregistered queries: {sorted(ghosts)}"
+        names = [cells[0] for cells in _doc_rows(path)]
+        twice = sorted({n for n in names if names.count(n) > 1})
+        assert not twice, f"{path} lists queries twice: {twice}"
+
+
+def test_queries_md_header_counts_match_registry():
+    """The header's totals are the figures a reader quotes; a deletion
+    that drops rows but not the counts leaves them stale."""
+    from aws_dms_cdc_data_pipeline_spark.plans.queries import REGISTRY
+
+    with open(os.path.join(REPO, "QUERIES.md")) as f:
+        text = f.read()
+    m = re.search(
+        r"^(\d+) queries; (\d+) value-checked .*?, (\d+) rows-only", text, re.M
+    )
+    assert m, "QUERIES.md header line not found"
+    total, n_oracle, n_rows_only = map(int, m.groups())
+    gates = {cells[0]: cells[1] for cells in _doc_rows("QUERIES.md")}
+    assert total == len(REGISTRY) == len(gates)
+    assert n_oracle == sum(g == "oracle" for g in gates.values())
+    assert n_rows_only == sum(g == "rows-only" for g in gates.values())
+    # a fixed spec says the gate without resolving a lazy oracle
+    for name, qd in REGISTRY.items():
+        if qd.oracle_spec is None:
+            assert gates[name] == "rows-only", name
+        elif isinstance(qd.oracle_spec, str):
+            assert gates[name] == "oracle", name

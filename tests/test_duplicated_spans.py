@@ -1,4 +1,7 @@
-"""Exact substring-duplication spans (corpus-wide char-gram dedup)."""
+"""Exact substring-duplication spans (corpus-wide char-gram dedup) and
+their excision."""
+
+from hypothesis import given, settings, strategies as st
 
 from aws_dms_cdc_data_pipeline_spark.operators.dedup import duplicated_spans
 
@@ -100,3 +103,41 @@ def test_dedup_then_excise_removes_duplication(spark):
         stride=5,
     ).collect()
     assert re_spans == []  # idempotent: nothing left to find
+
+
+@settings(max_examples=8, deadline=None)
+@given(data=st.data())
+def test_excise_matches_python_slice_removal(spark, data):
+    from aws_dms_cdc_data_pipeline_spark.operators.dedup import excise_spans
+
+    text = data.draw(st.text(alphabet="abcxyz ", min_size=0, max_size=60))
+    # random disjoint sorted 1-based half-open spans inside the text
+    # (each span needs two unique bounds from [1, len+1])
+    max_spans = min(3, (len(text) + 1) // 2)
+    n_spans = data.draw(st.integers(min_value=0, max_value=max_spans))
+    bounds = sorted(
+        data.draw(
+            st.lists(
+                st.integers(min_value=1, max_value=max(len(text), 1) + 1),
+                min_size=2 * n_spans,
+                max_size=2 * n_spans,
+                unique=True,
+            )
+        )
+    )
+    spans = [(bounds[2 * i], bounds[2 * i + 1]) for i in range(n_spans)]
+
+    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    sp = spark.createDataFrame(
+        [(1, s, e) for s, e in spans],
+        "doc_id long, span_start long, span_end long",
+    )
+    [row] = excise_spans(docs, sp).collect()
+
+    want = ""
+    pos = 1
+    for s, e in spans:
+        want += text[pos - 1 : s - 1]
+        pos = e
+    want += text[pos - 1 :]
+    assert row["text"] == want
