@@ -19,8 +19,13 @@ same strictness Delta's CHECK constraints apply.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _passes(predicate: str) -> Column:
+    """TRUE where the SQL ``predicate`` holds; NULL counts as a fail."""
+    return F.coalesce(F.expr(predicate), F.lit(False))
 
 
 def check_constraints(df: DataFrame, checks: dict[str, str]) -> DataFrame:
@@ -33,10 +38,7 @@ def check_constraints(df: DataFrame, checks: dict[str, str]) -> DataFrame:
     aggs = [F.count(F.lit(1)).cast("long").alias("_n")]
     for name, predicate in sorted(checks.items()):
         aggs.append(
-            F.sum(
-                F.when(F.coalesce(F.expr(predicate), F.lit(False)), 0)
-                .otherwise(1)
-            )
+            F.sum(F.when(_passes(predicate), 0).otherwise(1))
             .cast("long")
             .alias(f"_v_{name}")
         )
@@ -53,7 +55,21 @@ def check_constraints(df: DataFrame, checks: dict[str, str]) -> DataFrame:
     return wide.select(F.explode(F.array(*rows)).alias("_c")).select("_c.*")
 
 
-__all__ = ["check_constraints", "quarantine_violations"]
+__all__ = ["check_constraints", "quarantine_violations", "violations"]
+
+
+def violations(checks: dict[str, str]) -> Column:
+    """The sorted array of the names of the ``checks`` a row fails
+    (empty when it passes them all). A predicate that is FALSE or NULL
+    fails: unknown is not a pass."""
+    return F.array_compact(
+        F.array(
+            *[
+                F.when(~_passes(pred), F.lit(name))
+                for name, pred in sorted(checks.items())
+            ]
+        )
+    )
 
 
 def quarantine_violations(
@@ -74,17 +90,7 @@ def quarantine_violations(
     """
     if not checks:
         raise ValueError("quarantine_violations needs at least one check")
-    fails = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    ~F.coalesce(F.expr(pred), F.lit(False)), F.lit(name)
-                )
-                for name, pred in sorted(checks.items())
-            ]
-        )
-    )
-    annotated = df.withColumn("violations", fails)
+    annotated = df.withColumn("violations", violations(checks))
     good = annotated.filter(F.size("violations") == 0).drop("violations")
     bad = annotated.filter(F.size("violations") > 0)
     return good, bad

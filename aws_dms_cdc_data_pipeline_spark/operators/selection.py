@@ -11,10 +11,20 @@ columnar source, and evaluates it pre-shuffle on a stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark import schema as S
+
+
+def table_predicate(
+    schema_name: str = S.DEFAULT_SCHEMA_NAME,
+    table_name: str = S.DEFAULT_TABLE_NAME,
+) -> Column:
+    """True for change records of one source table."""
+    return (F.col(S.meta("schema-name")) == F.lit(schema_name)) & (
+        F.col(S.meta("table-name")) == F.lit(table_name)
+    )
 
 
 def select_table(
@@ -23,7 +33,4 @@ def select_table(
     table_name: str = S.DEFAULT_TABLE_NAME,
 ) -> DataFrame:
     """Keep only change records for one source table."""
-    return df.filter(
-        (F.col(S.meta("schema-name")) == F.lit(schema_name))
-        & (F.col(S.meta("table-name")) == F.lit(table_name))
-    )
+    return df.filter(table_predicate(schema_name, table_name))

@@ -34,7 +34,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -148,7 +148,10 @@ class StateStore:
 
     # -- write -------------------------------------------------------------
     def merge(
-        self, batch_envelopes: DataFrame, changes: ChangeCapture | None = None
+        self,
+        batch_envelopes: DataFrame,
+        changes: ChangeCapture | None = None,
+        touched: Iterable[int] | None = None,
     ) -> int:
         """Upsert one micro-batch of keyed envelopes; returns new generation.
 
@@ -156,19 +159,24 @@ class StateStore:
         and rewritten; everything else is untouched metadata-only.
         ``changes`` (optional) collects the merge's signed change set
         on the staging write itself — see :class:`ChangeCapture`.
+        ``touched`` (optional) is the batch's bucket ids
+        (``_bucket_expr()`` over its rows) when the caller already has
+        them, which spares the merge its own pass over the batch; a
+        set that misses a bucket of the batch makes the commit raise
+        (so an empty set still runs the write that proves it).
         """
         cols = ["data", "metadata", "doc_id"]
         batch = batch_envelopes.select(*cols).withColumn("_b", self._bucket_expr())
-        # Affected-bucket ids: a <= num_buckets-element driver list, not data.
-        touched = sorted(
-            r["_b"] for r in batch.select("_b").distinct().collect()
-        )
         manifest = self._manifest()
         new_gen = manifest["generation"] + 1
-        if not touched:  # empty batch — bump generation only
-            manifest["generation"] = new_gen
-            self._write_manifest(manifest)
-            return new_gen
+        if touched is None:
+            # Affected-bucket ids: a <= num_buckets-element driver list, not data.
+            touched = {r["_b"] for r in batch.select("_b").distinct().collect()}
+            if not touched:  # empty batch — bump generation only
+                manifest["generation"] = new_gen
+                self._write_manifest(manifest)
+                return new_gen
+        touched = sorted(touched)
 
         old_dirs = [
             self._bdir(b, manifest["buckets"][str(b)])
@@ -254,6 +262,20 @@ class StateStore:
                 f"state store staging dir {staging} vanished or is "
                 "incomplete after write (concurrent fsck clean?); "
                 "nothing was committed — re-run"
+            )
+        # a staged bucket outside ``touched`` would never be committed:
+        # its rows would silently vanish (a caller-supplied bucket set
+        # that misses one of the batch's buckets)
+        staged = {
+            int(e.removeprefix("_b="))
+            for e in os.listdir(staging)
+            if e.startswith("_b=")
+        }
+        if not staged <= set(touched):
+            shutil.rmtree(staging, ignore_errors=True)
+            raise RuntimeError(
+                f"staged buckets {sorted(staged - set(touched))} are not "
+                f"in the touched set {touched}; nothing was committed"
             )
         gc_dirs: list[str] = []
         for b in touched:

@@ -295,3 +295,30 @@ def test_merge_aborts_when_staging_vanishes(spark, tmp_path, monkeypatch):
     assert _rows(store) == before
     store.merge(b2)  # replay succeeds
     assert store.version() == gen + 1
+
+
+def test_touched_set_missing_a_bucket_raises_and_commits_nothing(spark, tmp_path):
+    """A caller-supplied bucket set that misses one of the batch's
+    buckets must not silently drop that bucket's rows: the merge
+    raises after the staging write and the manifest stays as it was."""
+    b1, b2 = _batches(spark)
+    store = StateStore(spark, str(tmp_path / "state"), num_buckets=4)
+    store.merge(b1)
+    before, manifest_before = _rows(store), store._manifest()
+    buckets = {
+        r["_b"]
+        for r in b2.select(store._bucket_expr().alias("_b")).distinct().collect()
+    }
+    assert len(buckets) > 1
+    for wrong in (buckets - {min(buckets)}, set()):
+        with pytest.raises(RuntimeError, match="not in the touched set"):
+            store.merge(b2, touched=wrong)
+        assert store._manifest() == manifest_before
+    assert _rows(store) == before
+    assert not [e for e in os.listdir(store.path) if e.startswith("_staging-")]
+    # the exact set commits, like a merge that finds its own buckets
+    store.merge(b2, touched=buckets)
+    ref = StateStore(spark, str(tmp_path / "ref"), num_buckets=4)
+    ref.merge(b1)
+    ref.merge(b2)
+    assert _rows(store) == _rows(ref)
