@@ -13,8 +13,7 @@ aws-samples/aws-dms-cdc-data-pipeline) idiomatically on Apache Spark:
 - micro-batched delivery into an upsertable current-state table, an
   hourly-partitioned raw archive and a dead-letter path
   (firehose.py:114-155),
-- and a full relational + large-scale-data-pipeline query surface
-  (dedup, similarity search, text analysis) over the replicated state.
+- and a relational + search query surface over the replicated state.
 
 Everything is expressed with the public DataFrame / SQL / Structured
 Streaming API so Catalyst + Tungsten pick the physical strategy.

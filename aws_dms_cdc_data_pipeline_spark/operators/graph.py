@@ -4,17 +4,15 @@ The entity-importance primitive a curation/analytics pipeline needs
 when relations matter more than counts (supplier co-supply networks,
 domain link graphs for web-corpus quality, user interaction graphs):
 PageRank (Page et al. 1999) as the canonical representative of the
-iterative message-passing class, complementing the engine's other
-iterative operator (min-label propagation in components.py).
+iterative message-passing class.
 
 Spark shape per iteration: ONE shuffle — contributions = edges ⋈
 ranks keyed on the source, summed per destination (map-side
 partials); out-degrees join broadcast (a node-sized relation);
 dangling mass is a 1-row aggregate folded into the teleport term.
-Lineage truncates with localCheckpoint every iteration (the
-components.py precedent) so the plan stays flat at any iteration
-count. Convergence is an L∞ check on a 1-row aggregate; the loop
-stops early when below ``tol``.
+Lineage truncates with localCheckpoint every iteration so the plan
+stays flat at any iteration count. Convergence is an L∞ check on a
+1-row aggregate; the loop stops early when below ``tol``.
 
 Determinism: rank values are double sums over shuffle partitions —
 deterministic for a fixed partitioning but not bit-identical across

@@ -23,8 +23,8 @@ Execution shape (scale notes):
   customer/supplier) is projected once to exactly the columns all its
   roles need and persisted, so every consuming branch reads the one
   materialized projection instead of re-scanning the file. The cache
-  is plan-keyed and caller-owned (same policy as the dedup shingle
-  cache, operators/dedup.py): repeated audits reuse it; sweeps clear
+  is plan-keyed and caller-owned (same policy as the BM25 projection
+  cache, operators/search.py): repeated audits reuse it; sweeps clear
   between families. The persisted payload is a few pruned key columns
   — for dimension tables it is trivially small, and even for a
   fact-sized parent (orders as parent of lineitem) two int64 columns

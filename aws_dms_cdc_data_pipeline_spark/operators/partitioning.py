@@ -40,7 +40,7 @@ def local_relation(spark, data, schema: str) -> DataFrame:
 def stats_memo_key(df: DataFrame, *extra) -> tuple | None:
     """Memo key for collected model/index statistics — the shared key
     shape for every stats memo (the BM25 corpus stats of the search,
-    query-string and DSL operators, the DSIR model of sampling.py).
+    query-string and DSL operators).
 
     ``(appId, analyzed-plan semanticHash, input file set, *extra)``:
     the plan hash keys the computation, the FILE SET keys staleness —

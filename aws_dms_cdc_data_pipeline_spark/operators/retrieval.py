@@ -3036,9 +3036,8 @@ def string_stats(
     ``p·log2(p)`` terms — each term is quantized to a 1e-12 long
     BEFORE the sum (an exact, order-free long sum) and the result
     rounds to 6 dp, absorbing sub-ulp libm log2 drift between engines
-    (the E130 collocations PMI precedent; character alphabets are
-    ~dozens of symbols, so quantization error stays ≤ |alphabet|·5e-13,
-    far inside the 6-dp round).
+    (character alphabets are ~dozens of symbols, so quantization
+    error stays ≤ |alphabet|·5e-13, far inside the 6-dp round).
 
     Execution: one scan with an in-row length projection (no explode
     for the length stats); the entropy pass explodes to characters
@@ -4375,10 +4374,10 @@ def frequent_item_sets(
     # (Σ|items|²/2 rows from each transaction) — a few-file scan
     # must not pin it to the scan's split count (measured: the two
     # 8 MB sf0.1 splits ran the 0.9 s expansion on 2 of 32 cores).
-    # The byte bar drops to 128 KB here (the _word_gram_index
-    # precedent): per-partition work is QUADRATIC in row width, so
-    # the default 1 MB bar — calibrated for linear tokenize passes —
-    # under-buys parallelism exactly where it hurts most. The low bar
+    # The byte bar drops to 128 KB here: per-partition work is
+    # QUADRATIC in row width, so the default 1 MB bar — calibrated
+    # for linear tokenize passes — under-buys parallelism exactly
+    # where it hurts most. The low bar
     # also makes the fan-out probe's first-call decision the
     # steady-state one: this is the only call site that persists
     # fan_out_scan's direct output, and before r17's decision memo

@@ -165,10 +165,10 @@ def _bm25_adhoc_proj(
     corpus membership as ``sum(dl > 0)`` and drops no-hit rows via
     ``n_terms_hit > 0`` (tf > 0 implies dl > 0).
 
-    Persisted (caller-owned, plan-keyed lifecycle — the minhash/tfidf
-    precedent): the projection feeds both the 1-row stats aggregate
-    and the scoring pass, and identical (docs, terms) calls across
-    operators share the cache by plan equality. The REAL fix for a
+    Persisted (caller-owned, plan-keyed lifecycle): the projection
+    feeds both the 1-row stats aggregate and the scoring pass, and
+    identical (docs, terms) calls across operators share the cache by
+    plan equality. The REAL fix for a
     served corpus remains the materialized index
     (:func:`ensure_token_index`), where no per-query tokenization
     exists at all.
@@ -1019,8 +1019,7 @@ def token_index_stats(spark, idx_table: str, dl_table: str) -> DataFrame:
     size, total token occurrences, exact average document length
     (decimal-accumulated, 6-dec), and the maximum per-term document
     frequency (the stop-term ceiling that bounds posting-list skew —
-    the number the dedup max_df caps and the fan-out guards reason
-    about).
+    the number the fan-out guards reason about).
 
     Execution: one shuffle-free aggregate over the term-bucketed
     index (df per term needs no exchange — the bucketing IS the term
@@ -2735,7 +2734,7 @@ def proximity_search(
     # relation on both sides of the pair join, and without the cache
     # each branch re-tokenizes the whole corpus (branch-recompute);
     # the cached relation is two terms' postings, not the corpus.
-    # Plan-keyed (Spark cache), same policy as the dedup shingles.
+    # Plan-keyed (Spark cache), same policy as the BM25 projection.
     toks = (
         tokenize_positions(docs, text_col, id_col)
         .filter(F.col("term").isin([a, b]))
@@ -2995,13 +2994,12 @@ def append_to_token_index(
     query (bm25/tfidf) sees the union corpus exactly as if the index
     had been rebuilt (bit-parity tested).
 
-    Contract: ``new_docs`` carries ids NOT already indexed — the same
-    new-batch contract as the incremental MinHash index
-    (operators/dedup.py:incremental_minhash_pairs); re-appending an id
-    would double-count its term frequencies. Cost is O(new batch),
-    never O(corpus): the existing index is not read, let alone
-    rewritten — the maintenance shape that makes a 100 TB corpus
-    index affordable to keep current from the CDC stream.
+    Contract: ``new_docs`` carries ids NOT already indexed;
+    re-appending an id would double-count its term frequencies. Cost
+    is O(new batch), never O(corpus): the existing index is not
+    read, let alone rewritten — the maintenance shape that makes a
+    100 TB corpus index affordable to keep current from the CDC
+    stream.
 
     Pass ``fwd_table`` (from :func:`ensure_forward_index`) to keep
     the doc-keyed forward projection current in the same append —
@@ -3246,9 +3244,9 @@ def tfidf_top_terms_indexed(
     k: int = 5,
 ) -> DataFrame:
     """Top-``k`` characteristic terms per doc from the materialized
-    token index (same smoothed TF-IDF formula as
-    ``text.tfidf_top_terms``; tokens are the index's alnum tokens and
-    N counts indexed docs, i.e. docs with ≥1 token).
+    token index by smoothed TF-IDF, tf · (ln((N+1)/(df+1)) + 1)
+    rounded to 6 digits (tokens are the index's alnum tokens and N
+    counts indexed docs, i.e. docs with ≥1 token).
 
     Plan shape against the index: df-per-term aggregates SHUFFLE-FREE
     (index bucketed on term), corpus size is a 1-row broadcast from

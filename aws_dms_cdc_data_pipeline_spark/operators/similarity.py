@@ -599,7 +599,7 @@ def hard_negative_mining(
     / embedding-model training data): per anchor, the ``k`` corpus
     vectors MOST similar to it that are NOT known positives — the
     negatives that actually teach the model, where random negatives
-    (operators/sampling.py:negative_samples) are trivially separable.
+    are trivially separable.
 
     ``positives`` is the (query_id, id) relation of known positive
     pairs — the anchor itself belongs in it (it is its own nearest

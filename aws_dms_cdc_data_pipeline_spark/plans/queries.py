@@ -31,10 +31,7 @@ from aws_dms_cdc_data_pipeline_spark.operators.partitioning import (
 )
 
 from aws_dms_cdc_data_pipeline_spark.session import load_table
-from aws_dms_cdc_data_pipeline_spark.operators import components as C
-from aws_dms_cdc_data_pipeline_spark.operators import dedup as D
 from aws_dms_cdc_data_pipeline_spark.operators import similarity as V
-from aws_dms_cdc_data_pipeline_spark.operators import text as X
 
 
 @dataclass
@@ -888,225 +885,8 @@ def distinct_user_event_pairs(spark, sf_dir):
 
 
 # ===========================================================================
-# LLM-training-data pipeline operators (documents / embeddings tables)
+# Operators over the documents / embeddings tables
 # ===========================================================================
-
-# DuckDB mirror of operators/dedup.normalize_text — note the 'g' flag:
-# DuckDB regexp_replace is first-match-only by default, Spark's is global.
-_NORM_SQL = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-
-
-@q(
-    "exact_dedup_docs",
-    f"""
-    WITH all_docs AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 10000 AS doc_id, text FROM documents
-    ),
-    keep AS (
-        SELECT min(doc_id) AS doc_id
-        FROM all_docs GROUP BY md5({_NORM_SQL})
-    )
-    SELECT doc_id FROM all_docs WHERE doc_id IN (SELECT doc_id FROM keep)
-    """,
-    "Exact dedup: normalized-md5 fingerprint groups, keep lowest id. The "
-    "input is documents ∪ re-keyed copy so the grouping actually collapses "
-    "rows (fixture has no intra-table exact dups).",
-)
-def exact_dedup_docs(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    doubled = docs.unionByName(
-        docs.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
-    )
-    return D.exact_dedup(doubled, text_col="text", id_col="doc_id").select("doc_id")
-
-
-@q(
-    "minhash_lsh_pairs",
-    None,  # xxhash64-based signatures are not reproducible in DuckDB
-    "MinHash+LSH near-dup candidate pairs, exact-Jaccard verified ≥ 0.6. "
-    "Rows-only: the banding depends on xxhash64 seeds.",
-)
-def minhash_lsh_pairs_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs(docs)  # driver sorts rows; no global sort
-
-
-@q(
-    "simhash_pairs",
-    None,  # xxhash64 token hashes not reproducible in DuckDB
-    "SimHash near-dup pairs (hamming ≤ 3) via 16-bit-chunk pigeonhole "
-    "banding. Rows-only: signature depends on xxhash64.",
-)
-def simhash_pairs_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_pairs(docs)  # driver sorts rows; no global sort
-
-
-# shared CTE chain: word-3-gram Jaccard pairs ≥ 0.5 (used by the
-# pairs query and, as the edge source, by the cluster-closure queries)
-_NGRAM_JPAIRS_CTES = f"""norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
-    w AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(ws, i, i + 2), ' ') AS g
-        FROM w, UNNEST(generate_series(1, greatest(len(ws) - 2, 1))) AS s(i)
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-    inter AS (
-        SELECT ga.doc_id AS id_a, gb.doc_id AS id_b, COUNT(*) AS n_inter
-        FROM grams ga JOIN grams gb
-          ON ga.g = gb.g AND ga.doc_id < gb.doc_id
-        GROUP BY ga.doc_id, gb.doc_id
-    ),
-    jpairs AS (
-        SELECT id_a, id_b,
-               round(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
-        FROM inter JOIN sizes sa ON sa.doc_id = id_a
-                   JOIN sizes sb ON sb.doc_id = id_b
-        WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.5
-    )"""
-
-
-@q(
-    "ngram_jaccard_pairs",
-    f"""
-    WITH {_NGRAM_JPAIRS_CTES}
-    SELECT id_a, id_b, jaccard FROM jpairs
-    """,
-    "Exact word-3-gram Jaccard pairs ≥ 0.5 via inverted-index join — "
-    "full DuckDB oracle (no hashing involved).",
-)
-def ngram_jaccard_pairs_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(docs)
-
-
-@q(
-    "text_token_counts",
-    r"""
-    SELECT doc_id,
-           CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\s+')) END
-                AS BIGINT) AS ws_tokens,
-           CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))
-                AS BIGINT) AS bpe_tokens
-    FROM documents
-    """,
-    "Token counting: whitespace tokens + BPE-ish pre-tokenizer regex.",
-)
-def text_token_counts(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.with_token_counts(docs).select(
-        "doc_id",
-        F.col("ws_tokens").cast("long").alias("ws_tokens"),
-        F.col("bpe_tokens").cast("long").alias("bpe_tokens"),
-    )
-
-
-def _occ_sql(col: str, term: str) -> str:
-    """DuckDB mirror of operators/text.occurrences (length arithmetic)."""
-    esc = term.replace("'", "''")
-    return (
-        f"CAST((length({col}) - length(replace({col}, '{esc}', ''))) "
-        f"/ {len(term)} AS BIGINT)"
-    )
-
-
-def _quality_oracle_sql() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import STOPWORDS
-
-    stop_hits = " + ".join(_occ_sql("text", f" {w} ") for w in STOPWORDS)
-    return rf"""
-    WITH f AS (
-        SELECT doc_id,
-               length(text) AS n_chars,
-               len(regexp_split_to_array(trim(text), '\s+')) AS n_words,
-               len(regexp_extract_all(text, '[.,;:!?]')) AS punct,
-               ({stop_hits}) AS stop_hits
-        FROM documents
-    ),
-    r AS (
-        SELECT doc_id, n_chars, n_words,
-               punct / greatest(n_chars, 1) AS punct_ratio,
-               stop_hits / greatest(n_words, 1) AS stop_ratio,
-               least(n_chars / 500.0, 1.0) AS len_score
-        FROM f
-    )
-    SELECT doc_id,
-           CAST(n_words AS BIGINT) AS n_words,
-           round(punct_ratio, 6) AS punct_ratio,
-           round(stop_ratio, 6) AS stop_ratio,
-           round((n_chars - n_words + 1) / n_words, 6) AS mean_word_len,
-           greatest(least(round(0.4 * len_score
-                                + 0.3 * least(stop_ratio * 5.0, 1.0)
-                                + 0.3 * (1.0 - least(punct_ratio * 20.0, 1.0)),
-                          6), 1.0), 0.0) AS quality_score
-    FROM r
-    """
-
-
-@q(
-    "text_quality_scores",
-    _quality_oracle_sql(),
-    "Quality scoring: length/punctuation/stopword features + blended "
-    "score in [0,1]; oracle mirrors the exact arithmetic.",
-)
-def text_quality_scores(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.with_quality_score(docs).select(
-        "doc_id",
-        F.col("n_words").cast("long").alias("n_words"),
-        "punct_ratio",
-        "stop_ratio",
-        "mean_word_len",
-        "quality_score",
-    )
-
-
-def _lang_id_oracle_sql() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import LANG_MARKERS
-
-    score_exprs = ", ".join(
-        "("
-        + " + ".join(_occ_sql("padded", f" {m} ") for m in markers)
-        + f") AS s_{lang}"
-        for lang, markers in LANG_MARKERS.items()
-    )
-    langs = sorted(LANG_MARKERS)
-    # Replicate with_lang_id's fold exactly: first lang seeds best/lang,
-    # each later lang wins only on strictly greater score.
-    best_expr, lang_expr = f"s_{langs[0]}", f"'{langs[0]}'"
-    for lang in langs[1:]:
-        lang_expr = f"CASE WHEN s_{lang} > ({best_expr}) THEN '{lang}' ELSE ({lang_expr}) END"
-        best_expr = f"CASE WHEN s_{lang} > ({best_expr}) THEN s_{lang} ELSE ({best_expr}) END"
-    return f"""
-    WITH p AS (SELECT doc_id, ' ' || text || ' ' AS padded FROM documents),
-    sc AS (SELECT doc_id, {score_exprs} FROM p)
-    SELECT doc_id, {lang_expr} AS pred_lang FROM sc
-    """
-
-
-@q(
-    "text_lang_id",
-    _lang_id_oracle_sql(),
-    "Language ID: argmax of marker-word counts, lexicographic tie-break; "
-    "oracle replicates the when-chain fold.",
-)
-def text_lang_id(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.with_lang_id(docs).select("doc_id", "pred_lang")
-
-
-@q(
-    "text_fingerprints",
-    f"SELECT doc_id, md5({_NORM_SQL}) AS fingerprint FROM documents",
-    "Document fingerprint: md5 of lowercase/whitespace-collapsed text.",
-)
-def text_fingerprints(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.with_fingerprint(docs).select("doc_id", "fingerprint")
 
 
 @q(
@@ -1440,44 +1220,6 @@ def salted_supplier_qty(spark, sf_dir):
 
     li = load_table(spark, sf_dir, "lineitem")
     return salted_sum(li, "l_suppkey", "l_quantity", buckets=8, alias="total")
-
-
-@q(
-    "dataset_split_assignment",
-    """
-    SELECT doc_id,
-           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999'
-                     THEN 'val'
-                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '3333'
-                     THEN 'test'
-                ELSE 'train' END AS split
-    FROM documents
-    """,
-    "Deterministic train/val/test assignment from the id's md5 hex "
-    "prefix — reproducible across engines, partitionings, and corpus "
-    "versions (thresholds = hex_threshold(0.1), hex_threshold(0.2)).",
-)
-def dataset_split_assignment(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import with_split
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return with_split(docs, val_fraction=0.1, test_fraction=0.1)
-
-
-@q(
-    "hash_sample_quarter",
-    """
-    SELECT doc_id, n_chars FROM documents
-    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
-    """,
-    "Deterministic ~25% hash sample (membership from id hash alone; "
-    "df.sample would churn with partitioning).",
-)
-def hash_sample_quarter(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import hash_sample
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return hash_sample(docs, 0.25)
 
 
 @q(
@@ -1900,291 +1642,6 @@ def label_centroids(spark, sf_dir):
 
 
 @q(
-    "near_dup_clusters",
-    f"""
-    WITH RECURSIVE {_NGRAM_JPAIRS_CTES},
-    und AS (SELECT id_a AS s, id_b AS t2 FROM jpairs
-            UNION SELECT id_b, id_a FROM jpairs),
-    reach AS (
-        SELECT s AS id, s AS comp FROM und
-        UNION
-        SELECT u.t2 AS id, r.comp FROM reach r JOIN und u ON u.s = r.id
-    ),
-    comp AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id)
-    SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id
-    FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-    """,
-    "Near-dup GROUPS, not just pairs: connected components over the "
-    "exact n-gram-Jaccard pair graph via iterative min-label "
-    "propagation (operators/components.py); singletons keep their own "
-    "id. Oracle = recursive-CTE transitive closure on the same pairs.",
-)
-def near_dup_clusters_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return C.near_dup_clusters(docs, D.ngram_jaccard_pairs(docs))
-
-
-@q(
-    "near_dedup_canonical",
-    f"""
-    WITH RECURSIVE {_NGRAM_JPAIRS_CTES},
-    und AS (SELECT id_a AS s, id_b AS t2 FROM jpairs
-            UNION SELECT id_b, id_a FROM jpairs),
-    reach AS (
-        SELECT s AS id, s AS comp FROM und
-        UNION
-        SELECT u.t2 AS id, r.comp FROM reach r JOIN und u ON u.s = r.id
-    ),
-    comp AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-    clusters AS (
-        SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id
-        FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-    )
-    SELECT cluster_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_members
-    FROM clusters GROUP BY cluster_id
-    """,
-    "The dedup endgame: collapse each near-dup cluster to its "
-    "canonical (min-id) document, reporting how many members it "
-    "absorbed. keep_canonical's semi-join keeps exactly one doc per "
-    "cluster.",
-)
-def near_dedup_canonical_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    # clusters has two consumers (member counts + the canonical
-    # semi-join): without a persist EACH branch re-executes the whole
-    # pair-graph + connected-components subtree — the r8 judge audit
-    # measured the un-persisted composition at 34 shuffles. Persist is
-    # caller-owned plan-keyed (same policy as the gram index); the
-    # relation is one (doc_id, cluster_id) row per document.
-    clusters = C.near_dup_clusters(
-        docs, D.ngram_jaccard_pairs(docs)
-    ).persist()
-    sizes = clusters.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    kept = C.keep_canonical(docs, clusters).select("doc_id")
-    return kept.join(
-        sizes, kept["doc_id"] == sizes["cluster_id"]
-    ).select("doc_id", "n_members")
-
-
-def _redact_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import PII_PATTERNS
-
-    sql = "WITH t0 AS (SELECT doc_id, text AS s0 FROM documents)"
-    prev = "t0"
-    counts = []
-    for i, (name, pat, repl) in enumerate(PII_PATTERNS):
-        lit = pat.replace("'", "''")
-        carried = ", ".join(counts) + (", " if counts else "")
-        sql += f""",
-    t{i + 1} AS (SELECT doc_id, {carried}
-              CAST(len(regexp_extract_all(s{i}, '{lit}')) AS BIGINT)
-                  AS n_{name},
-              regexp_replace(s{i}, '{lit}', '{repl}', 'g') AS s{i + 1}
-       FROM {prev})"""
-        counts.append(f"n_{name}")
-        prev = f"t{i + 1}"
-    cols = ", ".join(counts)
-    return f"{sql}\n    SELECT doc_id, {cols}, s{len(PII_PATTERNS)} AS clean_text FROM {prev}"
-
-
-@q(
-    "redact_pii_docs",
-    _redact_oracle(),
-    "Corpus-hygiene scrub: emails / SSNs / IPv4s / phone runs become "
-    "typed placeholders with auditable per-type span counts, applied "
-    "as an ordered chain of JVM regexp projections; the oracle "
-    "replays the exact same chain (operators/text.py:redact_pii).",
-)
-def redact_pii_docs_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.redact_pii(docs).select(
-        "doc_id", "n_email", "n_ssn", "n_ipv4", "n_phone", "clean_text"
-    )
-
-
-@q(
-    "vocab_top_terms",
-    f"""
-    WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
-    terms AS (
-        SELECT doc_id, unnest(string_split(t, ' ')) AS term FROM norm
-    )
-    SELECT term, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM terms WHERE term <> ''
-    GROUP BY term ORDER BY n_occurrences DESC, term LIMIT 100
-    """,
-    "Corpus vocabulary: top-100 terms by occurrence (tie-broken "
-    "lexically) with document frequency — wordcount shape, map-side "
-    "combine + TakeOrdered (operators/text.py:vocabulary).",
-)
-def vocab_top_terms_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        X.vocabulary(docs)
-        .orderBy(F.col("n_occurrences").desc(), "term")
-        .limit(100)
-    )
-
-
-@q(
-    "tfidf_top_terms",
-    f"""
-    WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
-    terms AS (
-        SELECT doc_id, unnest(string_split(t, ' ')) AS term FROM norm
-    ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM terms WHERE term <> '' GROUP BY doc_id, term
-    ),
-    dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    n AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM documents),
-    scored AS (
-        SELECT doc_id, tf.term, tf, df,
-               round(tf * (ln(CAST(nd + 1 AS DOUBLE)
-                              / CAST(df + 1 AS DOUBLE)) + 1.0), 6) AS tfidf
-        FROM tf JOIN dfreq USING (term) CROSS JOIN n
-    ),
-    r AS (
-        SELECT *, row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY tfidf DESC, term) AS rank
-        FROM scored
-    )
-    SELECT doc_id, term, tf, df, tfidf, CAST(rank AS BIGINT) AS rank
-    FROM r WHERE rank <= 5
-    """,
-    "Top-5 characteristic terms per document by smoothed TF-IDF "
-    "(round-6 absorbs cross-libm ln ulp drift); WindowGroupLimit "
-    "pushes the per-doc cut map-side "
-    "(operators/text.py:tfidf_top_terms).",
-)
-def tfidf_top_terms_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.tfidf_top_terms(docs, k=5)
-
-
-# Domain mixture: heavy on src0, moderate src1-3, light everything else
-_MIX_FRACTIONS = {"src0": 0.9, "src1": 0.5, "src2": 0.5, "src3": 0.5}
-_MIX_DEFAULT = 0.1
-
-
-def _mix_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import hex_threshold
-
-    cases = " ".join(
-        f"WHEN source = '{s}' THEN '{hex_threshold(f)}'"
-        for s, f in sorted(_MIX_FRACTIONS.items())
-    )
-    return f"""
-    SELECT doc_id, source
-    FROM documents
-    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-          < (CASE {cases} ELSE '{hex_threshold(_MIX_DEFAULT)}' END)
-    """
-
-
-@q(
-    "domain_mixture_sample",
-    _mix_oracle(),
-    "Domain mixture weighting: per-source deterministic hash "
-    "sampling (keep 90% of src0, 50% of src1-3, 10% of the rest) — "
-    "membership is a pure id-hash filter, stable across runs and "
-    "monotone in the fraction so dataset versions nest "
-    "(operators/sampling.py:stratified_hash_sample).",
-)
-def domain_mixture_sample_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return stratified_hash_sample(
-        docs, _MIX_FRACTIONS, default_fraction=_MIX_DEFAULT
-    ).select("doc_id", "source")
-
-
-@q(
-    "text_repetition_scores",
-    """
-    WITH words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), g AS (
-      SELECT doc_id,
-        list_transform(generate_series(1, len(w)-1),
-                       i -> array_to_string(w[i:i+1], ' ')) AS g2,
-        list_transform(generate_series(1, len(w)-2),
-                       i -> array_to_string(w[i:i+2], ' ')) AS g3
-      FROM words
-    )
-    SELECT doc_id,
-      len(g2) AS ngrams_2, len(list_distinct(g2)) AS distinct_2,
-      CASE WHEN len(g2) = 0 THEN 0 ELSE CAST(floor(
-        (1.0 - CAST(len(list_distinct(g2)) AS DOUBLE)/len(g2))*1e6) AS BIGINT)
-      END AS dup_fp_2,
-      len(g3) AS ngrams_3, len(list_distinct(g3)) AS distinct_3,
-      CASE WHEN len(g3) = 0 THEN 0 ELSE CAST(floor(
-        (1.0 - CAST(len(list_distinct(g3)) AS DOUBLE)/len(g3))*1e6) AS BIGINT)
-      END AS dup_fp_3
-    FROM g
-    """,
-    "Within-document duplicate-n-gram repetition fractions "
-    "(Gopher-style quality signal) for n=2,3 — fixed-point integers, "
-    "exact cross-engine (operators/text.py:with_repetition_scores).",
-)
-def text_repetition_scores_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        with_repetition_scores,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return with_repetition_scores(docs).select(
-        "doc_id",
-        "ngrams_2",
-        "distinct_2",
-        "dup_fp_2",
-        "ngrams_3",
-        "distinct_3",
-        "dup_fp_3",
-    )
-
-
-@q(
-    "corpus_shuffle_order",
-    """
-    WITH h AS (
-      SELECT doc_id,
-             md5('s1:' || CAST(doc_id AS VARCHAR)) AS hkey
-      FROM documents
-    ), s AS (
-      SELECT doc_id, hkey,
-             CAST(floor(CAST(CAST('0x' || substr(hkey, 1, 4) AS INTEGER)
-                             AS DOUBLE) * 16 / 65536) AS INTEGER) AS shard
-      FROM h
-    )
-    SELECT doc_id, shard,
-           CAST(ROW_NUMBER() OVER (PARTITION BY shard
-                                   ORDER BY hkey, doc_id) AS BIGINT) AS pos
-    FROM s
-    """,
-    "Reproducible global corpus shuffle: seeded hash → range-binned "
-    "shard + within-shard rank, no global sort "
-    "(operators/sampling.py:deterministic_shuffle).",
-)
-def corpus_shuffle_order_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        deterministic_shuffle,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return deterministic_shuffle(docs, seed="s1", num_shards=16).select(
-        "doc_id", "shard", "pos"
-    )
-
-
-@q(
     "centroid_label_confusion",
     """
     WITH q AS (
@@ -2224,96 +1681,6 @@ def centroid_label_confusion_q(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     return nearest_centroid_classify(emb)
-
-
-def _curation_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import hex_threshold
-
-    cases = " ".join(
-        f"WHEN source = '{s}' THEN '{hex_threshold(f)}'"
-        for s, f in sorted(_MIX_FRACTIONS.items())
-    )
-    val_hi = hex_threshold(0.1)
-    test_hi = hex_threshold(0.2)
-    return f"""
-    WITH qual AS ({_quality_oracle_sql()}),
-    keep AS (
-      SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5({_NORM_SQL})
-    ),
-    base AS (
-      SELECT d.doc_id, d.source, q.quality_score,
-             substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) AS h
-      FROM documents d JOIN qual q USING (doc_id)
-      WHERE q.quality_score >= 0.55
-        AND d.doc_id IN (SELECT doc_id FROM keep)
-    )
-    SELECT doc_id, source, quality_score,
-           CASE WHEN h < '{val_hi}' THEN 'val'
-                WHEN h < '{test_hi}' THEN 'test'
-                ELSE 'train' END AS split
-    FROM base
-    WHERE h < (CASE {cases} ELSE '{hex_threshold(_MIX_DEFAULT)}' END)
-    """
-
-
-@q(
-    "curate_training_corpus",
-    _curation_oracle(),
-    "End-to-end corpus curation: quality filter (score >= 0.55) -> "
-    "exact dedup (normalized-md5, keep lowest id) -> domain mixture "
-    "sampling -> train/val/test split — the operators composed as a "
-    "user would run them; every stage stays a pushdown-friendly "
-    "filter/semi-join, no extra shuffles beyond the dedup's one.",
-)
-def curate_training_corpus_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        stratified_hash_sample,
-        with_split,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    scored = X.with_quality_score(docs).filter(F.col("quality_score") >= 0.55)
-    deduped = D.exact_dedup(scored, text_col="text", id_col="doc_id")
-    mixed = stratified_hash_sample(
-        deduped, _MIX_FRACTIONS, default_fraction=_MIX_DEFAULT
-    )
-    return with_split(mixed).select(
-        "doc_id", "source", "quality_score", "split"
-    )
-
-
-@q(
-    "unigram_logprob_scores",
-    r"""
-    WITH norm AS (
-      SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-      FROM documents
-    ), terms AS (
-      SELECT doc_id, unnest(string_split(t, ' ')) AS term
-      FROM norm WHERE t <> ''
-    ), vocab AS (
-      SELECT term, count(*) AS c FROM terms GROUP BY 1
-    ), tot AS (
-      SELECT sum(c) AS n FROM vocab
-    ), lp AS (
-      SELECT term, CAST(floor(ln(CAST(c AS DOUBLE)/n) * 1e6) AS BIGINT) AS lq
-      FROM vocab, tot
-    )
-    SELECT t.doc_id,
-           CAST(count(*) AS BIGINT) AS n_terms,
-           CAST(SUM(lq) AS BIGINT) AS sum_lq,
-           CAST(SUM(lq) AS DOUBLE) / 1e6 / count(*) AS mean_logprob
-    FROM terms t JOIN lp USING (term)
-    GROUP BY t.doc_id
-    """,
-    "Mean unigram log-probability per document (perplexity-proxy "
-    "quality filter): corpus-trained unigram LM, integer micro-nat "
-    "quantization keeps the sum engine-exact "
-    "(operators/text.py:unigram_logprob).",
-)
-def unigram_logprob_scores_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.unigram_logprob(docs)
 
 
 @q(
@@ -2381,68 +1748,6 @@ def cdc_schema_drift_q(spark, sf_dir):
     return schema_drift_report(
         wire, ["event_id", "user_id", "event_type", "value"]
     )
-
-
-@q(
-    "source_overlap_matrix",
-    f"""
-    WITH all_docs AS (
-      SELECT doc_id, text, source FROM documents
-      UNION ALL
-      SELECT doc_id + 100000 AS doc_id, text, 'srcX' AS source
-      FROM documents WHERE doc_id % 10 = 0
-    ),
-    fps AS (
-      SELECT DISTINCT source, md5({_NORM_SQL}) AS fp FROM all_docs
-    )
-    SELECT a.source AS source_a, b.source AS source_b,
-           CAST(count(*) AS BIGINT) AS n_shared
-    FROM fps a JOIN fps b ON a.fp = b.fp AND a.source < b.source
-    GROUP BY 1, 2
-    """,
-    "Cross-source exact-duplicate overlap matrix (corpus forensics: "
-    "mirror crawls / re-scraped dumps). Input is documents ∪ a "
-    "re-sourced copy of every 10th doc so the matrix is non-trivial "
-    "on the fixture (operators/dedup.py:source_overlap_matrix — "
-    "one fp-keyed shuffle, source-set pair explode, no self-join).",
-)
-def source_overlap_matrix_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    planted = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        "text",
-        F.lit("srcX").alias("source"),
-    )
-    return D.source_overlap_matrix(docs.unionByName(planted))
-
-
-@q(
-    "balanced_domain_sample",
-    """
-    WITH ranked AS (
-      SELECT doc_id, source,
-             ROW_NUMBER() OVER (
-               PARTITION BY source
-               ORDER BY md5('cap1:' || CAST(doc_id AS VARCHAR)), doc_id
-             ) AS rk
-      FROM documents
-    )
-    SELECT doc_id, source FROM ranked WHERE rk <= 20
-    """,
-    "Balanced sampling: keep at most 20 docs per source, chosen by "
-    "seeded content-hash rank — the exact per-class cap that "
-    "fraction sampling can't guarantee under skew; WindowGroupLimit "
-    "cuts map-side (operators/sampling.py:per_stratum_cap).",
-)
-def balanced_domain_sample_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        per_stratum_cap,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return per_stratum_cap(docs, 20, seed="cap1").select("doc_id", "source")
 
 
 @q(
@@ -2642,38 +1947,6 @@ def cdc_state_as_of_q(spark, sf_dir):
         F.col("ts").alias("last_ts"),
         F.col("value").alias("last_value"),
     )
-
-
-@q(
-    "edit_distance_pairs",
-    f"""
-    WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
-    w AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(ws, i, i + 2), ' ') AS g
-        FROM w, UNNEST(generate_series(1, greatest(len(ws) - 2, 1))) AS s(i)
-    ),
-    cand AS (
-        SELECT ga.doc_id AS id_a, gb.doc_id AS id_b
-        FROM grams ga JOIN grams gb
-          ON ga.g = gb.g AND ga.doc_id < gb.doc_id
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 5
-    )
-    SELECT id_a, id_b, levenshtein(na.t, nb.t) AS edit_dist
-    FROM cand JOIN norm na ON na.doc_id = id_a
-              JOIN norm nb ON nb.doc_id = id_b
-    WHERE abs(len(na.t) - len(nb.t)) <= 32
-      AND levenshtein(na.t, nb.t) <= 32
-    """,
-    "Near-dup pairs verified by exact Levenshtein distance ≤ 32: "
-    "df-capped inverted-index blocking (≥5 shared word-3-grams), "
-    "length prefilter, threshold-banded DP. Integer-exact oracle.",
-)
-def edit_distance_pairs_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.edit_distance_pairs(docs)
 
 
 @q(
@@ -3203,34 +2476,6 @@ _QUARANTINE_CHECKS = {
 
 
 @q(
-    "quality_weighted_sample",
-    None,  # the Efraimidis-Spirakis key uses ln() of a hash-derived
-    # uniform — ln carries no cross-engine correctly-rounded
-    # guarantee, so the top-k boundary can't be oracle-gated;
-    # determinism/bias/exclusion properties proven in
-    # tests/test_sampling.py
-    "Quality-weighted corpus subsample without replacement "
-    "(operators/sampling.py:weighted_sample — Efraimidis-Spirakis "
-    "2006 with hash-derived uniforms): inclusion probability "
-    "proportional to the document's quality score, fully "
-    "deterministic per salt, layout-invariant. Plan: narrow "
-    "projection + TakeOrderedAndProject — no shuffle, top-k never "
-    "concentrates the corpus.",
-)
-def quality_weighted_sample_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        weighted_sample,
-    )
-
-    docs = X.with_quality_score(load_table(spark, sf_dir, "documents"))
-    return weighted_sample(
-        docs.select("doc_id", "quality_score"),
-        100,
-        weight_col="quality_score",
-    )
-
-
-@q(
     "weekly_value_quantiles_from_sketches",
     None,  # xxhash64 row sampling isn't SQL-mirrorable (minhash
     # precedent); mergeability is EXACT and asserted in
@@ -3322,40 +2567,6 @@ def error_then_purchase_sessions_q(spark, sf_dir):
         "user_id", F.col("session_idx").cast("long").alias("session_idx"),
         "n_events",
     )
-
-
-@q(
-    "temperature_mixture_sample",
-    """
-    WITH c AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
-    m AS (SELECT MIN(n) AS nmin FROM c),
-    f AS (
-        SELECT c.source,
-               printf('%04x', CAST(least(floor(
-                   sqrt(CAST(m.nmin AS DOUBLE) / CAST(c.n AS DOUBLE))
-                   * 65536), 65535) AS BIGINT)) AS thr
-        FROM c, m
-    )
-    SELECT d.doc_id, d.source
-    FROM documents d JOIN f ON d.source = f.source
-    WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < f.thr
-    """,
-    "Temperature-0.5 domain mixture (mT5/XLM-R rebalancing rule: "
-    "sample domain d proportional to n_d^alpha, smallest domain kept "
-    "whole — operators/sampling.py:temperature_mixture). Fractions "
-    "are sqrt(n_min/n_d): one exact IEEE division + one correctly-"
-    "rounded sqrt, so the oracle reproduces every 4-hex-digit "
-    "membership threshold bit-for-bit. One COUNT per domain reaches "
-    "the driver (bounded by domain count); the sample itself is the "
-    "shuffle-free monotone id-hash filter.",
-)
-def temperature_mixture_sample_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        temperature_mixture,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return temperature_mixture(docs, alpha=0.5)
 
 
 @q(
@@ -3457,90 +2668,6 @@ def cdc_rate_anomalies_q(spark, sf_dir):
     )
 
 
-@q(
-    "upsample_code_math_mixture",
-    """
-    WITH w AS (
-        SELECT d.*,
-               CASE source WHEN 'src1' THEN 2.5
-                           WHEN 'src2' THEN 0.5
-                           ELSE 1.0 END AS wgt,
-               CAST(('0x' || substr(md5('#' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) / 4294967296.0 AS u
-        FROM documents d
-    ),
-    n AS (
-        SELECT doc_id, source, n_chars,
-               CAST(floor(wgt) + CASE WHEN u < wgt - floor(wgt)
-                                      THEN 1 ELSE 0 END AS INT) AS n_copies
-        FROM w
-    )
-    SELECT doc_id, source, n_chars, CAST(o.off AS INT) AS copy_idx
-    FROM n CROSS JOIN (SELECT unnest(generate_series(1, 3)) AS off) o
-    WHERE n.n_copies > 0 AND o.off <= n.n_copies
-    """,
-    "Mixture UPSAMPLING (weights > 1 duplicate rows): src1 ×2.5, "
-    "src2 ×0.5, rest ×1 — floor(w) copies plus one more when the "
-    "row's seeded md5-uniform < frac(w). Pure map-side explode, no "
-    "RNG, reproducible multiset with copy_idx lineage "
-    "(operators/sampling.py:upsample_mixture).",
-)
-def upsample_code_math_mixture_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        upsample_mixture,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    return upsample_mixture(docs, {"src1": 2.5, "src2": 0.5})
-
-
-@q(
-    "contrastive_negative_samples",
-    """
-    WITH b AS (
-        SELECT doc_id, md5(':' || CAST(doc_id AS VARCHAR)) AS hkey
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, hkey,
-               CAST(floor(CAST(('0x' || substr(hkey, 1, 4)) AS BIGINT)
-                          * 16 / 65536) AS INT) AS shard
-        FROM b
-    ),
-    r AS (
-        SELECT doc_id, shard,
-               CAST(row_number() OVER (PARTITION BY shard
-                                       ORDER BY hkey, doc_id) AS BIGINT) AS rnk,
-               CAST(COUNT(*) OVER (PARTITION BY shard) AS BIGINT) AS sz
-        FROM s
-    ),
-    a AS (
-        SELECT r.doc_id AS anchor_id, r.shard, r.rnk, r.sz,
-               CAST(o.off AS BIGINT) AS neg_rank
-        FROM r CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS off) o
-        WHERE o.off <= r.sz - 1
-    )
-    SELECT a.anchor_id, a.neg_rank, p.doc_id AS negative_id
-    FROM a JOIN r p ON p.shard = a.shard
-                   AND p.rnk = ((a.rnk - 1 + a.neg_rank) % a.sz) + 1
-    """,
-    "Deterministic contrastive negatives: k=4 pseudo-random partners "
-    "per anchor from a seeded md5 permutation, paired cyclically "
-    "WITHIN hash shards — one shard exchange, co-partitioned "
-    "self-join, no RNG, no self-pairs, every doc serves as negative "
-    "for exactly k others (operators/sampling.py:negative_samples).",
-)
-def contrastive_negative_samples_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        negative_samples,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return negative_samples(docs, id_col="doc_id", k=4, num_shards=16)
-
-
 def _bm25_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.search import bm25_oracle_sql
 
@@ -3633,113 +2760,6 @@ def phrase_search_docs_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return phrase_search(docs, _PHRASE)
-
-
-@q(
-    "ngram_containment_pairs",
-    r"""
-    WITH norm AS (
-        SELECT doc_id,
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-        FROM documents
-    ),
-    dw AS (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               CASE WHEN len(ws) < 3 THEN array_to_string(ws, ' ')
-                    ELSE array_to_string(list_slice(ws, i, i + 2), ' ')
-               END AS g
-        FROM dw, UNNEST(generate_series(1, greatest(len(ws) - 2, 1))) AS s(i)
-    ),
-    gdf AS (SELECT g FROM grams GROUP BY g HAVING COUNT(*) <= 10000),
-    ok AS (SELECT grams.* FROM grams JOIN gdf USING (g)),
-    sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz
-              FROM ok GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(COUNT(*) AS BIGINT) AS inter
-        FROM ok a JOIN ok b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    pairsized AS (
-        SELECT id_a, id_b, inter, sa.sz AS sz_a, sb.sz AS sz_b
-        FROM inter JOIN sizes sa ON sa.doc_id = id_a
-                   JOIN sizes sb ON sb.doc_id = id_b
-    ),
-    directed AS (
-        SELECT id_a AS contained_id, id_b AS container_id,
-               round(CAST(inter AS DOUBLE) / sz_a, 6) AS containment,
-               round(CAST(inter AS DOUBLE) / (sz_a + sz_b - inter), 6) AS jaccard
-        FROM pairsized
-        UNION ALL
-        SELECT id_b, id_a,
-               round(CAST(inter AS DOUBLE) / sz_b, 6),
-               round(CAST(inter AS DOUBLE) / (sz_a + sz_b - inter), 6)
-        FROM pairsized
-    )
-    SELECT * FROM directed WHERE containment >= 0.8
-    """,
-    "ASYMMETRIC near-duplication — Jaccard containment |A∩B|/|A| "
-    "(quote/subsumption detection: a short doc fully quoted inside a "
-    "long one scores C≈1.0 while symmetric J stays tiny, invisible to "
-    "near-dup dedup; subsumed docs are pure repetition for training "
-    "data). Shared inverted-index machinery with ngram_jaccard_pairs; "
-    "intersections computed once per unordered pair, both directed "
-    "ratios are a projection (operators/dedup.py:"
-    "ngram_containment_pairs).",
-)
-def ngram_containment_pairs_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_containment_pairs(docs, threshold=0.8)
-
-
-@q(
-    "bigram_collocations",
-    """
-    WITH dw AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                           x -> x <> '') AS ws
-        FROM documents
-    ),
-    toks AS (
-        SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ws[i] AS term
-        FROM dw, UNNEST(generate_series(1, len(ws))) AS s(i)
-    ),
-    uni AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY term),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM toks),
-    bi AS (
-        SELECT term AS term_a,
-               lead(term, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS term_b
-        FROM toks
-    ),
-    pairs AS (
-        SELECT term_a, term_b, CAST(COUNT(*) AS BIGINT) AS pair_count
-        FROM bi WHERE term_b IS NOT NULL
-        GROUP BY term_a, term_b
-        HAVING COUNT(*) >= 5
-    )
-    SELECT term_a, term_b, pair_count,
-           ua.c AS c_a, ub.c AS c_b,
-           round(ln(CAST(pair_count * n.n AS DOUBLE)
-                    / CAST(ua.c * ub.c AS DOUBLE)), 6) AS pmi
-    FROM pairs
-    JOIN uni ua ON ua.term = term_a
-    JOIN uni ub ON ub.term = term_b
-    CROSS JOIN n
-    ORDER BY pmi DESC, term_a, term_b
-    LIMIT 50
-    """,
-    "Top-50 adjacent-bigram collocations by PMI (multiword-expression "
-    "mining / tokenizer-merge sanity signal): ln(c_ab*N/(c_a*c_b)) "
-    "over alnum token bigrams, round-6 absorbing libm drift, "
-    "pair_count >= 5 flooring PMI's low-frequency bias; every "
-    "exchange carries fixed-width token rows, top-k compiles to "
-    "TakeOrderedAndProject (operators/text.py:collocations).",
-)
-def bigram_collocations_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.collocations(docs, min_count=5, top_k=50)
 
 
 _PROX = ("stream", "hash", 4)
@@ -5340,59 +4360,6 @@ def events_value_outliers_q(spark, sf_dir):
 
 
 @q(
-    "boilerplate_line_removal",
-    """
-    WITH raw AS (
-      SELECT doc_id, string_split(text, chr(10)) AS arr FROM documents
-    ),
-    l AS (
-      SELECT doc_id, s.i AS pos, trim(arr[s.i]) AS line
-      FROM raw, UNNEST(generate_series(1, len(arr))) s(i)
-      WHERE trim(arr[s.i]) <> ''
-    ),
-    ldf AS (
-      SELECT line, COUNT(*) AS _df
-      FROM (SELECT DISTINCT line, doc_id FROM l) GROUP BY line
-    ),
-    kept AS (
-      SELECT l.* FROM l
-      WHERE l.line NOT IN (SELECT line FROM ldf WHERE _df >= 2)
-    ),
-    reb AS (
-      SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_lines_kept
-      FROM kept GROUP BY doc_id
-    ),
-    tot AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM l GROUP BY doc_id)
-    SELECT d.doc_id,
-           COALESCE(reb.clean_text, '') AS clean_text,
-           CAST(COALESCE(reb.n_lines_kept, 0) AS BIGINT) AS n_lines_kept,
-           CAST(COALESCE(tot.n, 0) - COALESCE(reb.n_lines_kept, 0) AS BIGINT)
-               AS n_lines_removed
-    FROM documents d
-    LEFT JOIN reb ON d.doc_id = reb.doc_id
-    LEFT JOIN tot ON d.doc_id = tot.doc_id
-    """,
-    "Corpus-level line dedup / boilerplate removal (operators/text.py:"
-    "remove_boilerplate_lines, the RefinedWeb-style preprocessing the "
-    "document-level dedups can't express): lines appearing in >= "
-    "min_df distinct documents strip everywhere, remaining lines "
-    "reassemble in order. Skew-aware by construction — boilerplate "
-    "lines are the corpus's hottest keys, so document frequency is "
-    "computed distinct-(line,doc)-first (hot lines spread across "
-    "partitions) before the map-side-combinable count; reassembly is "
-    "one groupBy(doc) with an order-restoring array_sort, no window. "
-    "The fixture corpus has no cross-document lines (every df = 1), "
-    "so this oracle checks the full split/count/filter/reassemble "
-    "pipeline as an identity-modulo-trim transform; planted-"
-    "boilerplate semantics are covered in tests/test_boilerplate.py.",
-)
-def boilerplate_line_removal_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return X.remove_boilerplate_lines(docs, min_df=2)
-
-
-@q(
     "heavy_hitter_event_types",
     """
     WITH base AS (SELECT event_type FROM events WHERE event_type IS NOT NULL),
@@ -5463,72 +4430,6 @@ def winsorized_order_prices_q(spark, sf_dir):
         orders, "o_orderpriority", "o_totalprice",
         keep_cols=["o_orderpriority", "o_orderkey"],
     )
-
-
-@q(
-    "temporal_split_events",
-    """
-    SELECT user_id, event_id,
-           CASE WHEN row_number() OVER (PARTITION BY user_id
-                                        ORDER BY ts DESC, event_id DESC) <= 2
-                THEN 'test' ELSE 'train' END AS split
-    FROM events
-    """,
-    "Per-key temporal holdout (operators/sampling.py:temporal_split): "
-    "each user's LAST 2 events by (ts, event_id) label test, the rest "
-    "train — the leakage-free evaluation split for sequential data "
-    "(a random/hash split leaks a key's future into training; a "
-    "single global cutoff date empties one side for keys active only "
-    "early/late). One key-partitioned window pass, single exchange, "
-    "deterministic tie-break.",
-)
-def temporal_split_events_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        temporal_split,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return temporal_split(
-        ev, "user_id", "ts", holdout_n=2, tie_col="event_id"
-    ).select("user_id", "event_id", "split")
-
-
-@q(
-    "doc_novelty_scores",
-    r"""
-    WITH w AS (
-      SELECT doc_id,
-             regexp_split_to_array(
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS ws
-      FROM documents
-    ),
-    g AS (
-      SELECT DISTINCT doc_id,
-             CASE WHEN len(ws) < 3 THEN array_to_string(ws, ' ')
-                  ELSE array_to_string(list_slice(ws, i, i + 2), ' ') END AS gr
-      FROM w, UNNEST(generate_series(1, greatest(len(ws) - 2, 1))) s(i)
-    ),
-    d AS (SELECT gr, COUNT(*) AS gdf FROM g GROUP BY gr)
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_grams,
-           CAST(SUM(CASE WHEN gdf = 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_unique_grams,
-           round(SUM(CASE WHEN gdf = 1 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6)
-               AS novelty
-    FROM g JOIN d USING (gr)
-    GROUP BY doc_id
-    """,
-    "Per-document n-gram novelty (operators/dedup.py:"
-    "ngram_novelty_scores): fraction of a doc's distinct word "
-    "3-grams appearing in no other document — the curation signal "
-    "separating original text from templated spam. Reuses "
-    "ngram_jaccard's persisted inverted index; gram df aggregates "
-    "map-side and joins back on the same key (reusable exchange); "
-    "the ratio is exact integer counts rendered once to double.",
-)
-def doc_novelty_scores_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_novelty_scores(docs)
 
 
 @q(
@@ -5703,25 +4604,6 @@ def window_value_funcs_q(spark, sf_dir):
         F.last("l_extendedprice").over(w_full).alias("last_price"),
         F.nth_value("l_extendedprice", 2).over(w_full).alias("second_price"),
     )
-
-
-@q(
-    "duplicated_char_spans",
-    None,  # winnowing anchors hash with Spark's xxhash64 — no DuckDB
-    # equivalent (same reason minhash is rows-only); span semantics
-    # proven in tests/test_duplicated_spans.py (planted cross-doc +
-    # within-doc duplicates, offset-shift invariance, island merge)
-    "Exact substring-duplication spans (Lee et al. 2022 exact-substr "
-    "dedup, winnowing-anchored — operators/dedup.py:duplicated_spans):"
-    " per-position char-gram hashes, content-defined argmin anchors "
-    "(offset-invariant, ≤ stride gap), corpus-wide gram counts, "
-    "semi-join back, per-doc island merge. Linear in corpus size by "
-    "construction — a million-fold boilerplate gram adds rows, never "
-    "pairs.",
-)
-def duplicated_char_spans_q(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.duplicated_spans(docs, gram_len=20, stride=10)
 
 
 @q(
@@ -7411,36 +6293,6 @@ def diversified_sample_hits_q(spark, sf_dir):
     )
 
 
-def _bigram_lp_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        bigram_logprob_oracle_sql,
-    )
-
-    return bigram_logprob_oracle_sql()
-
-
-@q(
-    "bigram_logprob_scores",
-    _bigram_lp_oracle(),
-    "Mean bigram log-probability per document — the order-aware "
-    "perplexity proxy (the CCNet/KenLM quality-filter shape at its "
-    "bigram core; unigram_logprob_scores is the order-blind "
-    "version): Laplace-smoothed bigram LM trained on the corpus "
-    "itself, per-bigram log-probs quantized to micro-nat longs "
-    "BEFORE the exact per-document sum. Spark materializes bigrams "
-    "IN-ROW from the token array (no positional self-join); the "
-    "oracle derives them via generate_subscripts + an ord+1 "
-    "self-join — different algorithms, identical results "
-    "(operators/text.py:bigram_logprob).",
-)
-def bigram_logprob_scores_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        bigram_logprob,
-    )
-
-    return bigram_logprob(load_table(spark, sf_dir, "documents"))
-
-
 def _collapse_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
         collapse_hits_oracle_sql,
@@ -7515,106 +6367,8 @@ def significant_text_hits_q(spark, sf_dir):
 
 
 # ===========================================================================
-# r14: published corpus-curation filters (Gopher rules, DSIR importance
-# weights, CCNet perplexity buckets) + OpenSearch change_point/rate aggs
+# r14: OpenSearch change_point/rate aggs
 # ===========================================================================
-
-_GOPHER_FLAG_COLS = (
-    "ok_word_count", "ok_mean_word_len", "ok_symbol_ratio",
-    "ok_alpha_words", "ok_stopwords", "ok_bullet_lines",
-    "ok_ellipsis_lines", "passes",
-)
-
-
-def _gopher_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        gopher_oracle_sql,
-    )
-
-    casts = ", ".join(
-        f"CAST({c} AS INTEGER) AS {c}" for c in _GOPHER_FLAG_COLS
-    )
-    return (
-        f"SELECT doc_id, n_words, {casts} FROM ({gopher_oracle_sql()})"
-    )
-
-
-@q(
-    "gopher_quality_flags",
-    _gopher_oracle(),
-    "Published Gopher quality-filter rules (Rae et al. 2021, App. A — "
-    "the thresholds RefinedWeb/Dolma reuse) as exact cross-multiplied "
-    "integer tests: word count, mean word length, symbol ratio, "
-    "alpha-word share, distinct-stopword presence, bullet/ellipsis "
-    "line shares. Pure narrow projection — no shuffle, no UDF "
-    "(operators/text.py:gopher_quality_flags).",
-)
-def gopher_quality_flags_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        gopher_quality_flags,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = gopher_quality_flags(docs)
-    return out.select(
-        "doc_id",
-        "n_words",
-        *[F.col(c).cast("int").alias(c) for c in _GOPHER_FLAG_COLS],
-    )
-
-
-def _dsir_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        dsir_oracle_sql,
-    )
-
-    return dsir_oracle_sql(target_sql="lang = 'en'")
-
-
-@q(
-    "dsir_importance_weights",
-    _dsir_oracle(),
-    "DSIR importance weights (Xie et al. 2023): log p_target/p_raw "
-    "per document under hashed unigram+bigram multinomials (md5 "
-    "buckets, quantized-log exact BIGINT scoring) — the published "
-    "pretraining-data selection recipe; target = English docs. The "
-    "model is a constant ≤1024-row relation broadcast back to the "
-    "postings (operators/sampling.py:dsir_log_weights).",
-)
-def dsir_importance_weights_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
-        dsir_log_weights,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dsir_log_weights(docs, F.col("lang") == F.lit("en"))
-
-
-def _ccnet_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        ccnet_oracle_sql,
-    )
-
-    return ccnet_oracle_sql()
-
-
-@q(
-    "ccnet_perplexity_buckets",
-    _ccnet_oracle(),
-    "CCNet head/middle/tail quality buckets (Wenzek et al. 2020): "
-    "per-language unigram-LM scores (quantized micro-nats, portable "
-    "floor-division mean) cut at nearest-rank tertiles over the "
-    "per-lang DISTINCT-score distribution; the corpus relation only "
-    "CASEs against the broadcast cut table "
-    "(operators/text.py:ccnet_perplexity_buckets).",
-)
-def ccnet_perplexity_buckets_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        ccnet_perplexity_buckets,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ccnet_perplexity_buckets(docs)
 
 
 def _change_point_oracle() -> str:
@@ -7767,34 +6521,6 @@ def sampler_lang_facets_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     sample = bm25_search(docs, ["spark", "table", "row"], top_k=200)
     return sampler_agg(docs, sample, facet_col="lang")
-
-
-def _trigram_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        trigram_backoff_oracle_sql,
-    )
-
-    return trigram_backoff_oracle_sql()
-
-
-@q(
-    "trigram_backoff_scores",
-    _trigram_oracle(),
-    "Stupid-backoff trigram LM scoring (Brants et al. 2007): LM "
-    "trains on a deterministic md5 half of the corpus so held-out "
-    "docs genuinely exercise the λ-penalized backoff chain "
-    "(trigram → bigram → Laplace-floored unigram); per-trigram "
-    "scores quantize to micro-nat longs before the exact per-doc "
-    "sum; n-grams build in-row, model joins run at the "
-    "distinct-trigram grain (operators/text.py:trigram_backoff_scores).",
-)
-def trigram_backoff_scores_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        trigram_backoff_scores,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return trigram_backoff_scores(docs)
 
 
 def _rank_feature_oracle() -> str:
@@ -10264,57 +8990,6 @@ def search_request_highlight_q(spark, sf_dir):
 
 
 @q(
-    "char_entropy_docs",
-    """
-    WITH ch AS (
-        SELECT doc_id,
-               list_filter(
-                   regexp_extract_all(
-                       regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                      'g'),
-                       '.'),
-                   x -> x <> '') AS cs
-        FROM documents
-    ),
-    e AS (
-        SELECT doc_id, CAST(len(cs) AS BIGINT) AS n,
-               list_transform(
-                   list_distinct(cs),
-                   c -> CAST(len(list_filter(cs, x -> x = c))
-                             AS BIGINT)) AS ks
-        FROM ch WHERE len(cs) > 0
-    )
-    SELECT doc_id,
-           n AS n_chars_total,
-           CAST(- list_sum(list_transform(ks,
-               k -> k * CAST(floor(ln(CAST(k AS DOUBLE) / n) * 1000000)
-                             AS BIGINT))) AS BIGINT) AS entropy_q,
-           CAST(- list_sum(list_transform(ks,
-               k -> k * CAST(floor(ln(CAST(k AS DOUBLE) / n) * 1000000)
-                             AS BIGINT))) AS DOUBLE)
-               / CAST(n AS DOUBLE) / 1000000 AS char_entropy
-    FROM e
-    """,
-    "E256: per-document character-level Shannon entropy — the "
-    "compressibility quality signal (gibberish high, repeated "
-    "boilerplate low; both tails cut in published pipelines, the "
-    "zlib-ratio role without a codec dependency). Micro-nat "
-    "quantization (floor(ln(k/n)·1e6) as BIGINT) before the "
-    "weighted sum keeps the accumulation integer-exact; whitespace "
-    "normalizes first so both backends see one alphabet. Entirely "
-    "in-row column algebra — no explode, no shuffle, whole-stage "
-    "codegen end to end (operators/text.py:char_entropy).",
-)
-def char_entropy_docs_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.text import (
-        char_entropy,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return char_entropy(docs)
-
-
-@q(
     "search_request_suggest",
     """
     WITH tok AS (
@@ -10407,12 +9082,10 @@ _R17_WINDOW = [
     "intervals_search_docs",
     "count_request_docs",
     "search_request_highlight",
-    "char_entropy_docs",
     "search_request_suggest",
     # the ENTIRE 30-query r11 stale band (r16 verdict ask #2)
     "events_value_outliers",
     "ewma_user_value",
-    "exact_dedup_docs",
     "funnel_conversion",
     "fuzzy_search_docs",
     "grouped_quantiles_qty",
@@ -10431,9 +9104,7 @@ _R17_WINDOW = [
     "search_value_histogram",
     "skew_key_report",
     "table_checksums",
-    "temporal_split_events",
     "unpivot_lineitem_metrics",
-    "upsample_code_math_mixture",
     "user_last_value_features",
     "wildcard_search_docs",
     # oldest r12 band, alphabetical - 8 of 41; the remaining 33 r12
@@ -10447,6 +9118,10 @@ _R17_WINDOW = [
     "cdc_selection_filter",
     "cdc_dedup_replay",
     "cdc_schema_drift",
+    "cdc_scd2_history",
+    "cdc_state_as_of",
+    "cdc_snapshot_diff",
+    "cdc_backfill_reconcile",
 ]
 
 assert len(_R17_WINDOW) == 50, f"window must fill exactly 50 slots, got {len(_R17_WINDOW)}"

@@ -8,8 +8,8 @@ prints ONE JSON line::
 
 The driver captures only a bounded tail of stdout, so the printed line
 is a SLIM summary (headline per-query map + per-tier totals) and the
-complete payload — scale-tier per-query maps, sf10 probe — is
-written compactly to ``BENCH_LOCAL.json`` at the repo root
+complete payload — every timed draw and the scale tier's per-query
+maps — is written compactly to ``BENCH_LOCAL.json`` at the repo root
 (committed per-round; the stdout line carries its path in
 ``"full"``). r7's artifact lost the per-query map to the tail cap.
 
@@ -46,17 +46,12 @@ HEADLINE = (
     "window_rank_orders",
     "join_left_order_counts",
     "agg_cube_status_priority",
-    "exact_dedup_docs",
-    "minhash_lsh_pairs",
-    "text_quality_scores",
     "ann_brute_force_topk",
     "asof_purchase_last_visit",
     "sessionize_events",
     "label_centroids",
-    # heavier LLM-ops families (added r5 so round-over-round perf
-    # tracking covers the operators most likely to regress)
-    "tfidf_top_terms",
-    "near_dedup_canonical",
+    # added r5 so round-over-round perf tracking covers the
+    # operators most likely to regress
     "bm25_keyword_search",
     # r6: the materialized-token-index production paths (the ad-hoc
     # variants above stay benched so the index's win is measured)
@@ -106,22 +101,14 @@ HEADLINE = (
     "docs_string_stats",
     "events_t_test",
     "diversified_sample_hits",
-    # r13 late addition with a corpus-scale cost shape: the bigram-LM
-    # quality filter (token-pair model over the whole corpus)
-    "bigram_logprob_scores",
-    # r14 additions: the published curation filters (Gopher / DSIR /
-    # CCNet — one corpus-token pass each) and the OpenSearch ML-agg
-    # family (change_point / rate / KS / bucket_correlation — daily
-    # groupBys + bounded bucket windows)
-    "gopher_quality_flags",
-    "dsir_importance_weights",
-    "ccnet_perplexity_buckets",
+    # r14 additions: the OpenSearch ML-agg family (change_point /
+    # rate / KS / bucket_correlation — daily groupBys + bounded
+    # bucket windows)
     "events_change_point",
     "events_monthly_rate",
     "events_ks_test",
     "events_bucket_correlation",
     "sampler_lang_facets",
-    "trigram_backoff_scores",
     # r14 continuation: the new search-scoring single-pass shapes
     # (simple_query_string / dis_max — one tokenize with in-row
     # phrase counting), the exact market-basket agg (in-row pair
@@ -163,9 +150,9 @@ HEADLINE = (
 # (~0.3-0.5 s/stage constant vs sub-second work — PERF.md; the r13
 # row-group fix showed the old 4.6-7.3× ratios also leaned on a
 # fixture artifact that slowed DuckDB's scans — the honest sf1 star
-# ratios are ~12-17× against 50-90 ms denominators, amortizing per
-# decade: sf10 probe). 10× the rows amortizes
-# the floor and shows the ratio the plans actually extrapolate to.
+# ratios are ~12-17× against 50-90 ms denominators). 10× the rows
+# amortizes the floor and shows the ratio the plans actually
+# extrapolate to.
 SCALE_SUBSET = (
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -173,12 +160,6 @@ SCALE_SUBSET = (
     "topk_customers_by_revenue",
     "sessionize_events",
     "window_range_7day_spend",
-    # LLM-ops tier: the scaler now salts document replicas (no cross-
-    # replica shared shingles) and perturbs embedding replicas, so
-    # these measure a REAL 10× corpus, not a near-dup explosion
-    "exact_dedup_docs",
-    "minhash_lsh_pairs",
-    "tfidf_top_terms",
     "bm25_keyword_search",
     "bm25_keyword_search_indexed",
     "tfidf_top_terms_indexed",
@@ -215,6 +196,47 @@ def _duckdb_seconds(registry, names, sf_dir: str) -> dict[str, float]:
         con.execute(sql).fetchall()
         out[name] = round(time.time() - t0, 3)
     return out
+
+
+def _max_stage_id(spark) -> int:
+    """Highest stage id the session has allocated — stage ids are
+    monotonic, so a delta counts stages SUBMITTED between two
+    snapshots even after the status store evicts old entries (a
+    retained-count delta saturates at spark.ui.retainedStages)."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    store = sc._jsc.sc().statusStore()
+    stages = store.stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    it = stages.iterator()
+    mx = 0
+    while it.hasNext():
+        mx = max(mx, it.next().stageId())
+    return mx
+
+
+def _noop_floor_sec(spark, runs: int = 5) -> float:
+    """Measured per-stage scheduling floor: a 2-stage EMPTY-PLAN job
+    (1 row through one exchange, noop sink — no scan, no compute),
+    best-of-N, divided by its stage count. This is the fixed cost
+    local[32] charges every stage regardless of data; subtracting
+    floor x stage-count from a query's wall isolates its actual
+    scan+compute so the star-query ratios stop conflating the two
+    (r15 verdict ask #3: prove or retire the amortization story)."""
+    # 32 input partitions -> 32-task stages, the same task width the
+    # bench queries schedule (spark.sql.shuffle.partitions=32): a
+    # 2-task toy job understates the floor ~4x (task-launch cost
+    # scales with task count on local[32])
+    df = spark.range(0, 32, 1, 32).repartition(32)
+    df.write.format("noop").mode("overwrite").save()  # warm codegen
+    best = float("inf")
+    for _ in range(max(runs, 1)):
+        t0 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        best = min(best, time.time() - t0)
+    return best / 2.0
 
 
 def main() -> None:
@@ -277,10 +299,11 @@ def main() -> None:
             continue
         # Clear caches BETWEEN query families, never between the
         # runs of one family: operators that persist() intermediates
-        # (e.g. minhash shingle hashes) are keyed by logical plan, so
-        # the recorded runs legitimately reuse the warm run's
-        # cache — that reuse is the steady-state shape — while stale
-        # entries from other families don't accumulate over the sweep.
+        # (e.g. the ad-hoc BM25 token projection) are keyed by
+        # logical plan, so the recorded runs legitimately reuse the
+        # warm run's cache — that reuse is the steady-state shape —
+        # while stale entries from other families don't accumulate
+        # over the sweep.
         spark.catalog.clearCache()
         query_runs[name] = timed_runs(
             lambda: REGISTRY[name].fn(spark, sf_dir)
@@ -355,10 +378,7 @@ def main() -> None:
     if os.path.isdir(scale_dir):
         # measured per-stage scheduling floor + per-query submitted-
         # stage counts, so the sf1 tier publishes floor-corrected
-        # ratios beside raw ones exactly like the sf10 probe (the
-        # r15 verdict asked for both tiers)
-        from tools.bench_probe import _max_stage_id, _noop_floor_sec
-
+        # ratios beside raw ones
         floor = _noop_floor_sec(spark)
         spark_t: dict[str, float] = {}
         stages_n: dict[str, int] = {}
@@ -414,18 +434,6 @@ def main() -> None:
                 for n in common if duck_t[n]
             },
         }
-
-    # sf10 scale probe: dedup/text one decade past the scale tier
-    # (500 k docs, documents-only build off the clock) — candidate
-    # volume must grow linearly and walls stay disk-bound
-    # (tools/bench_probe.py); skip with SPARK_GRAFT_SKIP_PROBE=1
-    if not os.environ.get("SPARK_GRAFT_SKIP_PROBE"):
-        try:
-            from tools.bench_probe import run as probe_run
-
-            payload["scale_probe_sf10"] = probe_run(spark)
-        except Exception as e:  # optional tier — never fail the bench
-            print(f"sf10 probe skipped: {e}", file=sys.stderr)
 
     # full payload → committed artifact (self-contained, no tail cap);
     # stdout → one slim line the driver can always capture whole

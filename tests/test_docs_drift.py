@@ -112,3 +112,22 @@ def test_queries_md_header_counts_match_registry():
             assert gates[name] == "rows-only", name
         elif isinstance(qd.oracle_spec, str):
             assert gates[name] == "oracle", name
+
+
+def test_bench_query_names_are_registry_keys():
+    """bench.py looks each HEADLINE and SCALE_SUBSET name up in the
+    registry; a name whose entry was deleted makes ``bench.main()``
+    raise KeyError in the scale tier (HEADLINE skips it silently).
+    Loading bench.py only defines tuples — no session starts."""
+    import importlib.util
+
+    from aws_dms_cdc_data_pipeline_spark.plans.queries import REGISTRY
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    for tier in ("HEADLINE", "SCALE_SUBSET"):
+        unknown = [n for n in getattr(bench, tier) if n not in REGISTRY]
+        assert not unknown, f"bench.{tier} names unregistered queries: {unknown}"

@@ -108,8 +108,7 @@ def test_heavy_text_passes_fan_out_on_poorly_split_sources(spark, tmp_path):
     single-task scan from a single-row-group source. Each heavy
     operator's plan must contain the fan-out's ROUNDROBIN exchange
     when fed a 1-partition source big enough to matter (the source
-    estimates at ~1.3 MB, over both the 128 KB-per-partition bar the
-    shingling passes use and the default 1 MB bar of the tokenizing
+    estimates at ~1.3 MB, over the default 1 MB bar of the tokenizing
     passes) — if the guard's threshold or wiring regresses, this fails
     before a 30x serial stage ships."""
     from pyspark.sql import functions as F
@@ -126,12 +125,6 @@ def test_heavy_text_passes_fan_out_on_poorly_split_sources(spark, tmp_path):
     docs = spark.read.parquet(src)
     assert docs.rdd.getNumPartitions() == 1
 
-    from aws_dms_cdc_data_pipeline_spark.operators.dedup import (
-        duplicated_spans,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        simhash_pairs,
-    )
     from aws_dms_cdc_data_pipeline_spark.operators.lucene import (
         query_string_search,
     )
@@ -145,10 +138,6 @@ def test_heavy_text_passes_fan_out_on_poorly_split_sources(spark, tmp_path):
     )
 
     cases = {
-        "simhash": simhash_pairs(docs),
-        "duplicated_spans": duplicated_spans(docs),
-        "ngram_jaccard": ngram_jaccard_pairs(docs),
-        "minhash": minhash_lsh_pairs(docs),
         "tokenize": tokenize(docs, "text", "doc_id"),
         "bm25": bm25_search(docs, ["abc", "def"]),
         "positions": tokenize_positions(docs, "text", "doc_id"),

@@ -5,8 +5,8 @@ so plan claims are checkable without running Spark. Usage:
 
     python tools/dump_plans.py <suffix> <outdir> <query> [<query> ...]
 
-e.g. ``python tools/dump_plans.py after plans/r17 minhash_lsh_pairs``
-writes ``plans/r17/minhash_lsh_pairs_after.txt``. Runs at sf0.01 (plan
+e.g. ``python tools/dump_plans.py after plans/r18 termvectors_docs``
+writes ``plans/r18/termvectors_docs_after.txt``. Runs at sf0.01 (plan
 shape is scale-independent; AQE initial plans identical across sfs).
 """
 

@@ -67,22 +67,10 @@ import duckdb
 _COPY_AS_IS = ["region", "nation", "customer", "supplier", "part"]
 
 
-def build(
-    src: str,
-    dst: str,
-    factor: int,
-    min_token: int = 4,
-    tables: list[str] | None = None,
-) -> None:
-    """``tables=None`` builds the full directory; a list builds only
-    those tables (the sf10 probe scales documents alone — scaling the
-    60 M-row lineitem 100× for a text probe would waste minutes and a
-    GB per round)."""
+def build(src: str, dst: str, factor: int, min_token: int = 4) -> None:
+    """Write every table of ``src`` into ``dst``, facts scaled ``factor``×."""
     os.makedirs(dst, exist_ok=True)
     con = duckdb.connect()
-
-    def wanted(t: str) -> bool:
-        return tables is None or t in tables
 
     # Row-group size must satisfy BOTH scan pathologies:
     # - too FEW groups: a single-row-group file scans as ONE task no
@@ -109,16 +97,13 @@ def build(
         )
 
     for t in _COPY_AS_IS:
-        if wanted(t):
-            copy(f"SELECT * FROM read_parquet('{src}/{t}.parquet')", t)
+        copy(f"SELECT * FROM read_parquet('{src}/{t}.parquet')", t)
 
-    if wanted("orders") or wanted("lineitem"):
-        stride = con.execute(
-            f"SELECT MAX(o_orderkey) + 1 FROM read_parquet('{src}/orders.parquet')"
-        ).fetchone()[0]
+    stride = con.execute(
+        f"SELECT MAX(o_orderkey) + 1 FROM read_parquet('{src}/orders.parquet')"
+    ).fetchone()[0]
 
-    if wanted("orders"):
-        copy(
+    copy(
         f"""
         SELECT o_orderkey + r.i * {stride} AS o_orderkey,
                o_custkey, o_orderstatus, o_totalprice, o_orderdate,
@@ -127,9 +112,8 @@ def build(
         CROSS JOIN range({factor}) r(i)
         """,
         "orders",
-        )
-    if wanted("lineitem"):
-        copy(
+    )
+    copy(
         f"""
         SELECT l_orderkey + r.i * {stride} AS l_orderkey,
                l_partkey, l_suppkey, l_linenumber, l_quantity,
@@ -139,12 +123,11 @@ def build(
         CROSS JOIN range({factor}) r(i)
         """,
         "lineitem",
-        )
-    if wanted("events"):
-        ev_stride = con.execute(
-            f"SELECT MAX(event_id) + 1 FROM read_parquet('{src}/events.parquet')"
-        ).fetchone()[0]
-        copy(
+    )
+    ev_stride = con.execute(
+        f"SELECT MAX(event_id) + 1 FROM read_parquet('{src}/events.parquet')"
+    ).fetchone()[0]
+    copy(
         f"""
         SELECT event_id + r.i * {ev_stride} AS event_id,
                ts + INTERVAL (r.i) HOUR AS ts,
@@ -153,12 +136,11 @@ def build(
         CROSS JOIN range({factor}) r(i)
         """,
         "events",
-        )
-    if wanted("documents"):
-        doc_stride = con.execute(
-            f"SELECT MAX(doc_id) + 1 FROM read_parquet('{src}/documents.parquet')"
-        ).fetchone()[0]
-        copy(
+    )
+    doc_stride = con.execute(
+        f"SELECT MAX(doc_id) + 1 FROM read_parquet('{src}/documents.parquet')"
+    ).fetchone()[0]
+    copy(
         f"""
         SELECT doc_id + r.i * {doc_stride} AS doc_id,
                CASE WHEN r.i = 0 THEN text
@@ -174,12 +156,11 @@ def build(
         CROSS JOIN range({factor}) r(i)
         """,
         "documents",
-        )
-    if wanted("embeddings"):
-        vec_stride = con.execute(
-            f"SELECT MAX(vec_id) + 1 FROM read_parquet('{src}/embeddings.parquet')"
-        ).fetchone()[0]
-        copy(
+    )
+    vec_stride = con.execute(
+        f"SELECT MAX(vec_id) + 1 FROM read_parquet('{src}/embeddings.parquet')"
+    ).fetchone()[0]
+    copy(
         f"""
         SELECT vec_id + r.i * {vec_stride} AS vec_id,
                CASE WHEN r.i = 0 THEN embedding
@@ -191,13 +172,12 @@ def build(
         CROSS JOIN range({factor}) r(i)
         """,
         "embeddings",
-        )
+    )
     for t in ["orders", "lineitem", "events", "documents", "embeddings"]:
-        if wanted(t):
-            n = con.execute(
-                f"SELECT COUNT(*) FROM read_parquet('{dst}/{t}.parquet')"
-            ).fetchone()[0]
-            print(f"{t}: {n} rows")
+        n = con.execute(
+            f"SELECT COUNT(*) FROM read_parquet('{dst}/{t}.parquet')"
+        ).fetchone()[0]
+        print(f"{t}: {n} rows")
 
 
 if __name__ == "__main__":

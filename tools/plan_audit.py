@@ -11,9 +11,9 @@ toString: ``InMemoryTableScan`` is a genuine leaf node, so the
 cache-BUILD recipe printed under each ``InMemoryRelation`` is
 excluded exactly — earlier rounds' text-stripping leaked recipe
 bodies into the scan count because Spark prints the cached plan at a
-SHALLOWER indentation than the InMemoryRelation line itself (the r8
-"23 FileScans" for near_dedup_canonical was mostly recipe bodies;
-the tree has 3 executed parquet scans). ``ReusedExchange`` /
+SHALLOWER indentation than the InMemoryRelation line itself (an r8
+audit counted "23 FileScans" for a query whose tree has 3 executed
+parquet scans). ``ReusedExchange`` /
 ``ReusedSubquery`` are likewise leaves — reused work is not
 re-counted. Subquery plans hanging off expressions ARE walked (they
 execute). The warm numbers are therefore "work a second run of the
