@@ -2472,6 +2472,74 @@ def tokenize_positions(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def collocations(
+    df: DataFrame,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_count: int = 5,
+    top_k: int = 50,
+) -> DataFrame:
+    """Top-``top_k`` adjacent-bigram collocations by pointwise mutual
+    information — the corpus-analysis op behind multiword-expression
+    mining and tokenizer-merge sanity checks (which adjacent pairs
+    co-occur far beyond chance).
+
+    PMI = ln(c(ab)·N / (c(a)·c(b))) over ADJACENT alnum token pairs,
+    where c(a)/c(b) are corpus token counts and N the total token
+    count; rounded to 6 digits (the tfidf ln-rounding convention —
+    absorbs cross-engine libm ulp drift so the DuckDB oracle matches).
+    ``min_count`` floors c(ab): PMI's low-frequency bias makes
+    unfloored rankings hapax noise.
+
+    Shape: one positional pass builds bigrams with ``lead`` inside the
+    per-doc window (the same pruned-postings window machinery phrase
+    search uses, but unpruned — this is a corpus sweep by nature),
+    then three token-keyed aggregations; every exchange carries
+    fixed-width (id/token, pos/count) rows — never document text —
+    and top-k compiles to TakeOrderedAndProject.
+    """
+    from pyspark.sql import Window
+
+    # four consumers (two unigram join legs, the corpus total, the
+    # bigram window) would each re-run the tokenize+posexplode pass —
+    # persist under the caller-owned plan-keyed cache policy of the
+    # BM25 projection.
+    toks = tokenize_positions(df, text_col, id_col).persist()
+    uni = toks.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    n_tokens = toks.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    w = Window.partitionBy(id_col).orderBy("pos")
+    bi = (
+        toks.withColumn("_next", F.lead("term", 1).over(w))
+        .filter(F.col("_next").isNotNull())
+        .groupBy(
+            F.col("term").alias("term_a"), F.col("_next").alias("term_b")
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("pair_count"))
+        .filter(F.col("pair_count") >= min_count)
+    )
+    scored = (
+        bi.join(uni.select(F.col("term").alias("term_a"), F.col("c").alias("c_a")), "term_a")
+        .join(uni.select(F.col("term").alias("term_b"), F.col("c").alias("c_b")), "term_b")
+        .crossJoin(F.broadcast(n_tokens))
+        .withColumn(
+            "pmi",
+            F.round(
+                F.log(
+                    (F.col("pair_count") * F.col("n")).cast("double")
+                    / (F.col("c_a") * F.col("c_b")).cast("double")
+                ),
+                6,
+            ),
+        )
+    )
+    return (
+        scored.select("term_a", "term_b", "pair_count", "c_a", "c_b", "pmi")
+        .orderBy(F.col("pmi").desc(), "term_a", "term_b")
+        .limit(top_k)
+    )
+
+
 def phrase_search(
     docs: DataFrame,
     phrase: str,

@@ -1223,6 +1223,44 @@ def salted_supplier_qty(spark, sf_dir):
 
 
 @q(
+    "dataset_split_assignment",
+    """
+    SELECT doc_id,
+           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999'
+                     THEN 'val'
+                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '3333'
+                     THEN 'test'
+                ELSE 'train' END AS split
+    FROM documents
+    """,
+    "Deterministic train/val/test assignment from the id's md5 hex "
+    "prefix — reproducible across engines, partitionings, and corpus "
+    "versions (thresholds = hex_threshold(0.1), hex_threshold(0.2)).",
+)
+def dataset_split_assignment(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import with_split
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return with_split(docs, val_fraction=0.1, test_fraction=0.1)
+
+
+@q(
+    "hash_sample_quarter",
+    """
+    SELECT doc_id, n_chars FROM documents
+    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
+    """,
+    "Deterministic ~25% hash sample (membership from id hash alone; "
+    "df.sample would churn with partitioning).",
+)
+def hash_sample_quarter(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import hash_sample
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    return hash_sample(docs, 0.25)
+
+
+@q(
     "approx_distinct_users",
     None,  # HLL estimate is engine-specific by design
     "Approximate distinct (HyperLogLog) next to the exact count — "
@@ -1641,6 +1679,79 @@ def label_centroids(spark, sf_dir):
     )
 
 
+# Domain mixture: heavy on src0, moderate src1-3, light everything else
+_MIX_FRACTIONS = {"src0": 0.9, "src1": 0.5, "src2": 0.5, "src3": 0.5}
+_MIX_DEFAULT = 0.1
+
+
+def _mix_oracle() -> str:
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import hex_threshold
+
+    cases = " ".join(
+        f"WHEN source = '{s}' THEN '{hex_threshold(f)}'"
+        for s, f in sorted(_MIX_FRACTIONS.items())
+    )
+    return f"""
+    SELECT doc_id, source
+    FROM documents
+    WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
+          < (CASE {cases} ELSE '{hex_threshold(_MIX_DEFAULT)}' END)
+    """
+
+
+@q(
+    "domain_mixture_sample",
+    _mix_oracle(),
+    "Domain mixture weighting: per-source deterministic hash "
+    "sampling (keep 90% of src0, 50% of src1-3, 10% of the rest) — "
+    "membership is a pure id-hash filter, stable across runs and "
+    "monotone in the fraction so dataset versions nest "
+    "(operators/sampling.py:stratified_hash_sample).",
+)
+def domain_mixture_sample_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        stratified_hash_sample,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return stratified_hash_sample(
+        docs, _MIX_FRACTIONS, default_fraction=_MIX_DEFAULT
+    ).select("doc_id", "source")
+
+
+@q(
+    "corpus_shuffle_order",
+    """
+    WITH h AS (
+      SELECT doc_id,
+             md5('s1:' || CAST(doc_id AS VARCHAR)) AS hkey
+      FROM documents
+    ), s AS (
+      SELECT doc_id, hkey,
+             CAST(floor(CAST(CAST('0x' || substr(hkey, 1, 4) AS INTEGER)
+                             AS DOUBLE) * 16 / 65536) AS INTEGER) AS shard
+      FROM h
+    )
+    SELECT doc_id, shard,
+           CAST(ROW_NUMBER() OVER (PARTITION BY shard
+                                   ORDER BY hkey, doc_id) AS BIGINT) AS pos
+    FROM s
+    """,
+    "Reproducible global corpus shuffle: seeded hash → range-binned "
+    "shard + within-shard rank, no global sort "
+    "(operators/sampling.py:deterministic_shuffle).",
+)
+def corpus_shuffle_order_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        deterministic_shuffle,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return deterministic_shuffle(docs, seed="s1", num_shards=16).select(
+        "doc_id", "shard", "pos"
+    )
+
+
 @q(
     "centroid_label_confusion",
     """
@@ -1748,6 +1859,33 @@ def cdc_schema_drift_q(spark, sf_dir):
     return schema_drift_report(
         wire, ["event_id", "user_id", "event_type", "value"]
     )
+
+
+@q(
+    "balanced_domain_sample",
+    """
+    WITH ranked AS (
+      SELECT doc_id, source,
+             ROW_NUMBER() OVER (
+               PARTITION BY source
+               ORDER BY md5('cap1:' || CAST(doc_id AS VARCHAR)), doc_id
+             ) AS rk
+      FROM documents
+    )
+    SELECT doc_id, source FROM ranked WHERE rk <= 20
+    """,
+    "Balanced sampling: keep at most 20 docs per source, chosen by "
+    "seeded content-hash rank — the exact per-class cap that "
+    "fraction sampling can't guarantee under skew; WindowGroupLimit "
+    "cuts map-side (operators/sampling.py:per_stratum_cap).",
+)
+def balanced_domain_sample_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        per_stratum_cap,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return per_stratum_cap(docs, 20, seed="cap1").select("doc_id", "source")
 
 
 @q(
@@ -2570,6 +2708,40 @@ def error_then_purchase_sessions_q(spark, sf_dir):
 
 
 @q(
+    "temperature_mixture_sample",
+    """
+    WITH c AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
+    m AS (SELECT MIN(n) AS nmin FROM c),
+    f AS (
+        SELECT c.source,
+               printf('%04x', CAST(least(floor(
+                   sqrt(CAST(m.nmin AS DOUBLE) / CAST(c.n AS DOUBLE))
+                   * 65536), 65535) AS BIGINT)) AS thr
+        FROM c, m
+    )
+    SELECT d.doc_id, d.source
+    FROM documents d JOIN f ON d.source = f.source
+    WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < f.thr
+    """,
+    "Temperature-0.5 domain mixture (mT5/XLM-R rebalancing rule: "
+    "sample domain d proportional to n_d^alpha, smallest domain kept "
+    "whole — operators/sampling.py:temperature_mixture). Fractions "
+    "are sqrt(n_min/n_d): one exact IEEE division + one correctly-"
+    "rounded sqrt, so the oracle reproduces every 4-hex-digit "
+    "membership threshold bit-for-bit. One COUNT per domain reaches "
+    "the driver (bounded by domain count); the sample itself is the "
+    "shuffle-free monotone id-hash filter.",
+)
+def temperature_mixture_sample_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        temperature_mixture,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    return temperature_mixture(docs, alpha=0.5)
+
+
+@q(
     "lineitem_quarantine",
     f"""
     SELECT l_orderkey, l_linenumber, l_quantity, l_discount,
@@ -2668,6 +2840,90 @@ def cdc_rate_anomalies_q(spark, sf_dir):
     )
 
 
+@q(
+    "upsample_code_math_mixture",
+    """
+    WITH w AS (
+        SELECT d.*,
+               CASE source WHEN 'src1' THEN 2.5
+                           WHEN 'src2' THEN 0.5
+                           ELSE 1.0 END AS wgt,
+               CAST(('0x' || substr(md5('#' || CAST(doc_id AS VARCHAR)), 1, 8))
+                    AS BIGINT) / 4294967296.0 AS u
+        FROM documents d
+    ),
+    n AS (
+        SELECT doc_id, source, n_chars,
+               CAST(floor(wgt) + CASE WHEN u < wgt - floor(wgt)
+                                      THEN 1 ELSE 0 END AS INT) AS n_copies
+        FROM w
+    )
+    SELECT doc_id, source, n_chars, CAST(o.off AS INT) AS copy_idx
+    FROM n CROSS JOIN (SELECT unnest(generate_series(1, 3)) AS off) o
+    WHERE n.n_copies > 0 AND o.off <= n.n_copies
+    """,
+    "Mixture UPSAMPLING (weights > 1 duplicate rows): src1 ×2.5, "
+    "src2 ×0.5, rest ×1 — floor(w) copies plus one more when the "
+    "row's seeded md5-uniform < frac(w). Pure map-side explode, no "
+    "RNG, reproducible multiset with copy_idx lineage "
+    "(operators/sampling.py:upsample_mixture).",
+)
+def upsample_code_math_mixture_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        upsample_mixture,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
+    )
+    return upsample_mixture(docs, {"src1": 2.5, "src2": 0.5})
+
+
+@q(
+    "contrastive_negative_samples",
+    """
+    WITH b AS (
+        SELECT doc_id, md5(':' || CAST(doc_id AS VARCHAR)) AS hkey
+        FROM documents
+    ),
+    s AS (
+        SELECT doc_id, hkey,
+               CAST(floor(CAST(('0x' || substr(hkey, 1, 4)) AS BIGINT)
+                          * 16 / 65536) AS INT) AS shard
+        FROM b
+    ),
+    r AS (
+        SELECT doc_id, shard,
+               CAST(row_number() OVER (PARTITION BY shard
+                                       ORDER BY hkey, doc_id) AS BIGINT) AS rnk,
+               CAST(COUNT(*) OVER (PARTITION BY shard) AS BIGINT) AS sz
+        FROM s
+    ),
+    a AS (
+        SELECT r.doc_id AS anchor_id, r.shard, r.rnk, r.sz,
+               CAST(o.off AS BIGINT) AS neg_rank
+        FROM r CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS off) o
+        WHERE o.off <= r.sz - 1
+    )
+    SELECT a.anchor_id, a.neg_rank, p.doc_id AS negative_id
+    FROM a JOIN r p ON p.shard = a.shard
+                   AND p.rnk = ((a.rnk - 1 + a.neg_rank) % a.sz) + 1
+    """,
+    "Deterministic contrastive negatives: k=4 pseudo-random partners "
+    "per anchor from a seeded md5 permutation, paired cyclically "
+    "WITHIN hash shards — one shard exchange, co-partitioned "
+    "self-join, no RNG, no self-pairs, every doc serves as negative "
+    "for exactly k others (operators/sampling.py:negative_samples).",
+)
+def contrastive_negative_samples_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        negative_samples,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return negative_samples(docs, id_col="doc_id", k=4, num_shards=16)
+
+
 def _bm25_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.search import bm25_oracle_sql
 
@@ -2760,6 +3016,57 @@ def phrase_search_docs_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return phrase_search(docs, _PHRASE)
+
+
+@q(
+    "bigram_collocations",
+    """
+    WITH dw AS (
+        SELECT doc_id,
+               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+                           x -> x <> '') AS ws
+        FROM documents
+    ),
+    toks AS (
+        SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ws[i] AS term
+        FROM dw, UNNEST(generate_series(1, len(ws))) AS s(i)
+    ),
+    uni AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY term),
+    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM toks),
+    bi AS (
+        SELECT term AS term_a,
+               lead(term, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS term_b
+        FROM toks
+    ),
+    pairs AS (
+        SELECT term_a, term_b, CAST(COUNT(*) AS BIGINT) AS pair_count
+        FROM bi WHERE term_b IS NOT NULL
+        GROUP BY term_a, term_b
+        HAVING COUNT(*) >= 5
+    )
+    SELECT term_a, term_b, pair_count,
+           ua.c AS c_a, ub.c AS c_b,
+           round(ln(CAST(pair_count * n.n AS DOUBLE)
+                    / CAST(ua.c * ub.c AS DOUBLE)), 6) AS pmi
+    FROM pairs
+    JOIN uni ua ON ua.term = term_a
+    JOIN uni ub ON ub.term = term_b
+    CROSS JOIN n
+    ORDER BY pmi DESC, term_a, term_b
+    LIMIT 50
+    """,
+    "Top-50 adjacent-bigram collocations by PMI (multiword-expression "
+    "mining / tokenizer-merge sanity signal): ln(c_ab*N/(c_a*c_b)) "
+    "over alnum token bigrams, round-6 absorbing libm drift, "
+    "pair_count >= 5 flooring PMI's low-frequency bias; every "
+    "exchange carries fixed-width token rows, top-k compiles to "
+    "TakeOrderedAndProject (operators/search.py:collocations).",
+)
+def bigram_collocations_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.search import collocations
+
+    docs = load_table(spark, sf_dir, "documents")
+    return collocations(docs, min_count=5, top_k=50)
 
 
 _PROX = ("stream", "hash", 4)
@@ -4430,6 +4737,34 @@ def winsorized_order_prices_q(spark, sf_dir):
         orders, "o_orderpriority", "o_totalprice",
         keep_cols=["o_orderpriority", "o_orderkey"],
     )
+
+
+@q(
+    "temporal_split_events",
+    """
+    SELECT user_id, event_id,
+           CASE WHEN row_number() OVER (PARTITION BY user_id
+                                        ORDER BY ts DESC, event_id DESC) <= 2
+                THEN 'test' ELSE 'train' END AS split
+    FROM events
+    """,
+    "Per-key temporal holdout (operators/sampling.py:temporal_split): "
+    "each user's LAST 2 events by (ts, event_id) label test, the rest "
+    "train — the leakage-free evaluation split for sequential data "
+    "(a random/hash split leaks a key's future into training; a "
+    "single global cutoff date empties one side for keys active only "
+    "early/late). One key-partitioned window pass, single exchange, "
+    "deterministic tie-break.",
+)
+def temporal_split_events_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        temporal_split,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    return temporal_split(
+        ev, "user_id", "ts", holdout_n=2, tie_col="event_id"
+    ).select("user_id", "event_id", "split")
 
 
 @q(
@@ -6367,8 +6702,35 @@ def significant_text_hits_q(spark, sf_dir):
 
 
 # ===========================================================================
-# r14: OpenSearch change_point/rate aggs
+# r14: DSIR importance weights + OpenSearch change_point/rate aggs
 # ===========================================================================
+
+
+def _dsir_oracle() -> str:
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        dsir_oracle_sql,
+    )
+
+    return dsir_oracle_sql(target_sql="lang = 'en'")
+
+
+@q(
+    "dsir_importance_weights",
+    _dsir_oracle(),
+    "DSIR importance weights (Xie et al. 2023): log p_target/p_raw "
+    "per document under hashed unigram+bigram multinomials (md5 "
+    "buckets, quantized-log exact BIGINT scoring) — the published "
+    "pretraining-data selection recipe; target = English docs. The "
+    "model is a constant ≤1024-row relation broadcast back to the "
+    "postings (operators/sampling.py:dsir_log_weights).",
+)
+def dsir_importance_weights_q(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
+        dsir_log_weights,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return dsir_log_weights(docs, F.col("lang") == F.lit("en"))
 
 
 def _change_point_oracle() -> str:
@@ -9104,7 +9466,9 @@ _R17_WINDOW = [
     "search_value_histogram",
     "skew_key_report",
     "table_checksums",
+    "temporal_split_events",
     "unpivot_lineitem_metrics",
+    "upsample_code_math_mixture",
     "user_last_value_features",
     "wildcard_search_docs",
     # oldest r12 band, alphabetical - 8 of 41; the remaining 33 r12
@@ -9120,8 +9484,6 @@ _R17_WINDOW = [
     "cdc_schema_drift",
     "cdc_scd2_history",
     "cdc_state_as_of",
-    "cdc_snapshot_diff",
-    "cdc_backfill_reconcile",
 ]
 
 assert len(_R17_WINDOW) == 50, f"window must fill exactly 50 slots, got {len(_R17_WINDOW)}"

@@ -101,9 +101,10 @@ HEADLINE = (
     "docs_string_stats",
     "events_t_test",
     "diversified_sample_hits",
-    # r14 additions: the OpenSearch ML-agg family (change_point /
-    # rate / KS / bucket_correlation — daily groupBys + bounded
-    # bucket windows)
+    # r14 additions: the DSIR curation filter (one corpus-token pass)
+    # and the OpenSearch ML-agg family (change_point / rate / KS /
+    # bucket_correlation — daily groupBys + bounded bucket windows)
+    "dsir_importance_weights",
     "events_change_point",
     "events_monthly_rate",
     "events_ks_test",

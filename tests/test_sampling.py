@@ -95,30 +95,6 @@ def test_deterministic_shuffle_is_reproducible_permutation(spark, sf_dir):
         != sorted(map(tuple, rows))
 
 
-def test_curate_training_corpus_composition(spark, oracle_sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.plans.queries import REGISTRY
-
-    out = REGISTRY["curate_training_corpus"].fn(spark, oracle_sf_dir)
-    rows = out.collect()
-    docs_n = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet").count()
-    # the funnel actually filters, and every stage's invariant holds
-    assert 0 < len(rows) < docs_n
-    assert all(r.quality_score >= 0.55 for r in rows)
-    assert {r.split for r in rows} <= {"train", "val", "test"}
-    assert len({r.doc_id for r in rows}) == len(rows)
-    # mixture weighting: heavy stratum keeps a larger share than light
-    import collections
-    per_src = collections.Counter(r.source for r in rows)
-    tot = dict(
-        spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
-        .groupBy("source").count().collect()
-    )
-    heavy_rate = per_src["src0"] / tot["src0"]
-    light = [s for s in tot if s not in ("src0", "src1", "src2", "src3")]
-    light_rate = sum(per_src[s] for s in light) / sum(tot[s] for s in light)
-    assert heavy_rate > light_rate
-
-
 def test_per_stratum_cap_exact_and_deterministic(spark, sf_dir):
     from aws_dms_cdc_data_pipeline_spark.operators.sampling import (
         per_stratum_cap,

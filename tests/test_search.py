@@ -375,6 +375,27 @@ def test_fan_out_scan_decision_stable_across_persist(spark, tmp_path):
         flat.unpersist()
 
 
+def test_collocations_planted_pmi(spark):
+    """Planted corpus: a pair that always co-occurs adjacently scores
+    the maximal PMI; a frequent-but-independent pair scores near 0."""
+    import math
+
+    from aws_dms_cdc_data_pipeline_spark.operators.search import collocations
+
+    # "tick tock" always adjacent; "the" everywhere independent
+    rows = [(i, "tick tock the cat the dog") for i in range(10)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {(r["term_a"], r["term_b"]): r for r in
+           collocations(docs, min_count=5, top_k=50).collect()}
+    tt = out[("tick", "tock")]
+    # c(tick)=c(tock)=10, c(tick tock)=10, N=60 -> pmi = ln(10*60/100)
+    assert tt["pair_count"] == 10 and tt["c_a"] == 10 and tt["c_b"] == 10
+    assert abs(tt["pmi"] - round(math.log(6.0), 6)) < 1e-9
+    # ranking: the always-adjacent pair beats the generic "the X" pairs
+    top = max(out.values(), key=lambda r: (r["pmi"], ))
+    assert (top["term_a"], top["term_b"]) == ("tick", "tock")
+
+
 def test_bm25_multi_query_matches_single_query(spark, sf_dir):
     """Batch scoring is bit-identical per query to the single-query
     indexed path."""
