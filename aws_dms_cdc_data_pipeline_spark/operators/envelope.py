@@ -6,7 +6,7 @@ into the two-part ``{data, metadata}`` envelope and serializes it as
 one-line JSON (``message_format="json-unformatted"``, :89). Contract:
 reference README.md:454-492.
 
-All four operators are pure Catalyst expressions (``from_json`` /
+The envelope operators are pure Catalyst expressions (``from_json`` /
 ``to_json`` / ``struct``) — JVM-side, whole-stage-codegen'd, no
 Python in the hot path.
 """
@@ -93,11 +93,6 @@ def to_envelope(
         F.struct(*data_cols).alias("data"),
         _metadata_struct(op, ts, txn, schema_name, table_name).alias("metadata"),
     )
-
-
-def wrap_rows(rows: DataFrame, **kwargs) -> DataFrame:
-    """to_envelope + serialize: bare rows → wire-format JSON lines."""
-    return serialize_envelopes(to_envelope(rows, **kwargs))
 
 
 def schema_drift_report(

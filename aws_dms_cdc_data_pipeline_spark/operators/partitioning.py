@@ -1,19 +1,16 @@
-"""X1/X2 — hash-partition by primary key (the reference's "shuffle").
+"""Partitioning helpers: one-slice query relations, the stats-memo
+key, and the fan-out of poorly-split scans.
 
-DMS routes each change record to a Kinesis shard by the table's
-primary key (``partition-key-type: primary-key``,
-dms_aurora_mysql_to_kinesis.py:121-123) so same-row changes stay
-ordered, and applies them with a keyed worker pool (8 threads × 16
-queues, :134-139). Spark's hash shuffle + task model gives both: one
-``repartition`` on the PK column co-locates every change for a key in
-one partition, and downstream per-key logic (window dedup, stateful
-ops) never needs global order (T2: per-key ordering is the guarantee).
+X1, the reference's partition-by-primary-key (DMS routes each change
+record to a Kinesis shard by the table's primary key,
+dms_aurora_mysql_to_kinesis.py:121-123), needs no helper here: every
+per-key step already requires HashPartitioning on the key, so
+Catalyst plans that one exchange itself (plans/pipeline.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def local_relation(spark, data, schema: str) -> DataFrame:
@@ -61,22 +58,6 @@ def stats_memo_key(df: DataFrame, *extra) -> tuple | None:
     except Exception:  # pragma: no cover
         app = None
     return (app, h, files, *extra)
-
-
-def partition_by_key(
-    df: DataFrame,
-    key: str = "data.trans_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Hash-partition change records by primary key.
-
-    ``num_partitions=None`` keeps spark.sql.shuffle.partitions (the
-    AQE-managed default — on-demand capacity, kds.py:25's analog).
-    """
-    col = F.col(key)
-    if num_partitions is None:
-        return df.repartition(col)
-    return df.repartition(num_partitions, col)
 
 
 def fan_out_scan(

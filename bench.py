@@ -101,10 +101,9 @@ HEADLINE = (
     "docs_string_stats",
     "events_t_test",
     "diversified_sample_hits",
-    # r14 additions: the DSIR curation filter (one corpus-token pass)
-    # and the OpenSearch ML-agg family (change_point / rate / KS /
-    # bucket_correlation — daily groupBys + bounded bucket windows)
-    "dsir_importance_weights",
+    # r14 additions: the OpenSearch ML-agg family (change_point /
+    # rate / KS / bucket_correlation — daily groupBys + bounded bucket
+    # windows)
     "events_change_point",
     "events_monthly_rate",
     "events_ks_test",
@@ -113,15 +112,13 @@ HEADLINE = (
     # r14 continuation: the new search-scoring single-pass shapes
     # (simple_query_string / dis_max — one tokenize with in-row
     # phrase counting), the exact market-basket agg (in-row pair
-    # expansion over the corpus), the parent/child fact-fact join,
-    # the CMS sketch build (one ×depth explode over events). The
-    # bounded scoring queries (rank_feature/pinned/distance/decay/
+    # expansion over the corpus) and the parent/child fact-fact join.
+    # The bounded scoring queries (rank_feature/pinned/distance/decay/
     # percentiles_bucket) are wall-noise and stay out.
     "simple_query_string_docs",
     "dis_max_docs",
     "frequent_token_sets",
     "has_child_orders",
-    "weekly_event_counts_from_cms",
     # r15: the switch-over execution paths with corpus-scale cost
     # shapes — sqs percolation (one positional corpus pass), the
     # recursive nested-bool tree (one tokenize pass) and the two
