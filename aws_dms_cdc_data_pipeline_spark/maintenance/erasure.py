@@ -11,7 +11,10 @@ wholesale. This job does the minimal physical work each side allows:
   literals — no Python re-implementation to drift) to a bounded set
   of buckets, and only those buckets are rewritten as a new store
   generation through the same ``_swap_buckets`` path ``merge`` uses.
-  I/O is O(state/num_buckets × touched_buckets), never O(state).
+  A key that lives in the delta run is removed from it in the same
+  generation. I/O is O(state/num_buckets × touched_buckets + delta),
+  never O(state). Every directory the erasure supersedes is removed at
+  once, not kept a generation for readers.
 
 - **Archive** — one pruned scan finds the leaf files that contain the
   keys (at 100 TB, parquet/JSON partition pruning plus the driver
@@ -57,6 +60,9 @@ def erase_keys(
 
         {"store_rows_erased": N, "archive_rows_erased": N,
          "archive_files_rewritten": N, "generation": G}
+
+    ``store_rows_erased`` counts stored rows: a key whose base row and
+    delta row are both stored counts twice.
     """
     if not keys:
         raise ValueError("erase_keys: empty key list")
@@ -95,16 +101,20 @@ def _erase_from_store(spark: SparkSession, store: StateStore, keys: list):
         ).collect()
     }
     touched = sorted(b for b in wanted if str(b) in manifest["buckets"])
-    if not touched:
-        return 0, manifest["generation"]
-
-    old_dirs = [store._bdir(b, manifest["buckets"][str(b)]) for b in touched]
-    env = spark.read.parquet(*old_dirs).withColumn("_b", store._bucket_expr())
+    delta = manifest.get("delta")
     key_col = F.expr(store.key)
-    erased = env.filter(key_col.isin(keys)).count()
-    if erased == 0:
+    keep_row = ~key_col.isin(keys) | key_col.isNull()
+    erased = 0
+    if touched:
+        old_dirs = [store._bdir(b, manifest["buckets"][str(b)]) for b in touched]
+        env = store._read(old_dirs).withColumn("_b", store._bucket_expr())
+        erased = env.filter(~keep_row).count()
+    in_delta = 0
+    if delta is not None:
+        delta_env = store._read([store._ddir(delta["v"])])
+        in_delta = delta_env.filter(~keep_row).count()
+    if erased + in_delta == 0:
         return 0, manifest["generation"]
-    keep = env.filter(~key_col.isin(keys) | key_col.isNull())
     # Lost-update guard: the store is single-writer by design, but an
     # operator running erasure beside a live stream would otherwise
     # have this job overwrite bucket versions a concurrent merge just
@@ -118,8 +128,19 @@ def _erase_from_store(spark: SparkSession, store: StateStore, keys: list):
             f"(gen {manifest['generation']} -> {store.version()}); re-run"
         )
     new_gen = manifest["generation"] + 1
-    gen = store._swap_buckets(keep, touched, manifest, new_gen, allow_empty=True)
-    return erased, gen
+    if in_delta:
+        # the delta run is rewritten without the keys in the same
+        # generation as the buckets
+        store._write_delta(
+            delta_env.filter(keep_row), manifest, new_gen, delta["buckets"]
+        )
+    if erased:
+        gen = store._swap_buckets(
+            env.filter(keep_row), touched, manifest, new_gen, allow_empty=True
+        )
+    else:
+        gen = store._publish(manifest, new_gen, retain=False)
+    return erased + in_delta, gen
 
 
 def _archive_key_expr(key: str) -> Column:

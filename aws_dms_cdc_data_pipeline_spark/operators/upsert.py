@@ -24,16 +24,15 @@ doc_id; rank 1 picks one deterministically, so replay is idempotent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark import schema as S
 
 
-def ranked(envelopes: DataFrame, key: str = "data.trans_id") -> DataFrame:
-    """Every envelope with ``_rn``, its rank within its key (1 = the
-    latest: event time, then transaction id, then doc id when the
-    envelopes carry one). The one per-key order of the engine: the
+def key_order(envelopes: DataFrame, key: str = "data.trans_id") -> WindowSpec:
+    """The one per-key order of the engine, latest first: event time,
+    then transaction id, then doc id when the envelopes carry one. The
     batch view below and the state store's merge both rank with it."""
     order = [
         F.col("metadata.timestamp").desc(),
@@ -41,8 +40,13 @@ def ranked(envelopes: DataFrame, key: str = "data.trans_id") -> DataFrame:
     ]
     if "doc_id" in envelopes.columns:
         order.append(F.col("doc_id").desc())
-    w = Window.partitionBy(F.col(key)).orderBy(*order)
-    return envelopes.withColumn("_rn", F.row_number().over(w))
+    return Window.partitionBy(F.col(key)).orderBy(*order)
+
+
+def ranked(envelopes: DataFrame, key: str = "data.trans_id") -> DataFrame:
+    """Every envelope with ``_rn``, its rank within its key in
+    :func:`key_order` (1 = the latest)."""
+    return envelopes.withColumn("_rn", F.row_number().over(key_order(envelopes, key)))
 
 
 def current_state(

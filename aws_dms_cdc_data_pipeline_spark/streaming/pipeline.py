@@ -15,10 +15,11 @@ Mirrors the reference's delivery stage (SURVEY.md §3.1 steps 5-7):
     firehose.py:134) — as one JSON write into ``_legs-<epoch>``,
     renamed afterwards into ``archive/batch_id=N/…`` and
     ``error/batch_id=N/{parse,contract}``; the same pass observes
-    which store buckets the batch's merge-bound rows hash into;
+    which store buckets and keys the batch's merge-bound rows have;
   * the idempotent MERGE of those rows into the current-state store
-    (S5/T1) takes that bucket set, with a bounded retry and a
-    delivery dead-letter queue (S7 — firehose.py:150-152).
+    (S5/T1) takes that bucket set — and their key set, which lets a
+    tail batch rewrite only the store's delta run — with a bounded
+    retry and a delivery dead-letter queue (S7 — firehose.py:150-152).
 
   Every Spark action in a ``foreachBatch`` pays a full job's planning
   and scheduling, and at tail batch sizes that fixed cost is most of
@@ -37,6 +38,7 @@ a user adds streaming event-time aggregations on top.
 from __future__ import annotations
 
 import dataclasses
+import json
 import os
 import shutil
 import time
@@ -105,13 +107,15 @@ def _merge_with_retry(
     backoff_seconds: float,
     changes: ChangeCapture | None = None,
     touched: Iterable[int] | None = None,
+    keys: list | None = None,
 ) -> tuple[Exception | None, int, int | None]:
     """Retry ``store.merge`` with exponential backoff until the budget
     is spent; return (None, attempts, generation) on success or
     (last_error, attempts, None) once exhausted. Always attempts at
     least once. ``changes`` is handed to every attempt, which observes
     afresh, so it ends up holding the committed attempt's change set;
-    ``touched`` (the batch's bucket ids) goes to every attempt too.
+    ``touched`` (the batch's bucket ids) and ``keys`` (its key set, or
+    None) go to every attempt too.
 
     Matches the reference's bounded delivery retry (firehose.py:150-152:
     RetryOptions duration_in_seconds=60) — a poison batch must NOT
@@ -123,7 +127,9 @@ def _merge_with_retry(
     while True:
         attempts += 1
         try:
-            return None, attempts, store.merge(selected, changes, touched=touched)
+            return None, attempts, store.merge(
+                selected, changes, touched=touched, keys=keys
+            )
         except Exception as exc:  # noqa: BLE001 — any failure is retryable
             delay = backoff_seconds * (2 ** (attempts - 1))
             if time.monotonic() + delay > deadline:
@@ -166,10 +172,13 @@ def _leg(name: str, when: Column, *, hour_of: Column | None = None,
 
 def _write_side_legs(
     cfg: CdcStreamConfig, store: StateStore, batch: DataFrame, epoch_id: int
-) -> list[int]:
+) -> tuple[list[int], list | None]:
     """Write the epoch's parse DLQ, contract DLQ and archive in one
-    Spark write over the micro-batch, and return the store buckets of
-    its merge-bound rows, observed on that same pass.
+    Spark write over the micro-batch, and return the store buckets and
+    the distinct keys of its merge-bound rows, observed on that same
+    pass. The keys come back as one JSON value, and only while they fit
+    the store's delta run (:meth:`StateStore.delta_room`); past that
+    the merge folds and the keys are None.
 
     The legs are staged as one JSON write partitioned by leg (and by
     the hour axes for the archive) under ``<sink_root>/_legs-<epoch>``,
@@ -211,13 +220,15 @@ def _write_side_legs(
         batch = batch.withColumn(
             "_violations", expectations.violations(cfg.contract_checks)
         )
-    touched = Observation()
+    observed = [F.collect_set(F.when(merge_bound, store._bucket_expr())).alias("b")]
+    room = store.delta_room()
+    if room > 0:
+        keys = F.collect_set(F.when(merge_bound, F.expr(store.key)))
+        observed.append(F.when(F.size(keys) <= room, F.to_json(keys)).alias("k"))
+    seen = Observation()
     staging = os.path.join(cfg.sink_root, f"_legs-{epoch_id}")
     (
-        batch.observe(
-            touched,
-            F.collect_set(F.when(merge_bound, store._bucket_expr())).alias("b"),
-        )
+        batch.observe(seen, *observed)
         .select(F.explode(F.array_compact(F.array(*legs))).alias("_leg"))
         .select("_leg.*")
         # Writer distribution: repartition on the partition axes ALONE
@@ -258,16 +269,17 @@ def _write_side_legs(
         if marked:
             open(os.path.join(dst, "_SUCCESS"), "w").close()
     shutil.rmtree(staging)
-    return touched.get["b"]
+    keys = seen.get.get("k")
+    return seen.get["b"], None if keys is None else json.loads(keys)
 
 
 def _deliver(cfg: CdcStreamConfig, store: StateStore, view=None):
     """Build the foreachBatch delivery function.
 
     Per micro-batch: one Spark write puts down the side legs and
-    observes the touched store buckets (:func:`_write_side_legs`),
-    then the merge runs on the batch's merge-bound rows with that
-    bucket set.
+    observes the touched store buckets and keys
+    (:func:`_write_side_legs`), then the merge runs on the batch's
+    merge-bound rows with that bucket set and key set.
     ``view`` (optional ``IncrementalAggView``) is advanced after each
     successful merge from the signed change set that merge observed on
     its own write job — the view leg runs no Spark job of its own.
@@ -276,7 +288,7 @@ def _deliver(cfg: CdcStreamConfig, store: StateStore, view=None):
     """
 
     def deliver(batch: DataFrame, epoch_id: int) -> None:
-        touched = _write_side_legs(cfg, store, batch, epoch_id)
+        touched, keys = _write_side_legs(cfg, store, batch, epoch_id)
 
         # S5: idempotent upsert into the current-state store of the
         # rows the tagged pass found merge-bound (same predicates),
@@ -307,6 +319,7 @@ def _deliver(cfg: CdcStreamConfig, store: StateStore, view=None):
             cfg.delivery_retry_backoff_seconds,
             changes,
             touched,
+            keys,
         )
         if err is None and view is not None:
             # replayed epochs are safe: replayed records cancel in

@@ -1,14 +1,16 @@
 """Key erasure across state store + raw archive (right-to-be-forgotten)."""
 
+import datetime as dt
 import glob
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark.generator import GeneratorConfig, envelopes_df
 from aws_dms_cdc_data_pipeline_spark.maintenance.erasure import erase_keys
-from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore
+from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore, fsck
 from aws_dms_cdc_data_pipeline_spark.streaming import (
     CdcStreamConfig,
     start_cdc_stream,
@@ -74,6 +76,49 @@ def test_erasure_removes_superseded_pii_version_immediately(spark, tmp_path):
         assert not os.path.exists(stale), (
             f"superseded version {stale} still holds erased rows"
         )
+
+
+def test_erasure_removes_a_delta_key_in_the_same_generation(spark, tmp_path):
+    """A key whose current row lives in the delta run is erased from
+    the delta and from the base in one generation, and no directory
+    left under the store holds it."""
+    store = _build_store(spark, tmp_path)  # 40 base keys: room for 4 in the delta
+    keys = [1, 2, 41, 42]
+    newer = (
+        envelopes_df(spark, GeneratorConfig(n_rows=42, seed=8, update_fraction=0.0,
+                                            delete_fraction=0.0))
+        .filter(F.col("data.trans_id").isin(keys))
+        .withColumn("metadata", F.col("metadata").withField(
+            "timestamp", F.lit(dt.datetime(2030, 1, 1))))
+    )
+    gen = store.merge(newer, keys=keys)
+    assert store._manifest()["delta"] == {"v": gen, "rows": 4,
+                                          "buckets": store._manifest()["delta"]["buckets"]}
+
+    def stored_keys():
+        return {
+            k
+            for f in glob.glob(os.path.join(store.path, "**", "*.parquet"), recursive=True)
+            for k in pq.read_table(f, columns=["data.trans_id"]).column(0).to_pylist()
+        }
+
+    out = erase_keys(spark, store, [1, 41])  # 1: base and delta; 41: delta only
+    assert out["store_rows_erased"] == 3
+    assert out["generation"] == gen + 1 == store.version()
+    assert store.lookup([1, 41]).count() == 0
+    live = {r["trans_id"] for r in store.table().collect()}
+    assert live.isdisjoint({1, 41}) and {2, 42} <= live
+    assert stored_keys().isdisjoint({1, 41})
+    assert store._manifest()["delta"]["rows"] == 2
+    report = fsck(store)
+    assert report["retained"] == [] and report["orphans"] == []
+
+    # erasing the delta's last keys drops the run
+    erase_keys(spark, store, [2, 42])
+    assert "delta" not in store._manifest()
+    assert not glob.glob(os.path.join(store.path, "delta", "v=*"))
+    assert stored_keys().isdisjoint({1, 2, 41, 42})
+    assert len(live) - 2 == store.table().count()
 
 
 def test_erase_missing_key_is_noop(spark, tmp_path):

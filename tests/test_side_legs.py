@@ -19,12 +19,13 @@ from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark.generator import (
     GeneratorConfig,
+    envelopes_df,
     generate_envelopes,
     write_envelope_jsonl,
 )
 from aws_dms_cdc_data_pipeline_spark.operators.expectations import quarantine_violations
 from aws_dms_cdc_data_pipeline_spark.operators.selection import select_table
-from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore
+from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore, fsck
 from aws_dms_cdc_data_pipeline_spark.sources.envelope_stream import parse_envelope_lines
 from aws_dms_cdc_data_pipeline_spark.streaming.matview import IncrementalAggView
 from aws_dms_cdc_data_pipeline_spark.streaming.pipeline import CdcStreamConfig, _deliver
@@ -96,6 +97,49 @@ def test_delivered_batch_runs_at_most_four_jobs(spark, tmp_path, checks, with_vi
         assert jobs <= 4, f"epoch {epoch}: {jobs} jobs"
     assert store.version() == 1
     assert store.table().count() > 0
+
+
+def test_tail_batch_rewrites_only_the_delta_run(spark, tmp_path):
+    """A tail-sized batch over a store at least ten times its size, with
+    a view attached, goes into the delta run: at most 4 jobs, the
+    buckets map unchanged, exactly one new data file under state/."""
+    src = _wire(tmp_path, n_rows=20)
+    batch = _batch(spark, src)
+    cfg = CdcStreamConfig(source_path=src, sink_root=str(tmp_path / "sink"),
+                          contract_checks=CHECKS)
+    store = StateStore(spark, cfg.state_path)
+    store.merge(envelopes_df(spark, GeneratorConfig(n_rows=600, seed=3)))
+    assert store._manifest()["base_rows"] >= 10 * batch.count()
+    view = IncrementalAggView(store, str(tmp_path / "view"), group_expr="data.device",
+                              group_alias="group_key", sums={"amount_sum": "data.amount"})
+    view.rebuild()
+
+    def data_files():
+        return set(glob.glob(os.path.join(cfg.state_path, "**", "*.parquet"),
+                             recursive=True))
+
+    before, buckets = data_files(), store._manifest()["buckets"]
+    jobs = _jobs(spark, f"tail-{tmp_path.name}", lambda: _deliver(cfg, store, view)(batch, 0))
+    assert jobs <= 4, f"{jobs} jobs"
+    manifest = store._manifest()
+    assert manifest["buckets"] == buckets
+    assert manifest["delta"]["v"] == manifest["generation"] == 1
+    after = data_files()
+    assert before <= after and len(after - before) == 1
+    fresh = IncrementalAggView(store, str(tmp_path / "fresh"), group_expr="data.device",
+                               group_alias="group_key", sums={"amount_sum": "data.amount"})
+    fresh.rebuild()
+    assert sorted(map(tuple, view.table().collect())) == sorted(
+        map(tuple, fresh.table().collect()))
+
+    # a key set that misses a key of the batch must not commit
+    late = envelopes_df(spark, GeneratorConfig(n_rows=5, seed=12))
+    with pytest.raises(RuntimeError, match="outside the key set"):
+        store.merge(late, keys=[2, 3, 4, 5])
+    assert store._manifest() == manifest
+    assert data_files() == after
+    assert not [e for e in os.listdir(cfg.state_path) if e.startswith("_staging-")]
+    assert fsck(store)["orphans"] == []
 
 
 def _reference_legs(cfg, batch, epoch):

@@ -54,6 +54,33 @@ def test_version_gc_bounds_disk(spark, tmp_path):
     assert store.version() == 3
 
 
+def test_superseded_version_is_gone_one_commit_later(spark, tmp_path):
+    """What commit G supersedes is kept for in-flight readers and
+    removed by commit G+1, even when G+1 does not touch that bucket."""
+    from aws_dms_cdc_data_pipeline_spark.sinks.state_store import fsck
+
+    store = StateStore(spark, str(tmp_path / "state"), num_buckets=8)
+    env = envelopes_df(spark, GeneratorConfig(n_rows=64, update_fraction=0.0,
+                                              delete_fraction=0.0))
+    store.merge(env)
+    bucket = {
+        r["k"]: r["b"]
+        for r in env.select(F.col("data.trans_id").alias("k"),
+                            store._bucket_expr().alias("b")).collect()
+    }
+    first = min(bucket)
+    other = min(k for k in bucket if bucket[k] != bucket[first])
+    store.merge(env.filter(F.col("data.trans_id") == first))  # rewrites one bucket
+    b = bucket[first]
+    assert fsck(store)["retained"] == [f"b={b}/v=0"]
+    store.merge(env.filter(F.col("data.trans_id") == other))  # leaves it alone
+    assert sorted(os.listdir(os.path.join(store.path, f"b={b}"))) == ["v=1"]
+    report = fsck(store)
+    assert report["retained"] == [f"b={bucket[other]}/v=0"]
+    assert report["orphans"] == [] and report["missing"] == []
+    assert store.table().count() == 64
+
+
 def test_merge_is_idempotent_per_batch(spark, tmp_path):
     store = StateStore(spark, str(tmp_path / "state"), num_buckets=4)
     env = envelopes_df(spark, GeneratorConfig(n_rows=30))

@@ -7,6 +7,7 @@ readers if the process dies, and a replayed merge of the same batch
 must converge to exactly the clean-path state.
 """
 
+import datetime as dt
 import os
 
 import pytest
@@ -322,3 +323,75 @@ def test_touched_set_missing_a_bucket_raises_and_commits_nothing(spark, tmp_path
     ref.merge(b1)
     ref.merge(b2)
     assert _rows(store) == _rows(ref)
+
+
+def _into_delta(spark, store, keys):
+    """Merge newer rows of ``keys`` through the delta run."""
+    batch = (
+        envelopes_df(spark, GeneratorConfig(n_rows=max(keys), seed=11,
+                                            update_fraction=0.0, delete_fraction=0.0))
+        .filter(F.col("data.trans_id").isin(keys))
+        .withColumn("metadata", F.col("metadata").withField(
+            "timestamp", F.lit(dt.datetime(2030, 1, 1))))
+    )
+    gen = store.merge(batch, keys=keys)
+    assert store._manifest()["delta"]["v"] == gen
+    return batch
+
+
+def test_fsck_and_snapshot_know_the_delta_run(spark, tmp_path):
+    b1, _ = _batches(spark)
+    store = StateStore(spark, str(tmp_path / "state"), num_buckets=4)
+    store.merge(b1)  # 30 base keys: room for 3 in the delta
+    _into_delta(spark, store, [1, 2])
+    _into_delta(spark, store, [3])
+    report = SS.fsck(store)
+    assert "delta/v=2" in report["live"]
+    assert report["retained"] == ["delta/v=1"]
+    assert report["orphans"] == [] and report["missing"] == []
+
+    os.makedirs(os.path.join(store.path, "delta", "v=99"))
+    assert "delta/v=99" in SS.fsck(store)["orphans"]
+    before = _rows(store)
+    SS.fsck(store, clean=True)
+    assert not os.path.exists(os.path.join(store.path, "delta", "v=99"))
+    assert _rows(store) == before
+
+    snap = str(tmp_path / "snap")
+    SS.snapshot_store(store, snap)
+    assert sorted(os.listdir(os.path.join(snap, "delta"))) == ["v=2"]
+    restored = SS.restore_store(spark, snap, str(tmp_path / "restored"), num_buckets=4)
+    assert _rows(restored) == before
+    assert sorted(map(tuple, restored.lookup([1, 2, 3]).collect())) == sorted(
+        map(tuple, store.lookup([1, 2, 3]).collect()))
+    rep = SS.fsck(restored)
+    assert "delta/v=2" in rep["live"]
+    assert rep["orphans"] == [] and rep["retained"] == [] and rep["missing"] == []
+
+
+def test_crash_mid_delta_rename_is_invisible_then_recoverable(
+    spark, tmp_path, monkeypatch
+):
+    b1, _ = _batches(spark)
+    store = StateStore(spark, str(tmp_path / "state"), num_buckets=4)
+    store.merge(b1)
+    before, gen = _rows(store), store.version()
+    real_rename = os.rename
+
+    def crash(src, dst):
+        if f"{os.sep}delta{os.sep}" in dst:
+            raise OSError("injected crash before the delta rename")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(SS.os, "rename", crash)
+    with pytest.raises(OSError, match="injected"):
+        _into_delta(spark, store, [1, 2])
+    monkeypatch.undo()
+    assert store.version() == gen and _rows(store) == before
+
+    batch = _into_delta(spark, store, [1, 2])  # the replay commits
+    ref = StateStore(spark, str(tmp_path / "ref"), num_buckets=4)
+    ref.merge(b1)
+    ref.merge(batch)
+    assert _rows(store) == _rows(ref)
+    assert SS.fsck(store)["orphans"] == []

@@ -92,11 +92,11 @@ def test_delivery_transient_failure_recovers_within_retry_budget(
     real_merge = StateStore.merge
     calls = {"n": 0}
 
-    def flaky_merge(self, df, changes=None, touched=None):
+    def flaky_merge(self, df, changes=None, touched=None, keys=None):
         calls["n"] += 1
         if calls["n"] <= 2:
             raise RuntimeError("transient index outage")
-        return real_merge(self, df, changes, touched)
+        return real_merge(self, df, changes, touched, keys)
 
     monkeypatch.setattr(StateStore, "merge", flaky_merge)
     cfg = CdcStreamConfig(
@@ -128,11 +128,11 @@ def test_delivery_permanent_failure_dead_letters_and_stream_continues(
     real_merge = StateStore.merge
     calls = {"n": 0}
 
-    def poison_first_batch(self, df, changes=None, touched=None):
+    def poison_first_batch(self, df, changes=None, touched=None, keys=None):
         calls["n"] += 1
         if calls["n"] <= 3:  # every retry of epoch 0 fails
             raise RuntimeError("mapping conflict: poison batch")
-        return real_merge(self, df, changes, touched)
+        return real_merge(self, df, changes, touched, keys)
 
     monkeypatch.setattr(StateStore, "merge", poison_first_batch)
     cfg = CdcStreamConfig(
