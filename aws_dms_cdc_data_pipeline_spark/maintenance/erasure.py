@@ -42,10 +42,14 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from aws_dms_cdc_data_pipeline_spark.sinks.state_store import StateStore
+from aws_dms_cdc_data_pipeline_spark.sinks.state_store import (
+    StateStore,
+    _sql_literal,
+    sql_in,
+)
 
 
 def erase_keys(
@@ -73,7 +77,7 @@ def erase_keys(
         "generation": store.version() if store is not None else -1,
     }
     if store is not None:
-        erased, gen = _erase_from_store(spark, store, keys)
+        erased, gen = _erase_from_store(store, keys)
         out["store_rows_erased"] = erased
         out["generation"] = gen
     if archive_path is not None:
@@ -86,24 +90,14 @@ def erase_keys(
     return out
 
 
-def _erase_from_store(spark: SparkSession, store: StateStore, keys: list):
+def _erase_from_store(store: StateStore, keys: list):
     manifest = store._manifest()
     if manifest["generation"] < 0:
         return 0, manifest["generation"]
-    # bucket ids via Spark's own hash over literals (same contract as
-    # StateStore.lookup: probe type must match the stored key type)
-    ktype = "string" if isinstance(keys[0], str) else "long"
-    probe = spark.createDataFrame([(k,) for k in keys], f"_k {ktype}")
-    wanted = {
-        r["_b"]
-        for r in probe.select(
-            F.expr(f"pmod(hash(_k), {store.num_buckets})").alias("_b")
-        ).collect()
-    }
+    wanted = store._buckets_of(keys)
     touched = sorted(b for b in wanted if str(b) in manifest["buckets"])
     delta = manifest.get("delta")
-    key_col = F.expr(store.key)
-    keep_row = ~key_col.isin(keys) | key_col.isNull()
+    keep_row = ~store._key_in(keys) | F.expr(store.key).isNull()
     erased = 0
     if touched:
         old_dirs = [store._bdir(b, manifest["buckets"][str(b)]) for b in touched]
@@ -143,15 +137,16 @@ def _erase_from_store(spark: SparkSession, store: StateStore, keys: list):
     return erased + in_delta, gen
 
 
-def _archive_key_expr(key: str) -> Column:
-    """The store key re-read from the archive's serialized envelope.
+def _archive_key_sql(key: str) -> str:
+    """The store key re-read from the archive's serialized envelope, as
+    a SQL expression.
 
     Archive rows are ``(doc_id, value)`` where ``value`` is the JSON
     envelope (streaming/pipeline.py S6 leg); ``get_json_object``
     extracts the key as a string without a full parse.
     """
-    path = "$." + key  # e.g. "data.trans_id" -> "$.data.trans_id"
-    return F.get_json_object(F.col("value"), path)
+    # e.g. "data.trans_id" -> "$.data.trans_id"
+    return f"get_json_object(value, {_sql_literal('$.' + key)})"
 
 
 def _erase_from_archive(
@@ -160,14 +155,15 @@ def _erase_from_archive(
     batch_dirs = sorted(glob.glob(os.path.join(archive_path, "batch_id=*")))
     if not batch_dirs:
         return 0, 0
-    key_strs = [str(k) for k in keys]
+    key_sql = _archive_key_sql(key)
+    in_keys = sql_in(key_sql, [str(k) for k in keys])
     df = (
         spark.read.schema("doc_id string, value string")
         .option("basePath", archive_path)
         .json(batch_dirs)
         .withColumn("_f", F.input_file_name())
     )
-    hit = df.filter(_archive_key_expr(key).isin(key_strs))
+    hit = df.filter(in_keys)
     rows = hit.count()
     if rows == 0:
         return 0, 0
@@ -178,10 +174,7 @@ def _erase_from_archive(
         keep = (
             spark.read.schema("doc_id string, value string")
             .json(path)
-            .filter(
-                ~_archive_key_expr(key).isin(key_strs)
-                | _archive_key_expr(key).isNull()
-            )
+            .filter(~in_keys | F.expr(key_sql).isNull())
         )
         # underscore prefix: a crash that strands this staging dir
         # leaves a path Spark's hidden-file filter IGNORES, so a

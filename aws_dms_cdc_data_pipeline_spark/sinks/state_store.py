@@ -120,12 +120,22 @@ class StateStore:
         return F.expr(f"pmod(hash({self.key}), {self.num_buckets})")
 
     def _key_in(self, keys: Iterable) -> Column:
-        """``key IN (keys)`` as one SQL expression: building it from
-        per-key literal columns costs a py4j call per key."""
-        keys = list(keys)
-        if not keys:
-            return F.lit(False)
-        return F.expr(f"{self.key} IN ({', '.join(map(_sql_literal, keys))})")
+        return sql_in(self.key, keys)
+
+    def _buckets_of(self, keys: list) -> set[int]:
+        """The buckets ``keys`` hash into, by Spark's own hash evaluated
+        once over the literals (no Python re-implementation of Murmur3
+        to drift). The probe column's type must match the stored key's:
+        Murmur3 hashes int32 and int64 differently, so a width mismatch
+        would probe the wrong bucket."""
+        ktype = "string" if isinstance(keys[0], str) else "long"
+        probe = self.spark.createDataFrame([(k,) for k in keys], f"_k {ktype}")
+        return {
+            r["_b"]
+            for r in probe.select(
+                F.expr(f"pmod(hash(_k), {self.num_buckets})").alias("_b")
+            ).collect()
+        }
 
     def _read(self, dirs: list[str]) -> DataFrame:
         # the layout's schema is known: passing it skips the footer-read
@@ -185,27 +195,14 @@ class StateStore:
         residual in-bucket filter prunes further via parquet min/max
         on the key column. Keys are literals, so the bucket set is
         computed driver-side with the SAME hash Spark applies
-        (verified by construction: one spark-side eval over the
-        literal array — no Python reimplementation of xxhash/murmur
-        to drift).
+        (:meth:`_buckets_of`).
         """
         if not keys:
             return self.table().limit(0)
         manifest = self._manifest()
         if manifest["generation"] < 0:
             return self.table().limit(0)
-        # bucket ids via Spark's own hash, evaluated once on literals.
-        # The probe column type MUST match the stored key type: Spark's
-        # Murmur3 hashes int32 and int64 differently, so a width
-        # mismatch would probe the wrong bucket.
-        ktype = "string" if isinstance(keys[0], str) else "long"
-        probe = self.spark.createDataFrame([(k,) for k in keys], f"_k {ktype}")
-        wanted = {
-            r["_b"]
-            for r in probe.select(
-                F.expr(f"pmod(hash(_k), {self.num_buckets})").alias("_b")
-            ).collect()
-        }
+        wanted = self._buckets_of(keys)
         dirs = [
             self._bdir(int(b), v)
             for b, v in manifest["buckets"].items()
@@ -216,7 +213,7 @@ class StateStore:
             return self.table().limit(0)
         env = self._overlay(dirs, delta_dir)
         live = env.filter(F.col("metadata.operation") != F.lit(S.OP_DELETE))
-        return live.filter(F.expr(self.key).isin(keys)).select("data.*")
+        return live.filter(self._key_in(keys)).select("data.*")
 
     # -- write -------------------------------------------------------------
     def merge(
@@ -553,6 +550,16 @@ def _rows(dirs: list[str]) -> int:
         for d in dirs
         for f in glob.glob(os.path.join(glob.escape(d), "*.parquet"))
     )
+
+
+def sql_in(expr: str, keys: Iterable) -> Column:
+    """``expr IN (keys)`` as one SQL expression: building it from
+    per-key literal columns (``Column.isin``) costs a py4j call per
+    key, seconds for a few thousand keys."""
+    keys = list(keys)
+    if not keys:
+        return F.lit(False)
+    return F.expr(f"{expr} IN ({', '.join(map(_sql_literal, keys))})")
 
 
 def _sql_literal(value) -> str:

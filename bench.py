@@ -47,8 +47,6 @@ HEADLINE = (
     "join_left_order_counts",
     "agg_cube_status_priority",
     "ann_brute_force_topk",
-    "asof_purchase_last_visit",
-    "sessionize_events",
     "label_centroids",
     # added r5 so round-over-round perf tracking covers the
     # operators most likely to regress
@@ -111,14 +109,13 @@ HEADLINE = (
     "sampler_lang_facets",
     # r14 continuation: the new search-scoring single-pass shapes
     # (simple_query_string / dis_max — one tokenize with in-row
-    # phrase counting), the exact market-basket agg (in-row pair
-    # expansion over the corpus) and the parent/child fact-fact join.
+    # phrase counting) and the exact market-basket agg (in-row pair
+    # expansion over the corpus).
     # The bounded scoring queries (rank_feature/pinned/distance/decay/
     # percentiles_bucket) are wall-noise and stay out.
     "simple_query_string_docs",
     "dis_max_docs",
     "frequent_token_sets",
-    "has_child_orders",
     # r15: the switch-over execution paths with corpus-scale cost
     # shapes — sqs percolation (one positional corpus pass), the
     # recursive nested-bool tree (one tokenize pass) and the two
@@ -156,7 +153,6 @@ SCALE_SUBSET = (
     "q3_shipping_priority",
     "regional_revenue",
     "topk_customers_by_revenue",
-    "sessionize_events",
     "window_range_7day_spend",
     "bm25_keyword_search",
     "bm25_keyword_search_indexed",

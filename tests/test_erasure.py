@@ -327,3 +327,59 @@ def test_stranded_erasure_staging_dir_is_invisible_to_readers(spark, tmp_path):
           .option("basePath", archive)
           .json(sorted(glob.glob(os.path.join(archive, "batch_id=*")))))
     assert df.count() == 1  # the stranded copy is ignored
+
+
+def test_bulk_lookup_and_erasure_over_base_and_delta(spark, tmp_path):
+    """Thousands of keys at once — some with only a base row, some with
+    a newer row in the delta run, some absent: the lookup returns
+    exactly the keys' current rows, and erasure removes exactly their
+    stored rows and archive lines."""
+    store = StateStore(spark, str(tmp_path / "state"), num_buckets=8)
+    one_version = dict(update_fraction=0.0, delete_fraction=0.0)
+    base = envelopes_df(spark, GeneratorConfig(n_rows=12_000, seed=7, **one_version))
+    store.merge(base)  # 12,000 base rows: room for 1,200 delta keys
+    delta_keys = list(range(1, 601))
+    newer = envelopes_df(
+        spark, GeneratorConfig(n_rows=600, seed=8, **one_version)
+    ).withColumn("metadata", F.col("metadata").withField(
+        "timestamp", F.lit(dt.datetime(2030, 1, 1))))
+    store.merge(newer, keys=delta_keys)
+    assert store._manifest()["delta"]["rows"] == 600
+
+    in_delta = delta_keys[::2]                   # 300: base row + delta row
+    base_only = list(range(10_001, 11_801))      # 1,800: base row only
+    absent = list(range(90_001, 90_201))         # 200: never stored
+    keys = in_delta + base_only + absent
+
+    def by_key(df, wanted):
+        return {r["trans_id"]: r for r in df.select("data.*").collect()
+                if r["trans_id"] in wanted}
+
+    want = {**by_key(base, set(base_only)), **by_key(newer, set(in_delta))}
+    got = store.lookup(keys).collect()
+    assert len(got) == 2_100
+    assert {r["trans_id"]: r for r in got} == want
+
+    archive = tmp_path / "archive" / "batch_id=0"
+    archive.mkdir(parents=True)
+    with open(archive / "part-00000.json", "w") as f:
+        for k in range(1, 11_801):
+            value = json.dumps({"data": {"trans_id": k}})
+            f.write(json.dumps({"doc_id": f"d{k}", "value": value}) + "\n")
+        f.write(json.dumps({"doc_id": "no-key", "value": "{}"}) + "\n")
+
+    out = erase_keys(spark, store, keys, archive_path=str(tmp_path / "archive"))
+    assert out["store_rows_erased"] == 300 * 2 + 1_800
+    assert out["archive_rows_erased"] == 2_100
+    assert out["archive_files_rewritten"] == 1
+    assert store.lookup(keys).count() == 0
+    live = {r["trans_id"] for r in store.table().select("trans_id").collect()}
+    assert live == set(range(1, 12_001)) - set(in_delta) - set(base_only)
+    assert store._manifest()["delta"]["rows"] == 300
+    with open(archive / "part-00000.json") as f:
+        left = [json.loads(line)["doc_id"] for line in f]
+    erased_docs = {f"d{k}" for k in in_delta + base_only}
+    assert sorted(left) == sorted(
+        [f"d{k}" for k in range(1, 11_801) if f"d{k}" not in erased_docs]
+        + ["no-key"]
+    )

@@ -1,6 +1,6 @@
 """Unit tests for the r14-continuation scoring/search additions:
 rank_feature, distance_feature, pinned, decay function_score,
-simple_query_string, has_child/has_parent, percentiles_bucket."""
+simple_query_string, percentiles_bucket."""
 
 import math
 
@@ -200,71 +200,6 @@ def test_simple_query_string_phrase_freq_scoring(spark):
     }
     assert set(out) == {1, 2}
     assert out[1] > out[2]
-
-
-def test_has_child_score_modes_and_bounds(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.joinfield import (
-        has_child,
-    )
-
-    parents = spark.createDataFrame(
-        [(1, "p1"), (2, "p2"), (3, "p3")], "pk long, name string"
-    )
-    children = spark.createDataFrame(
-        [(1, 10.0), (1, 30.0), (2, 5.0), (2, 7.0), (2, 9.0), (3, 100.0)],
-        "ck long, v double",
-    )
-    base = dict(
-        parent_key="pk", child_key="ck",
-        child_filter=F.lit(True), score_col="v",
-    )
-    got = {
-        r.pk: (r.n_children, r.score)
-        for r in has_child(
-            parents, children, score_mode="avg", min_children=2, **base
-        ).collect()
-    }
-    assert got == {1: (2, 20.0), 2: (3, 7.0)}
-    # max_children caps
-    got2 = {
-        r.pk
-        for r in has_child(
-            parents, children, score_mode="none",
-            min_children=1, max_children=2, **base
-        ).collect()
-    }
-    assert got2 == {1, 3}
-    mins = {
-        r.pk: r.score
-        for r in has_child(
-            parents, children, score_mode="min", min_children=1, **base
-        ).collect()
-    }
-    assert mins == {1: 10.0, 2: 5.0, 3: 100.0}
-
-
-def test_has_parent_inherits_parent_score(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.joinfield import (
-        has_parent,
-    )
-
-    parents = spark.createDataFrame(
-        [(1, 900.0, "keep"), (2, 100.0, "drop")],
-        "pk long, total double, tag string",
-    )
-    children = spark.createDataFrame(
-        [(1, 11), (1, 12), (2, 21)], "ck long, n long"
-    )
-    out = has_parent(
-        parents, children,
-        parent_key="pk", child_key="ck",
-        parent_filter=F.col("tag") == "keep",
-        parent_score_col="total",
-        child_cols=["n"],
-    ).collect()
-    assert sorted((r.ck, r.n, r.score) for r in out) == [
-        (1, 11, 900.0), (1, 12, 900.0)
-    ]
 
 
 def test_percentiles_bucket_rank_edges(spark):

@@ -32,10 +32,9 @@ def main() -> None:
         "",
         f"{len(REGISTRY)} queries; {n_oracle} value-checked against a "
         "DuckDB oracle on identical parquet, "
-        f"{len(REGISTRY) - n_oracle} rows-only (hash functions or "
-        "iterative algorithms with no SQL mirror — each carries "
-        "reference-implementation or property tests instead; see "
-        "SURVEY.md §2 rows). Physical-plan audit per query: PLANS.md.",
+        f"{len(REGISTRY) - n_oracle} rows-only (no SQL mirror; the "
+        "reason is at each entry's `None` oracle and in its SURVEY.md "
+        "§2 row). Physical-plan audit per query: PLANS.md.",
         "",
         "| query | gate | what it is |",
         "|---|---|---|",
