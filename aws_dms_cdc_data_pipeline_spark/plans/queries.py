@@ -1203,6 +1203,22 @@ def array_agg_devices(spark, sf_dir):
 
 
 @q(
+    "salted_supplier_qty",
+    f"""
+    SELECT l_suppkey, {_dsum_sql('l_quantity', 'total')}
+    FROM lineitem GROUP BY l_suppkey
+    """,
+    "Skew-mitigated two-phase aggregation: salted partials then combine "
+    "— decimal accumulation makes it bit-identical to the direct sum.",
+)
+def salted_supplier_qty(spark, sf_dir):
+    from aws_dms_cdc_data_pipeline_spark.operators.skew import salted_sum
+
+    li = load_table(spark, sf_dir, "lineitem")
+    return salted_sum(li, "l_suppkey", "l_quantity", buckets=8, alias="total")
+
+
+@q(
     "approx_distinct_users",
     None,  # HLL estimate is engine-specific by design
     "Approximate distinct (HyperLogLog) next to the exact count — "
@@ -1952,7 +1968,7 @@ def funnel_conversion_q(spark, sf_dir):
     """,
     "Join/agg-key skew diagnostics: top-20 heavy hitters by row "
     "count with integer ppm share — the report that decides whether "
-    "a key needs salting. Partial counts "
+    "a key needs salting (operators/skew.py). Partial counts "
     "map-side; the rank window runs on #distinct-keys rows and "
     "WindowGroupLimit pushes the top-20 cut; total rides a 1-row "
     "broadcast.",
