@@ -108,6 +108,11 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
+    _interval_seconds,
+    _meta_sql,
+    execute_aggs_dsl,
+)
 from aws_dms_cdc_data_pipeline_spark.operators.partitioning import (
     local_relation as _local_relation,
     stats_memo_key,
@@ -1521,34 +1526,6 @@ def clause_search_oracle_sql(
 # --------------------------------------------------------------------
 
 
-def _meta_sql(node: dict) -> str:
-    """DuckDB predicate for a metadata filter leaf (mirror of
-    :func:`_meta_condition`)."""
-    kind, body = next(iter(node.items()))
-
-    def lit(v):
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return repr(v)
-
-    if kind == "range":
-        ((field, spec),) = body.items()
-        ops = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
-        parts = [
-            f"{field} {op} {lit(spec[key])}"
-            for key, op in ops.items() if key in spec
-        ]
-        if not parts:
-            raise ValueError(f"range filter needs gte/gt/lte/lt: {spec}")
-        return "(" + " AND ".join(parts) + ")"
-    if kind == "terms":
-        ((field, vals),) = body.items()
-        return f"{field} IN ({', '.join(lit(v) for v in vals)})"
-    if kind == "exists":
-        return f"{body['field']} IS NOT NULL"
-    raise ValueError(f"not a metadata leaf: {kind!r}")
-
-
 def _parse_bool_tree(node: dict):
     """JSON query node → internal tree: ("clause", terms) leaves,
     ("meta", json) leaves, ("bool", must, should, must_not, f_text,
@@ -1980,697 +1957,6 @@ def bool_tree_oracle_sql(
     ORDER BY score DESC, p.{id_col} ASC
     LIMIT {top_k}
     """
-
-
-def _interval_seconds(spec: str) -> int:
-    """Parse an ES fixed_interval / calendar_interval string to whole
-    seconds (the calendar units a fixed epoch-floor can honor:
-    s/m/h/d/w — month/quarter/year need true calendar arithmetic and
-    are routed to date_trunc instead)."""
-    import re as _re
-
-    m = _re.fullmatch(r"(\d+)(s|m|h|d|w)", spec)
-    if not m:
-        raise ValueError(f"unsupported interval {spec!r}")
-    mult = {"s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
-    return int(m.group(1)) * mult[m.group(2)]
-
-
-def _hit_score_col(rows) -> "str | None":
-    """Resolve which column carries the QUERY score on a hit
-    relation: execute_search_request joins it in as `_query_score`
-    when the doc relation has its own `score` FIELD (so the two
-    never collide); direct callers pass plain `score`. None → the
-    relation is unscored."""
-    if "_query_score" in rows.columns:
-        return "_query_score"
-    if "score" in rows.columns:
-        return "score"
-    return None
-
-
-def execute_aggs_dsl(
-    rows: DataFrame,
-    aggs: dict,
-    *,
-    background: DataFrame | None = None,
-    id_col: str = "doc_id",
-    index_tables: dict | None = None,
-) -> dict:
-    """Execute an OpenSearch ``aggs`` body against a hit relation
-    (the rows a query produced, carrying their fields) — the
-    aggregation half of the switch-over surface. Returns
-    {agg_name: DataFrame}, one result per named aggregation, each
-    delegating to the engine's dedicated operator (exact where
-    OpenSearch sketches — the repo-wide stance).
-
-    Supported types: terms, date_histogram (fixed_interval s/m/h/d/w
-    or calendar_interval month/year via date_trunc), histogram
-    (explicit interval), range, filters (term-filter leaves),
-    percentiles (exact nearest-rank via the range-partitioned
-    prefix), stats, extended_stats, cardinality (EXACT distinct),
-    value_count, sum, avg, min, max, missing, rare_terms
-    (categorical field of the hit relation — exact where OpenSearch
-    runs CuckooFilters), multi_terms, weighted_avg,
-    boxplot, median_absolute_deviation, string_stats,
-    percentile_ranks — the sketch-backed OpenSearch metrics all
-    compute EXACT here (the repo-wide stance). composite (terms +
-    date_histogram sources, after-key paging) and the PIPELINE aggs
-    (derivative / cumulative_sum / moving_fn via buckets_path;
-    bucket_script / bucket_selector with painless params.X
-    translation; bucket_sort) route to their operators over the
-    bounded bucket relations.
-
-    SUB-AGGREGATIONS (the standard Kibana body — buckets carrying
-    per-bucket metrics): terms / date_histogram / histogram accept a
-    sibling ``aggs`` key whose entries are METRIC aggs (value_count /
-    sum / avg / min / max / cardinality); each lands as one output
-    column named by its agg name, computed in the SAME map-side-
-    combined groupBy — nesting adds zero extra shuffles. Bucket
-    aggs under buckets (and sub-aggs on range/filters/percentiles)
-    raise a reasoned error.
-
-    SCORE-DEPENDENT compositions route to their dedicated operators
-    and need ``rows`` to carry a ``score`` column (pass the body
-    through :func:`execute_search_request`, which joins the query
-    scores into the hit relation): ``top_hits`` as the single
-    sub-agg of a terms bucket → top_hits_per_facet; ``sampler`` /
-    ``diversified_sampler`` with one terms sub-agg → the global
-    top-shard_size (resp. per-dedup-capped) sample feeding
-    sampler_agg's per-facet count + exact mean score.
-    """
-    if not aggs:
-        raise ValueError("aggs body is empty")
-
-    def metric_cols(sub: dict) -> list:
-        cols = []
-        for sname, sspec in sub.items():
-            if len(sspec) != 1:
-                raise ValueError(
-                    f"sub-agg {sname!r} must have exactly one type"
-                )
-            skind, sbody = next(iter(sspec.items()))
-            sf = sbody.get("field")
-            v = F.col(sf).cast("double")
-            if skind == "value_count":
-                cols.append(F.count(F.col(sf)).cast("long").alias(sname))
-            elif skind == "sum":
-                cols.append(
-                    F.sum(v.cast("decimal(18,6)")).cast("double")
-                    .alias(sname)
-                )
-            elif skind == "avg":
-                cols.append(
-                    (
-                        F.sum(v.cast("decimal(18,6)")).cast("double")
-                        / F.count(v)
-                    ).alias(sname)
-                )
-            elif skind == "min":
-                cols.append(F.min(v).alias(sname))
-            elif skind == "max":
-                cols.append(F.max(v).alias(sname))
-            elif skind == "cardinality":
-                cols.append(
-                    F.count_distinct(F.col(sf)).cast("long").alias(sname)
-                )
-            else:
-                raise ValueError(
-                    f"sub-agg type {skind!r} not supported under a "
-                    "bucket agg (metric sub-aggs only: value_count/"
-                    "sum/avg/min/max/cardinality)"
-                )
-        return cols
-
-    out = {}
-    pipeline = []
-    for name, spec in aggs.items():
-        spec = dict(spec)
-        sub = spec.pop("aggs", None) or spec.pop("aggregations", None)
-        if len(spec) != 1:
-            raise ValueError(
-                f"agg {name!r} must have exactly one agg type"
-            )
-        kind, body = next(iter(spec.items()))
-        # score-dependent bucket compositions (top_hits under terms,
-        # sampler / diversified_sampler) consume the QUERY SCORES,
-        # which ride `rows` as a `score` column when the caller
-        # passes a scored hit relation — execute_search_request does
-        if kind == "terms" and sub and any(
-            next(iter(s)) == "top_hits" for s in sub.values()
-        ):
-            if len(sub) != 1:
-                raise ValueError(
-                    "top_hits must be the only sub-agg of its terms "
-                    "bucket (mixing it with metric sub-aggs would "
-                    "need two result shapes under one name)"
-                )
-            score_col = _hit_score_col(rows)
-            if score_col is None:
-                raise ValueError(
-                    "top_hits needs a scored hit relation — run the "
-                    "body through execute_search_request, which "
-                    "carries the query scores into the aggs"
-                )
-            ((_hname, hspec),) = sub.items()
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (  # noqa: E501
-                top_hits_per_facet,
-            )
-
-            out[name] = top_hits_per_facet(
-                rows.select(
-                    id_col, F.col(score_col).alias("score")
-                ),
-                rows, [body["field"]],
-                id_col=id_col,
-                hits_per_bucket=int(hspec["top_hits"].get("size", 3)),
-            )
-            continue
-        if kind in ("sampler", "diversified_sampler"):
-            if (
-                not sub or len(sub) != 1
-                or next(iter(next(iter(sub.values())))) != "terms"
-            ):
-                raise ValueError(
-                    f"{kind} routes with exactly one terms sub-agg "
-                    "(the facet leg the sample feeds)"
-                )
-            score_col = _hit_score_col(rows)
-            if score_col is None:
-                raise ValueError(
-                    f"{kind} needs a scored hit relation — run the "
-                    "body through execute_search_request, which "
-                    "carries the query scores into the aggs"
-                )
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (  # noqa: E501
-                diversified_sampler,
-                sampler_agg,
-            )
-
-            ((_sname, sspec),) = sub.items()
-            facet = sspec["terms"]["field"]
-            shard = int(body.get("shard_size", 100))
-            scored = rows.select(id_col, F.col(score_col).alias("score"))
-            if kind == "sampler":
-                sample = (
-                    scored
-                    .orderBy(F.col("score").desc(), F.col(id_col).asc())
-                    .limit(shard)
-                )
-            else:
-                sample = diversified_sampler(
-                    scored, rows, body["field"],
-                    id_col=id_col, shard_size=shard,
-                    max_docs_per_value=int(
-                        body.get("max_docs_per_value", 1)
-                    ),
-                ).select(id_col, "score")
-            out[name] = sampler_agg(
-                rows, sample, facet_col=facet, id_col=id_col
-            )
-            continue
-        if sub is not None and kind not in (
-            "terms", "date_histogram", "histogram"
-        ):
-            raise ValueError(
-                f"sub-aggs are supported under terms/date_histogram/"
-                f"histogram buckets (and the sampler family), not "
-                f"{kind!r}"
-            )
-        subcols = metric_cols(sub) if sub else []
-        field = body.get("field")
-        if kind == "terms":
-            size = int(body.get("size", 10))
-            out[name] = (
-                rows.groupBy(F.col(field).alias("key"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("doc_count"),
-                    *subcols,
-                )
-                .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-                .limit(size)
-            )
-        elif kind == "date_histogram":
-            if "calendar_interval" in body and body[
-                "calendar_interval"
-            ] in ("month", "quarter", "year"):
-                unit = body["calendar_interval"]
-                out[name] = (
-                    rows.filter(F.col(field).isNotNull())
-                    .groupBy(
-                        F.date_trunc(unit, F.col(field)).alias("bucket_start")
-                    )
-                    .agg(
-                        F.count(F.lit(1)).cast("long").alias("doc_count"),
-                        *subcols,
-                    )
-                    .orderBy("bucket_start")
-                )
-            else:
-                spec_s = body.get("fixed_interval") or body.get(
-                    "calendar_interval"
-                )
-                iv = _interval_seconds(spec_s)
-                uts = F.unix_timestamp(F.col(field))
-                floor = uts - ((uts % F.lit(iv) + F.lit(iv)) % F.lit(iv))
-                out[name] = (
-                    rows.filter(F.col(field).isNotNull())
-                    .groupBy(
-                        F.timestamp_seconds(floor).alias("bucket_start")
-                    )
-                    .agg(
-                        F.count(F.lit(1)).cast("long").alias("doc_count"),
-                        *subcols,
-                    )
-                    .orderBy("bucket_start")
-                )
-        elif kind == "histogram":
-            iv = float(body["interval"])
-            if iv <= 0:
-                raise ValueError("histogram interval must be positive")
-            # 6-dp fixed-point flooring (the numeric_histogram
-            # portability pattern): bucket edges never depend on
-            # float division
-            ivq = int(round(iv * 1_000_000))
-            vq = F.floor(F.col(field).cast("double") * 1_000_000.0).cast(
-                "long"
-            )
-            # pure-integer floor (double-mod): exact for any long,
-            # matching retrieval.numeric_histogram's edge arithmetic
-            bucket = (
-                vq - ((vq % F.lit(ivq) + F.lit(ivq)) % F.lit(ivq))
-            ).cast("double") / F.lit(1_000_000.0)
-            v = F.col(field).cast("double")
-            out[name] = (
-                rows.filter(
-                    v.isNotNull() & ~F.isnan(v)
-                    & (F.abs(v) != F.lit(float("inf")))
-                )
-                .groupBy(bucket.alias("bucket_start"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("doc_count"),
-                    *subcols,
-                )
-                .orderBy("bucket_start")
-            )
-        elif kind == "range":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                range_buckets,
-            )
-
-            ranges = [
-                (
-                    r.get("key")
-                    or f"{r.get('from', '*')}-{r.get('to', '*')}",
-                    r.get("from"),
-                    r.get("to"),
-                )
-                for r in body["ranges"]
-            ]
-            out[name] = range_buckets(rows, field, ranges)
-        elif kind == "filters":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                filters_agg,
-            )
-
-            preds = []
-            for key, node in body["filters"].items():
-                fkind, fbody = next(iter(node.items()))
-                if fkind in ("range", "terms", "exists"):
-                    preds.append((key, _meta_sql(node)))
-                    continue
-                if fkind != "term":
-                    raise ValueError(
-                        "filters agg supports term / range / terms "
-                        "/ exists leaves"
-                    )
-                ((ffield, fval),) = fbody.items()
-                fval = fval["value"] if isinstance(fval, dict) else fval
-                lit = (
-                    "'" + str(fval).replace("'", "''") + "'"
-                    if isinstance(fval, str) else repr(fval)
-                )
-                preds.append((key, f"{ffield} = {lit}"))
-            out[name] = filters_agg(
-                rows, preds,
-                other_bucket_key=(
-                    "_other" if body.get("other_bucket") else None
-                ),
-            )
-        elif kind == "percentiles":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                _quantile_at_ranks,
-            )
-
-            percents = body.get("percents", [1, 5, 25, 50, 75, 95, 99])
-            v = F.col(field).cast("double")
-            clean = rows.filter(
-                v.isNotNull() & ~F.isnan(v)
-                & (F.abs(v) != F.lit(float("inf")))
-            )
-            dist = clean.groupBy(
-                F.floor(v * 1_000_000.0).cast("long").alias("qv")
-            ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-
-            def ranks(total):
-                return {
-                    f"p{str(p).replace('.', '_')}": max(
-                        1, -(-int(round(p * 10)) * total // 1000)
-                    )
-                    for p in percents
-                }
-
-            vals, _total = _quantile_at_ranks(dist, ranks)
-            spark = rows.sparkSession
-            out[name] = spark.createDataFrame(
-                [
-                    (
-                        float(p),
-                        None
-                        if vals[f"p{str(p).replace('.', '_')}"] is None
-                        else vals[f"p{str(p).replace('.', '_')}"]
-                        / 1_000_000.0,
-                    )
-                    for p in percents
-                ],
-                "percent double, value double",
-            )
-        elif kind == "extended_stats":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                extended_stats,
-            )
-
-            out[name] = extended_stats(
-                rows, field, sigma=float(body.get("sigma", 2.0))
-            )
-        elif kind == "stats":
-            v = F.col(field).cast("double")
-            clean = rows.filter(
-                v.isNotNull() & ~F.isnan(v)
-                & (F.abs(v) != F.lit(float("inf")))
-            )
-            out[name] = clean.agg(
-                F.count(F.lit(1)).cast("long").alias("count"),
-                F.min(v).alias("min"),
-                F.max(v).alias("max"),
-                F.sum(v.cast("decimal(18,6)")).cast("double").alias("sum"),
-                (
-                    F.sum(v.cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("avg"),
-            )
-        elif kind == "cardinality":
-            out[name] = rows.agg(
-                F.count_distinct(F.col(field)).cast("long").alias("value")
-            )
-        elif kind in ("value_count", "sum", "avg", "min", "max"):
-            v = F.col(field).cast("double")
-            clean = rows.filter(v.isNotNull())
-            expr = {
-                "value_count": F.count(F.col(field)).cast("long"),
-                "sum": F.sum(v.cast("decimal(18,6)")).cast("double"),
-                "avg": (
-                    F.sum(v.cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1))
-                ),
-                "min": F.min(v),
-                "max": F.max(v),
-            }[kind]
-            out[name] = clean.agg(expr.alias("value"))
-        elif kind == "missing":
-            # missing agg: docs where the field is null/absent —
-            # one bucket, one row
-            out[name] = rows.agg(
-                F.sum(F.col(field).isNull().cast("long"))
-                .cast("long").alias("doc_count")
-            )
-        elif kind == "rare_terms":
-            # rare_terms over a CATEGORICAL field of the hit
-            # relation: buckets whose doc count <= max_doc_count —
-            # the long-tail complement of terms, exact where
-            # OpenSearch runs CuckooFilters. The tokenized-text form
-            # (corpus-wide term df) is the dedicated indexed
-            # operator, not a hit-scoped agg — reasoned error.
-            if field not in rows.columns:
-                raise ValueError(
-                    f"rare_terms field {field!r} is not a column of "
-                    "the hit relation; for tokenized-text rare terms "
-                    "call operators/search.py:rare_terms on the "
-                    "token index (corpus-wide df semantics)"
-                )
-            mdc = int(body.get("max_doc_count", 1))
-            if mdc < 1:
-                raise ValueError("max_doc_count must be >= 1")
-            out[name] = (
-                rows.filter(F.col(field).isNotNull())
-                .groupBy(F.col(field).alias("key"))
-                .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-                .filter(F.col("doc_count") <= mdc)
-                .orderBy(F.col("doc_count").asc(), F.col("key").asc())
-            )
-        elif kind == "composite":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                composite_agg_page,
-            )
-
-            src_names = []
-            proj = rows
-            for src in body["sources"]:
-                ((sname, sspec),) = src.items()
-                skind, sbody = next(iter(sspec.items()))
-                if skind == "terms":
-                    proj = proj.withColumn(
-                        sname, F.col(sbody["field"])
-                    )
-                elif skind == "date_histogram":
-                    iv = _interval_seconds(
-                        sbody.get("fixed_interval")
-                        or sbody.get("calendar_interval")
-                    )
-                    uts = F.unix_timestamp(F.col(sbody["field"]))
-                    proj = proj.withColumn(
-                        sname,
-                        F.timestamp_seconds(
-                            uts - ((uts % F.lit(iv) + F.lit(iv))
-                                   % F.lit(iv))
-                        ),
-                    )
-                else:
-                    raise ValueError(
-                        "composite sources support terms / "
-                        f"date_histogram, got {skind!r}"
-                    )
-                src_names.append(sname)
-            after = body.get("after")
-            out[name] = composite_agg_page(
-                proj,
-                src_names,
-                {"doc_count": F.count(F.lit(1)).cast("long")},
-                after=(
-                    tuple(after[n] for n in src_names)
-                    if after is not None else None
-                ),
-                size=int(body.get("size", 10)),
-            )
-        elif kind == "multi_terms":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                multi_terms,
-            )
-
-            keys = [t["field"] for t in body["terms"]]
-            out[name] = multi_terms(
-                rows, keys, size=int(body.get("size", 10))
-            )
-        elif kind == "weighted_avg":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                weighted_avg,
-            )
-
-            out[name] = weighted_avg(
-                rows, body["value"]["field"], body["weight"]["field"]
-            )
-        elif kind == "boxplot":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                boxplot_agg,
-            )
-
-            out[name] = boxplot_agg(rows, field)
-        elif kind == "median_absolute_deviation":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                mad_agg,
-            )
-
-            out[name] = mad_agg(rows, field)
-        elif kind == "string_stats":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                string_stats,
-            )
-
-            out[name] = string_stats(rows, field)
-        elif kind == "percentile_ranks":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                percentile_ranks,
-            )
-
-            out[name] = percentile_ranks(
-                rows, field, [float(v) for v in body["values"]]
-            )
-        elif kind == "significant_terms":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                significant_terms,
-            )
-
-            if not index_tables or not {"tokens", "dl"} <= set(
-                index_tables
-            ):
-                raise ValueError(
-                    "significant_terms routes through the token "
-                    "index — pass index_tables={'tokens': ..., "
-                    "'dl': ...} (or use significant_text for the "
-                    "ad-hoc path)"
-                )
-            out[name] = significant_terms(
-                rows.sparkSession,
-                index_tables["tokens"],
-                index_tables["dl"],
-                rows.select(id_col),
-                id_col=id_col,
-                top_k=int(body.get("size", 10)),
-                min_doc_count=int(body.get("min_doc_count", 2)),
-            )
-        elif kind == "significant_text":
-            from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-                significant_text,
-            )
-
-            if background is None:
-                raise ValueError(
-                    "significant_text needs the BACKGROUND corpus "
-                    "(JLH compares hit-set term shares against it) — "
-                    "run it through execute_search_request, which "
-                    "passes the full relation, or call "
-                    "execute_aggs_dsl(background=...)"
-                )
-            out[name] = significant_text(
-                background, rows.select(id_col),
-                text_col=field, id_col=id_col,
-                top_k=int(body.get("size", 10)),
-                min_doc_count=int(body.get("min_doc_count", 2)),
-                filter_duplicate_text=bool(
-                    body.get("filter_duplicate_text", True)
-                ),
-            )
-        elif kind in ("derivative", "cumulative_sum", "moving_fn",
-                      "moving_avg", "bucket_script", "bucket_selector",
-                      "bucket_sort"):
-            pipeline.append((name, kind, body))
-            continue
-        else:
-            raise ValueError(f"unsupported agg type {kind!r}")
-    # second pass: PIPELINE aggs reference a sibling bucket agg via
-    # buckets_path ("daily>doc_count") — computed over that sibling's
-    # bounded bucket relation (never the corpus), the E153 contract
-    for name, kind, body in pipeline:
-        from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-            bucket_script_selector,
-            bucket_sort,
-            histogram_pipeline,
-        )
-
-        if kind in ("bucket_script", "bucket_selector"):
-            # painless params.X -> the referenced metric column; all
-            # paths must reference ONE sibling agg (cross-sibling
-            # scripts would need a bucket-key join — not routed)
-            paths = body["buckets_path"]
-            srcs = {p.partition(">")[0] for p in paths.values()}
-            if len(srcs) != 1:
-                raise ValueError(
-                    "bucket_script/selector paths must reference one "
-                    f"sibling agg, got {sorted(srcs)}"
-                )
-            (src_name,) = srcs
-            if src_name not in out:
-                raise ValueError(
-                    f"buckets_path references unknown sibling "
-                    f"{src_name!r}"
-                )
-            src = out[src_name]
-            script = body["script"]
-            # word-boundary substitution: plain replace() mangled a
-            # param whose name prefixes another (params.a / params.ab)
-            import re as _re
-
-            for var, p in paths.items():
-                metric = p.partition(">")[2] or "doc_count"
-                script = _re.sub(
-                    rf"params\.{_re.escape(var)}\b", metric, script
-                )
-            order_col = (
-                "bucket_start" if "bucket_start" in src.columns
-                else "key"
-            )
-            if kind == "bucket_script":
-                out[name] = bucket_script_selector(
-                    src, script=script, script_alias=name,
-                    order_col=order_col,
-                )
-            else:
-                out[name] = bucket_script_selector(
-                    src, script=f"CAST(({script}) AS BOOLEAN)",
-                    script_alias="_sel", selector="_sel",
-                    order_col=order_col,
-                ).drop("_sel")
-            continue
-        if kind == "bucket_sort":
-            src_name = body["buckets_path"]
-            if src_name not in out:
-                raise ValueError(
-                    f"bucket_sort buckets_path references unknown "
-                    f"sibling {src_name!r}"
-                )
-            sort = []
-            for entry in body.get("sort", []):
-                ((col, spec_),) = entry.items()
-                order = (
-                    spec_.get("order", "asc")
-                    if isinstance(spec_, dict) else spec_
-                )
-                sort.append((col, order))
-            out[name] = bucket_sort(
-                out[src_name], sort,
-                from_=int(body.get("from", 0)),
-                size=(
-                    int(body["size"]) if "size" in body else None
-                ),
-            )
-            continue
-        path = body["buckets_path"]
-        src_name, _, metric = path.partition(">")
-        if src_name not in out:
-            raise ValueError(
-                f"buckets_path {path!r} references unknown sibling "
-                f"agg {src_name!r} (pipeline aggs come AFTER their "
-                "source in the body)"
-            )
-        src = out[src_name]
-        metric = metric or "doc_count"
-        order_col = (
-            "bucket_start" if "bucket_start" in src.columns else "key"
-        )
-        piped = histogram_pipeline(
-            src, value_col=metric, order_col=order_col,
-            window=int(body.get("window", 3)),
-        )
-        col = {
-            "derivative": "derivative",
-            "cumulative_sum": "cumulative_sum",
-            "moving_fn": "moving_avg",
-            "moving_avg": "moving_avg",
-        }[kind]
-        out[name] = piped.select(
-            order_col, F.col(col).alias("value")
-        )
-    return out
 
 
 _UNCUT_KINDS = (
@@ -3174,9 +2460,8 @@ def execute_search_request(
             )
         else:
             raise ValueError(
-                f"suggest {sname!r}: term and phrase suggesters are "
-                "routed (the completion suggester is "
-                "autocomplete_prefix)"
+                f"suggest {sname!r}: only the term and phrase "
+                "suggesters are routed"
             )
 
     def slice_page(ordered):
@@ -3361,7 +2646,6 @@ __all__ = [
     "bool_tree_search",
     "clause_search",
     "clause_search_oracle_sql",
-    "execute_aggs_dsl",
     "execute_count_request",
     "execute_explain_request",
     "execute_search_dsl",

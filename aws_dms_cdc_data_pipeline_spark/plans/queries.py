@@ -3049,81 +3049,8 @@ def search_snippets_docs_q(spark, sf_dir):
     return search_snippets(docs, ["spark", "stream", "table"], width=8)
 
 
-@q(
-    "autocomplete_prefix_s",
-    """
-    WITH tok AS (
-        SELECT doc_id, t.term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM documents,
-             LATERAL (SELECT unnest(string_split_regex(lower(text),
-                                    '[^a-z0-9]+')) AS term) t
-        WHERE t.term <> ''
-        GROUP BY doc_id, t.term
-    )
-    SELECT term, CAST(COUNT(*) AS BIGINT) AS df,
-           CAST(SUM(tf) AS BIGINT) AS total_tf
-    FROM tok WHERE term LIKE 's%'
-    GROUP BY term ORDER BY df DESC, term ASC LIMIT 10
-    """,
-    "Search-as-you-type prefix completion from the materialized "
-    "token index ranked by document frequency "
-    "(operators/retrieval.py:autocomplete_prefix): one filtered "
-    "aggregate — df per term is shuffle-free on the term-bucketed "
-    "index. Hash buckets can't prune a prefix predicate; the "
-    "docstring names the range-clustered layout "
-    "(maintenance/layout.py) as the prefix-prunable deployment "
-    "shape for heavy autocomplete traffic.",
-)
-def autocomplete_prefix_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        autocomplete_prefix,
-    )
-
-    idx_t, _ = _token_index_for(spark, sf_dir)
-    return autocomplete_prefix(spark, idx_t, "s", top_k=10)
-
-
-@q(
-    "faceted_search_stats",
-    f"""
-    WITH hits AS (
-        SELECT doc_id FROM ({_bm25_sub_sql(100)})
-    )
-    SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_hits,
-           MIN(n_chars) AS n_chars_min,
-           MAX(n_chars) AS n_chars_max,
-           round(CAST(SUM(CAST(n_chars AS DECIMAL(18,6))) AS DOUBLE)
-                 / COUNT(*), 6) AS n_chars_avg
-    FROM documents JOIN hits USING (doc_id)
-    GROUP BY lang, source
-    ORDER BY n_hits DESC, lang ASC, source ASC
-    """,
-    "Facet aggregations over a search hit set (OpenSearch "
-    "aggregations-on-query parity — the Discover sidebar counts: "
-    "operators/retrieval.py:facet_counts): the BM25 top-100 hit set "
-    "BROADCASTS into the documents join (the corpus never shuffles), "
-    "then one facet-keyed aggregate yields per-(lang, source) counts "
-    "+ exact n_chars min/max/avg (decimal-accumulated — bit-stable "
-    "across partitionings, mirrored by the oracle).",
-)
-def faceted_search_stats_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        facet_counts,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.search import (
-        bm25_search_indexed,
-    )
-
-    idx_t, dl_t = _token_index_for(spark, sf_dir)
-    hits = bm25_search_indexed(
-        spark, idx_t, dl_t, ["spark", "shuffle", "broadcast"], top_k=100
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    return facet_counts(hits, docs, ["lang", "source"], stat_col="n_chars")
-
-
 def _top_hits_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         top_hits_oracle_sql,
     )
 
@@ -3143,10 +3070,10 @@ def _top_hits_oracle() -> str:
     "(the corpus never shuffles), then a per-(lang, source) rank "
     "window keeps the 2 best-scoring docs per bucket, "
     "WindowGroupLimit-trimmed map-side "
-    "(operators/retrieval.py:top_hits_per_facet).",
+    "(operators/aggs.py:top_hits_per_facet).",
 )
 def top_hits_per_facet_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         top_hits_per_facet,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
@@ -3164,7 +3091,7 @@ def top_hits_per_facet_q(spark, sf_dir):
 
 
 def _sig_terms_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_terms_oracle_sql,
     )
 
@@ -3183,10 +3110,10 @@ def _sig_terms_oracle() -> str:
     "rounded once). The hit set broadcasts into a semi-join against "
     "the term-bucketed index (foreground df); background df is the "
     "shuffle-free term aggregate; the corpus never shuffles "
-    "(operators/retrieval.py:significant_terms).",
+    "(operators/aggs.py:significant_terms).",
 )
 def significant_terms_hits_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_terms,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
@@ -3198,39 +3125,6 @@ def significant_terms_hits_q(spark, sf_dir):
         spark, idx_t, dl_t, ["spark", "shuffle", "broadcast"], top_k=50
     )
     return significant_terms(spark, idx_t, dl_t, hits, top_k=10)
-
-
-def _numeric_histogram_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        numeric_histogram_oracle_sql,
-    )
-
-    return numeric_histogram_oracle_sql(
-        "SELECT value FROM events WHERE event_type = 'purchase'",
-        "value",
-        target_buckets=20,
-    )
-
-
-@q(
-    "search_value_histogram",
-    _numeric_histogram_oracle(),
-    "Numeric-field histogram over a search hit set — the Discover "
-    "numeric facet panel (OpenSearch histogram aggregation, auto "
-    "interval): purchase-event values bucket on the smallest 1-2-5 "
-    "decade rung keeping <=20 buckets; values quantize to 6-decimal "
-    "fixed point before integer-exact floor bucketing, so bucket "
-    "edges are bit-identical cross-engine "
-    "(operators/retrieval.py:numeric_histogram).",
-)
-def search_value_histogram_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        numeric_histogram,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    hits = ev.filter(F.col("event_type") == "purchase")
-    return numeric_histogram(hits, "value", target_buckets=20)
 
 
 def _index_stats_oracle() -> str:
@@ -3303,89 +3197,6 @@ def wildcard_search_docs_q(spark, sf_dir):
     return res.withColumn("terms", F.array_join("terms", " "))
 
 
-def _date_histogram_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram_oracle_sql,
-    )
-
-    return date_histogram_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'error' AND value >= 5.0",
-        target_buckets=24,
-    )
-
-
-@q(
-    "search_date_histogram",
-    _date_histogram_oracle(),
-    "Date-histogram aggregation over a search hit set — the Discover "
-    "histogram-above-results panel (OpenSearch auto_date_histogram; "
-    "reference README.md:376-390 renders it over the ingested trans "
-    "index): the hit set is a pushed-filter match on the event "
-    "stream (Discover's KQL bar), a 2-row min/max agg broadcasts the "
-    "time span, the smallest interval-ladder rung keeping <=24 "
-    "buckets is chosen, and buckets are integer-exact epoch-second "
-    "floors (operators/retrieval.py:date_histogram).",
-)
-def search_date_histogram_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    hits = ev.filter(
-        (F.col("event_type") == "error") & (F.col("value") >= 5.0)
-    )
-    return date_histogram(hits, "ts", target_buckets=24)
-
-
-@q(
-    "search_after_page",
-    f"""
-    WITH b AS (
-        SELECT doc_id, score FROM ({_bm25_sub_sql(200)})
-    ),
-    ranked AS (
-        SELECT doc_id, score,
-               row_number() OVER (ORDER BY score DESC, doc_id) AS rn
-        FROM b
-    ),
-    cur AS (SELECT score AS cs, doc_id AS ci FROM ranked WHERE rn = 10)
-    SELECT doc_id, score
-    FROM b, cur
-    WHERE score < cs OR (score = cs AND doc_id > ci)
-    ORDER BY score DESC, doc_id ASC
-    LIMIT 10
-    """,
-    "Deep pagination without OFFSET (OpenSearch search_after / keyset "
-    "pagination — operators/retrieval.py:keyset_page): the page "
-    "strictly after the rank-10 cursor in the (score DESC, id ASC) "
-    "total order. The 1-row cursor broadcasts into a scan-side "
-    "filter, the page cut compiles to TakeOrderedAndProject — "
-    "O(page) output, no offset scan, stable under concurrent "
-    "appends (OFFSET paging re-ranks and discards N·page rows and "
-    "skips/duplicates when data moves underneath).",
-)
-def search_after_page_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        keyset_page,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.search import (
-        bm25_search_indexed,
-    )
-
-    idx_t, dl_t = _token_index_for(spark, sf_dir)
-    ranked = bm25_search_indexed(
-        spark, idx_t, dl_t, ["spark", "shuffle", "broadcast"], top_k=200
-    ).select("doc_id", "score")
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    cursor = (
-        ranked.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 10)
-        .select("doc_id", "score")
-    )
-    return keyset_page(ranked, cursor, page_size=10)
-
-
 @q(
     "spell_suggest_terms",
     """
@@ -3434,92 +3245,6 @@ def spell_suggest_terms_q(spark, sf_dir):
         spark, idx_t, ["spak", "strem", "tble", "windoow"],
         max_dist=2, top_k=3,
     )
-
-
-@q(
-    "retrieval_eval_ann",
-    """
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv,
-                      label AS ql
-               FROM embeddings WHERE vec_id < 8),
-    scored AS (
-        SELECT q.query_id, e.vec_id,
-               round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            q.qv), 6) AS cosine
-        FROM embeddings e CROSS JOIN q
-    ),
-    res AS (
-        SELECT query_id, vec_id, rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, vec_id) AS rank
-              FROM scored)
-        WHERE rank <= 10
-    ),
-    gold AS (SELECT q.query_id, e.vec_id
-             FROM embeddings e JOIN q ON e.label = q.ql),
-    j AS (
-        SELECT g.query_id, g.vec_id, r.rank
-        FROM gold g LEFT JOIN res r
-          ON g.query_id = r.query_id AND g.vec_id = r.vec_id
-    ),
-    per AS (
-        SELECT query_id,
-               CAST(COUNT(*) AS BIGINT) AS n_gold,
-               CAST(SUM(CASE WHEN rank IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hit,
-               MIN(rank) AS first_rank,
-               CAST(SUM(CASE WHEN rank IS NOT NULL
-                        THEN CAST(round(1000000.0 / log2(rank + 1.0), 0)
-                                  AS BIGINT)
-                        ELSE 0 END) AS BIGINT) AS dcg_q
-        FROM j GROUP BY query_id
-    ),
-    ideal AS (
-        SELECT per.query_id,
-               CAST(SUM(CAST(round(1000000.0 / log2(s.r + 1.0), 0)
-                             AS BIGINT)) AS BIGINT) AS idcg_q
-        FROM per, UNNEST(generate_series(1, LEAST(n_gold, 10))) s(r)
-        GROUP BY per.query_id
-    )
-    SELECT per.query_id,
-           round(CAST(n_hit AS DOUBLE) / n_gold, 6) AS recall_at_k,
-           CASE WHEN first_rank IS NOT NULL
-                THEN round(1.0 / first_rank, 6) ELSE 0.0 END AS mrr,
-           round(CAST(dcg_q AS DOUBLE) / CAST(idcg_q AS DOUBLE), 6)
-               AS ndcg_at_k
-    FROM per JOIN ideal ON per.query_id = ideal.query_id
-    """,
-    "Retrieval-quality evaluation (recall@10 / MRR / nDCG@10) of the "
-    "exact-cosine top-10 against a label-relevance gold set — the "
-    "eval loop of a retrieval/training-data pipeline as ONE query "
-    "(operators/retrieval.py:retrieval_eval): gold and result "
-    "relations are top-k/label-sized, one outer join + one aggregate "
-    "per query; every metric quantizes through integer sums so the "
-    "output is bit-identical cross-engine (nDCG's log2 terms round "
-    "to 6 before an order-independent fixed-point sum). "
-    "Self-retrieval counts as a hit (documented choice, mirrored by "
-    "the oracle).",
-)
-def retrieval_eval_ann_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        retrieval_eval,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qdf = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    res = V.brute_force_topk(emb, qdf, k=10).select(
-        "query_id", F.col("vec_id").alias("doc_id"), F.col("rank")
-    )
-    qlab = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("_ql")
-    )
-    gold = emb.join(
-        F.broadcast(qlab), emb["label"] == qlab["_ql"]
-    ).select("query_id", F.col("vec_id").alias("doc_id"))
-    return retrieval_eval(res, gold, k=10)
 
 
 @q(
@@ -4166,48 +3891,6 @@ def fuzzy_search_docs_q(spark, sf_dir):
     return res.withColumn("terms", F.array_join("terms", " "))
 
 
-def _hist_pipeline_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram_oracle_sql,
-        histogram_pipeline_oracle_sql,
-    )
-
-    hist = date_histogram_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'error' AND value >= 5.0",
-        target_buckets=24,
-    )
-    return histogram_pipeline_oracle_sql(
-        hist, value_col="n_hits", order_col="bucket_start", window=3
-    )
-
-
-@q(
-    "search_histogram_pipeline",
-    _hist_pipeline_oracle(),
-    "Pipeline aggregations stacked on the Discover date histogram — "
-    "the OpenSearch derivative / cumulative_sum / moving_fn sibling "
-    "aggs: bucket-over-bucket delta (null first bucket), running "
-    "total, and a trailing 3-bucket mean over the same error-event "
-    "hit set as search_date_histogram. The window pass runs on the "
-    "<=24-row histogram result, never the corpus "
-    "(operators/retrieval.py:histogram_pipeline).",
-)
-def search_histogram_pipeline_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-        histogram_pipeline,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    hits = ev.filter(
-        (F.col("event_type") == "error") & (F.col("value") >= 5.0)
-    )
-    hist = date_histogram(hits, "ts", target_buckets=24)
-    return histogram_pipeline(
-        hist, value_col="n_hits", order_col="bucket_start", window=3
-    )
-
-
 _COMPOSITE_AFTER = ("error", "2100-01-01")
 
 
@@ -4230,10 +3913,10 @@ _COMPOSITE_AFTER = ("error", "2100-01-01")
     "key order via after, where a terms agg caps at top-N): the next "
     "12 (event_type, day) buckets strictly after the after-key, one "
     "map-side-combined aggregate + TakeOrderedAndProject per page, "
-    "no OFFSET re-rank (operators/retrieval.py:composite_agg_page).",
+    "no OFFSET re-rank (operators/aggs.py:composite_agg_page).",
 )
 def composite_agg_events_page_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         composite_agg_page,
     )
 
@@ -4376,7 +4059,7 @@ _RANGE_BUCKETS = [
 
 
 def _range_agg_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         range_buckets_oracle_sql,
     )
 
@@ -4398,10 +4081,10 @@ def _range_agg_oracle() -> str:
     "empty extreme bucket. The declared relation broadcasts into one "
     "bound-predicate join (a CASE stack would drop the overlap "
     "semantics), then a <=|ranges| aggregate "
-    "(operators/retrieval.py:range_buckets).",
+    "(operators/aggs.py:range_buckets).",
 )
 def range_agg_event_values_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         range_buckets,
     )
 
@@ -4598,7 +4281,7 @@ _DAY_BUCKETS_SQL = """
 
 
 def _bucket_script_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         bucket_script_selector_oracle_sql,
     )
 
@@ -4623,10 +4306,10 @@ def _bucket_script_oracle() -> str:
     "division, the selector keeps busy high-error days. Both steps "
     "are narrow projections/filters on the <=|days| bucket relation, "
     "never the corpus "
-    "(operators/retrieval.py:bucket_script_selector).",
+    "(operators/aggs.py:bucket_script_selector).",
 )
 def search_bucket_script_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         bucket_script_selector,
     )
 
@@ -4658,7 +4341,7 @@ _NAMED_FILTERS = [
 
 
 def _filters_agg_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         filters_agg_oracle_sql,
     )
 
@@ -4679,10 +4362,10 @@ def _filters_agg_oracle() -> str:
     "purchase pills over the event stream. ONE scan, ONE 1-row "
     "aggregate of conditional sums unpivoted through a literal — "
     "corpus work independent of the filter count "
-    "(operators/retrieval.py:filters_agg).",
+    "(operators/aggs.py:filters_agg).",
 )
 def search_filters_agg_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         filters_agg,
     )
 
@@ -4690,39 +4373,8 @@ def search_filters_agg_q(spark, sf_dir):
     return filters_agg(ev, _NAMED_FILTERS, other_bucket_key="other")
 
 
-def _adjacency_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        adjacency_matrix_oracle_sql,
-    )
-
-    return adjacency_matrix_oracle_sql(
-        "SELECT event_type, value FROM events", _NAMED_FILTERS
-    )
-
-
-@q(
-    "search_adjacency_matrix",
-    _adjacency_oracle(),
-    "Adjacency-matrix aggregation — the OpenSearch adjacency_matrix "
-    "agg (co-occurrence counts: one bucket per named filter plus one "
-    "per pairwise intersection, keys joined 'a&b' in key order, "
-    "empty buckets omitted — errors&purchases is structurally empty "
-    "and must NOT appear): same event-filter family as "
-    "search_filters_agg. One 1-row aggregate holding |F|+C(|F|,2) "
-    "conditional sums, literal unpivot "
-    "(operators/retrieval.py:adjacency_matrix).",
-)
-def search_adjacency_matrix_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        adjacency_matrix,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    return adjacency_matrix(ev, _NAMED_FILTERS)
-
-
 def _bucket_sort_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         bucket_sort_oracle_sql,
     )
 
@@ -4744,10 +4396,10 @@ def _bucket_sort_oracle() -> str:
     "resolve, unlike OpenSearch's shard-order) and page buckets "
     "2..6 without re-keying. A bounded sort + truncation over the "
     "<=|days| parent result, never the corpus "
-    "(operators/retrieval.py:bucket_sort).",
+    "(operators/aggs.py:bucket_sort).",
 )
 def search_bucket_sort_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         bucket_sort,
     )
 
@@ -4766,7 +4418,7 @@ def search_bucket_sort_q(spark, sf_dir):
 
 
 def _percentile_ranks_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         percentile_ranks_oracle_sql,
     )
 
@@ -4786,10 +4438,10 @@ def _percentile_ranks_oracle() -> str:
     "100*|x<=v|/N where OpenSearch estimates with a t-digest — a "
     "distributed exact count needs no sketch. One scan, one 1-row "
     "aggregate of conditional sums, literal unpivot "
-    "(operators/retrieval.py:percentile_ranks).",
+    "(operators/aggs.py:percentile_ranks).",
 )
 def events_percentile_ranks_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         percentile_ranks,
     )
 
@@ -4798,45 +4450,8 @@ def events_percentile_ranks_q(spark, sf_dir):
     return percentile_ranks(hits, "value", [1.0, 5.0, 9.0])
 
 
-def _dense_histogram_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram_oracle_sql,
-    )
-
-    return date_histogram_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'purchase' "
-        "AND value >= 9.9",
-        target_buckets=30,
-        min_doc_count=0,
-    )
-
-
-@q(
-    "search_date_histogram_dense",
-    _dense_histogram_oracle(),
-    "Dense date histogram — OpenSearch min_doc_count: 0 (the "
-    "Discover panel contract: gaps in a SPARSE hit set render as "
-    "zero bars, not missing bars): rare high-value purchases "
-    "bucketed with empty buckets zero-filled between the first and "
-    "last occupied bucket. The spine is a sequence off the same "
-    "1-row min/max broadcast (<=target_buckets elements), left "
-    "joined to the counts — no extra hit-relation pass "
-    "(operators/retrieval.py:date_histogram).",
-)
-def search_date_histogram_dense_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    hits = ev.filter(
-        (F.col("event_type") == "purchase") & (F.col("value") >= 9.9)
-    )
-    return date_histogram(hits, "ts", target_buckets=30, min_doc_count=0)
-
-
 def _extended_stats_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         extended_stats_oracle_sql,
     )
 
@@ -4857,10 +4472,10 @@ def _extended_stats_oracle() -> str:
     "DECIMAL(38,0), and only final short IEEE chains (mirrored "
     "verbatim in the oracle) touch doubles — bit-identical "
     "cross-engine. One scan, one 1-row aggregate "
-    "(operators/retrieval.py:extended_stats).",
+    "(operators/aggs.py:extended_stats).",
 )
 def events_extended_stats_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         extended_stats,
     )
 
@@ -4870,7 +4485,7 @@ def events_extended_stats_q(spark, sf_dir):
 
 
 def _multi_terms_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         multi_terms_oracle_sql,
     )
 
@@ -4890,10 +4505,10 @@ def _multi_terms_oracle() -> str:
     "(lang, source) pairs by document count, null-keyed rows "
     "dropped, ties resolved by the key tuple. One scan, one "
     "map-side-combined composite-key aggregate, "
-    "TakeOrderedAndProject cut (operators/retrieval.py:multi_terms).",
+    "TakeOrderedAndProject cut (operators/aggs.py:multi_terms).",
 )
 def docs_multi_terms_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         multi_terms,
     )
 
@@ -4902,7 +4517,7 @@ def docs_multi_terms_q(spark, sf_dir):
 
 
 def _weighted_avg_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         weighted_avg_oracle_sql,
     )
 
@@ -4923,10 +4538,10 @@ def _weighted_avg_oracle() -> str:
     "products summed exact in DECIMAL(38,0), one final double "
     "division chain — the quantized-exact cross-engine argument. "
     "One scan, one 1-row aggregate "
-    "(operators/retrieval.py:weighted_avg).",
+    "(operators/aggs.py:weighted_avg).",
 )
 def lineitem_weighted_avg_price_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         weighted_avg,
     )
 
@@ -5016,41 +4631,6 @@ def span_first_docs_q(spark, sf_dir):
     return span_first_indexed(spark, pos, "spark", end=12)
 
 
-def _matrix_stats_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        matrix_stats_oracle_sql,
-    )
-
-    return matrix_stats_oracle_sql(
-        "SELECT l_quantity, l_extendedprice, l_discount FROM lineitem",
-        ["l_quantity", "l_extendedprice", "l_discount"],
-    )
-
-
-@q(
-    "lineitem_matrix_stats",
-    _matrix_stats_oracle(),
-    "Matrix-stats aggregation — the OpenSearch matrix_stats agg's "
-    "covariance/correlation surface: population covariance + Pearson "
-    "correlation for every unordered pair of "
-    "(l_quantity, l_extendedprice, l_discount) over COMPLETE rows "
-    "(a row missing any field drops from the whole matrix). Exact "
-    "quantized DECIMAL sums; the fp^2 scale factor cancels inside "
-    "the correlation so it computes in quantized units with no extra "
-    "rounding. One scan, one 1-row aggregate of |F|+C(|F|+1,2) sums, "
-    "literal unpivot (operators/retrieval.py:matrix_stats).",
-)
-def lineitem_matrix_stats_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        matrix_stats,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return matrix_stats(
-        li, ["l_quantity", "l_extendedprice", "l_discount"]
-    )
-
-
 _TERMS_SET_PROBE = ["spark", "join", "window", "filter", "merge"]
 _TERMS_SET_MSM = "CASE WHEN n_chars >= 300 THEN 3 ELSE 2 END"
 
@@ -5131,85 +4711,6 @@ def boosting_search_docs_q(spark, sf_dir):
     )
 
 
-def _sibling_buckets_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        sibling_bucket_stats_oracle_sql,
-    )
-
-    return sibling_bucket_stats_oracle_sql(
-        _DAY_BUCKETS_SQL, key_col="day", value_col="n_hits"
-    )
-
-
-@q(
-    "search_sibling_buckets",
-    _sibling_buckets_oracle(),
-    "Sibling pipeline aggregations — the OpenSearch max_bucket / "
-    "min_bucket / avg_bucket / sum_bucket / stats_bucket aggs in one "
-    "pass over the daily event buckets: exact long sum/min/max, the "
-    "single long/long mean division, and the sorted key SETS "
-    "attaining each extreme (OpenSearch reports every tied bucket). "
-    "One bounded single-task aggregate over the <=|days| bucket "
-    "relation, never the corpus "
-    "(operators/retrieval.py:sibling_bucket_stats).",
-)
-def search_sibling_buckets_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        sibling_bucket_stats,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    buckets = ev.groupBy(
-        F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    return sibling_bucket_stats(buckets, key_col="day", value_col="n_hits")
-
-
-def _serial_diff_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram_oracle_sql,
-        serial_diff_normalize_oracle_sql,
-    )
-
-    hist = date_histogram_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'error' AND value >= 5.0",
-        target_buckets=24,
-    )
-    return serial_diff_normalize_oracle_sql(
-        hist, value_col="n_hits", order_col="bucket_start", lag=3
-    )
-
-
-@q(
-    "search_serial_diff",
-    _serial_diff_oracle(),
-    "serial_diff + normalize pipeline aggregations — the two "
-    "remaining parent-pipeline aggs (OpenSearch lag-N seasonal "
-    "differencing, null for the first N buckets; normalize with the "
-    "percent_of_sum and 0-1 range methods) stacked on the same "
-    "error-event date histogram as search_histogram_pipeline: lag-3 "
-    "delta on exact longs, one long/long division per bucket for "
-    "each normalize method, zero-width range -> NULL on both "
-    "engines. Window + global-extremes passes run on the <=24-row "
-    "histogram, never the corpus "
-    "(operators/retrieval.py:serial_diff_normalize).",
-)
-def search_serial_diff_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-        serial_diff_normalize,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    hits = ev.filter(
-        (F.col("event_type") == "error") & (F.col("value") >= 5.0)
-    )
-    hist = date_histogram(hits, "ts", target_buckets=24)
-    return serial_diff_normalize(
-        hist, value_col="n_hits", order_col="bucket_start", lag=3
-    )
-
-
 def _phrase_suggest_oracle() -> str:
     from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
         phrase_suggest_oracle_sql,
@@ -5249,114 +4750,8 @@ def phrase_suggest_docs_q(spark, sf_dir):
     )
 
 
-def _cum_card_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        cumulative_cardinality_oracle_sql,
-    )
-
-    return cumulative_cardinality_oracle_sql()
-
-
-@q(
-    "cumulative_unique_users",
-    _cum_card_oracle(),
-    "cumulative_cardinality pipeline aggregation — the OpenSearch "
-    "x-pack agg ('total unique users to date' on the daily "
-    "histogram, where per-bucket cardinality + cumulative_sum "
-    "double-counts returning users): EXACT where OpenSearch merges "
-    "HLL sketches — each user contributes from their FIRST day "
-    "onward, so one map-side-combined groupBy(user) min carrying "
-    "(user, day) pairs + a bounded day-level cumulative window "
-    "(operators/retrieval.py:cumulative_cardinality).",
-)
-def cumulative_unique_users_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        cumulative_cardinality,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return cumulative_cardinality(ev, ts_col="ts", key_col="user_id")
-
-
-def _top_metrics_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        top_metrics_oracle_sql,
-    )
-
-    return top_metrics_oracle_sql(mode="max")
-
-
-@q(
-    "top_metrics_events",
-    _top_metrics_oracle(),
-    "top_metrics aggregation — the OpenSearch agg returning, per "
-    "event_type bucket, the value of the LATEST event (argmax by "
-    "ts, event_id tiebreak making the extreme total where "
-    "OpenSearch leaves ties shard-dependent). ONE map-side-combined "
-    "aggregate: the extreme is max over (sort, tie, metric) structs "
-    "whose compare never reaches the metric — no per-bucket sort, "
-    "no corpus window; ts rides out as exact epoch micros "
-    "(operators/retrieval.py:top_metrics).",
-)
-def top_metrics_events_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        top_metrics,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return top_metrics(
-        ev, bucket_col="event_type", sort_col="ts",
-        tie_col="event_id", metric_col="value", mode="max",
-    )
-
-
-def _moving_pct_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram_oracle_sql,
-        moving_percentiles_oracle_sql,
-    )
-
-    hist = date_histogram_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'error' AND value >= 5.0",
-        target_buckets=24,
-    )
-    return moving_percentiles_oracle_sql(
-        hist, value_col="n_hits", order_col="bucket_start",
-        window=5, percentiles=(0.5, 0.95),
-    )
-
-
-@q(
-    "search_moving_percentiles",
-    _moving_pct_oracle(),
-    "moving_percentiles pipeline aggregation — the OpenSearch x-pack "
-    "rolling-p95 alerting shape on the error-event date histogram: "
-    "EXACT nearest-rank percentiles over the trailing 5-bucket "
-    "window (element ceil(p*n) of the <=5-element sorted window, "
-    "output stays an exact long) where OpenSearch merges TDigest "
-    "sketches; shorter leading windows use what exists. Bounded "
-    "single-task pass over the <=24-row histogram "
-    "(operators/retrieval.py:moving_percentiles).",
-)
-def search_moving_percentiles_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-        moving_percentiles,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    hits = ev.filter(
-        (F.col("event_type") == "error") & (F.col("value") >= 5.0)
-    )
-    hist = date_histogram(hits, "ts", target_buckets=24)
-    return moving_percentiles(
-        hist, value_col="n_hits", order_col="bucket_start",
-        window=5, percentiles=(0.5, 0.95),
-    )
-
-
 def _boxplot_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         boxplot_oracle_sql,
     )
 
@@ -5374,10 +4769,10 @@ def _boxplot_oracle() -> str:
     "over a distinct-value distribution — the cumulative window runs "
     "over distinct values, never a row-sized global sort) where "
     "OpenSearch approximates through TDigest "
-    "(operators/retrieval.py:boxplot_agg).",
+    "(operators/aggs.py:boxplot_agg).",
 )
 def events_boxplot_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         boxplot_agg,
     )
 
@@ -5386,7 +4781,7 @@ def events_boxplot_q(spark, sf_dir):
 
 
 def _mad_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         mad_oracle_sql,
     )
 
@@ -5404,17 +4799,17 @@ def _mad_oracle() -> str:
     "medians from the SAME distinct-value distribution; OpenSearch "
     "approximates through TDigest). The E103 robust-spread machinery "
     "exposed as the standalone Discover metric "
-    "(operators/retrieval.py:mad_agg).",
+    "(operators/aggs.py:mad_agg).",
 )
 def events_mad_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import mad_agg
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import mad_agg
 
     ev = load_table(spark, sf_dir, "events")
     return mad_agg(ev.filter(F.col("event_type") == "purchase"), "value")
 
 
 def _string_stats_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         string_stats_oracle_sql,
     )
 
@@ -5431,52 +4826,18 @@ def _string_stats_oracle() -> str:
     "order-free) sum, absorbing sub-ulp libm drift (the E130 "
     "collocations precedent); lengths aggregate in-row with no "
     "explode, the entropy pass aggregates to the alphabet "
-    "(operators/retrieval.py:string_stats).",
+    "(operators/aggs.py:string_stats).",
 )
 def docs_string_stats_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         string_stats,
     )
 
     return string_stats(load_table(spark, sf_dir, "documents"), "text")
 
 
-def _t_test_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        t_test_oracle_sql,
-    )
-
-    return t_test_oracle_sql(
-        "SELECT * FROM events", "value",
-        "event_type = 'purchase'", "event_type = 'view'",
-    )
-
-
-@q(
-    "events_t_test",
-    _t_test_oracle(),
-    "T-test metric aggregation — the OpenSearch t_test agg, default "
-    "heteroscedastic (Welch, unpaired) form: the t statistic and "
-    "Welch degrees of freedom between purchase-event and view-event "
-    "values (the Discover A/B panel). Extended-stats determinism "
-    "ladder: 6-dp quantized longs, exact DECIMAL(38,0) "
-    "count/sum/sum-of-squares per bucket in ONE 1-row aggregate, one "
-    "final short IEEE chain mirrored verbatim in the oracle "
-    "(operators/retrieval.py:t_test_agg).",
-)
-def events_t_test_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        t_test_agg,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return t_test_agg(
-        ev, "value", "event_type = 'purchase'", "event_type = 'view'"
-    )
-
-
 def _div_sampler_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         diversified_sampler_oracle_sql,
     )
 
@@ -5499,10 +4860,10 @@ def _div_sampler_oracle() -> str:
     "The BM25 top-100 hit set broadcasts into the dedup-field join "
     "(corpus never shuffles); the per-bucket cut is "
     "WindowGroupLimit-trimmed map-side "
-    "(operators/retrieval.py:diversified_sampler).",
+    "(operators/aggs.py:diversified_sampler).",
 )
 def diversified_sample_hits_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         diversified_sampler,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
@@ -5519,49 +4880,8 @@ def diversified_sample_hits_q(spark, sf_dir):
     )
 
 
-def _collapse_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        collapse_hits_oracle_sql,
-    )
-
-    return collapse_hits_oracle_sql(
-        f"SELECT doc_id, score FROM ({_bm25_sub_sql(100)})",
-        "source",
-        inner_hits=2,
-        top_k=10,
-    )
-
-
-@q(
-    "collapse_search_hits",
-    _collapse_oracle(),
-    "Field collapsing — the OpenSearch search-time collapse with "
-    "inner_hits (one result per source, each group's best 2 docs "
-    "riding along; the one-hit-per-domain dedup every search UI "
-    "ships). Groups order by their best hit, deterministic "
-    "(score DESC, id ASC) where OpenSearch is shard-order-dependent; "
-    "NULL collapse values form their own group. The BM25 top-100 hit "
-    "set broadcasts into the collapse-field join — the corpus never "
-    "shuffles (operators/retrieval.py:collapse_hits).",
-)
-def collapse_search_hits_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        collapse_hits,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.search import (
-        bm25_search_indexed,
-    )
-
-    idx_t, dl_t = _token_index_for(spark, sf_dir)
-    hits = bm25_search_indexed(
-        spark, idx_t, dl_t, ["spark", "shuffle", "broadcast"], top_k=100
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    return collapse_hits(hits, docs, "source", inner_hits=2, top_k=10)
-
-
 def _sig_text_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_text_oracle_sql,
     )
 
@@ -5580,10 +4900,10 @@ def _sig_text_oracle() -> str:
     "pasted boilerplate cannot manufacture significance): JLH "
     "over-representation of German-doc terms vs the corpus. One "
     "tokenize pass; dedup is an id-min aggregate on a text hash — "
-    "no text shuffles (operators/retrieval.py:significant_text).",
+    "no text shuffles (operators/aggs.py:significant_text).",
 )
 def significant_text_hits_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_text,
     )
 
@@ -5592,130 +4912,8 @@ def significant_text_hits_q(spark, sf_dir):
     return significant_text(docs, hits, top_k=15)
 
 
-# ===========================================================================
-# r14: OpenSearch change_point/rate aggs
-# ===========================================================================
-
-
-def _change_point_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        change_point_oracle_sql,
-    )
-
-    return change_point_oracle_sql(
-        "SELECT ts, value FROM events WHERE event_type = 'purchase'"
-    )
-
-
-@q(
-    "events_change_point",
-    _change_point_oracle(),
-    "Change-point detection — the OpenSearch change_point pipeline "
-    "agg: the daily purchase-value series split maximizing the exact "
-    "between-segment squared-mean-difference statistic (long CUSUM "
-    "numerator, IEEE-identical double normalization, earliest-split "
-    "tie-break). Bucket-sized order window only "
-    "(operators/retrieval.py:change_point_agg).",
-)
-def events_change_point_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        change_point_agg,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return change_point_agg(ev.filter(F.col("event_type") == "purchase"))
-
-
-def _rate_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        rate_oracle_sql,
-    )
-
-    return rate_oracle_sql("SELECT ts, value FROM events")
-
-
-@q(
-    "events_monthly_rate",
-    _rate_oracle(),
-    "Rate metric aggregation — the OpenSearch rate agg: per-day "
-    "value/count rates inside calendar-month buckets, normalized by "
-    "each bucket's TRUE day count (exact calendar arithmetic, one "
-    "long/long division per output). One map-side-combined groupBy "
-    "(operators/retrieval.py:rate_agg).",
-)
-def events_monthly_rate_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import rate_agg
-
-    return rate_agg(load_table(spark, sf_dir, "events"))
-
-
-def _ks_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        ks_test_oracle_sql,
-    )
-
-    return ks_test_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'purchase'",
-        "SELECT ts FROM events WHERE event_type = 'error'",
-    )
-
-
-@q(
-    "events_ks_test",
-    _ks_oracle(),
-    "Two-sample Kolmogorov-Smirnov over daily-count distributions — "
-    "the OpenSearch bucket_count_ks_test agg: purchase vs error "
-    "per-day counts; D located by the exact integer cross-product "
-    "|cumA*nB - cumB*nA| (division only in the final report). "
-    "Bounded distinct-count-value window "
-    "(operators/retrieval.py:ks_test_agg).",
-)
-def events_ks_test_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        ks_test_agg,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return ks_test_agg(
-        ev.filter(F.col("event_type") == "purchase"),
-        ev.filter(F.col("event_type") == "error"),
-    )
-
-
-def _bucket_corr_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        bucket_correlation_oracle_sql,
-    )
-
-    return bucket_correlation_oracle_sql(
-        "SELECT ts FROM events WHERE event_type = 'view'",
-        "SELECT ts FROM events WHERE event_type = 'click'",
-    )
-
-
-@q(
-    "events_bucket_correlation",
-    _bucket_corr_oracle(),
-    "Pearson correlation between two daily-count bucket series — the "
-    "OpenSearch bucket_correlation pipeline agg: view vs click days "
-    "(union day axis, zero-filled), exact long moments, one final "
-    "double division (the E101 recipe). No windows "
-    "(operators/retrieval.py:bucket_correlation_agg).",
-)
-def events_bucket_correlation_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        bucket_correlation_agg,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return bucket_correlation_agg(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "click"),
-    )
-
-
 def _sampler_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         sampler_oracle_sql,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
@@ -5736,10 +4934,10 @@ def _sampler_oracle() -> str:
     "deterministic top-N where OpenSearch samples per shard). The "
     "≤N-row sample broadcasts into the facet join; scores re-quantize "
     "to exact longs for the mean "
-    "(operators/retrieval.py:sampler_agg).",
+    "(operators/aggs.py:sampler_agg).",
 )
 def sampler_lang_facets_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         sampler_agg,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import bm25_search
@@ -5913,52 +5111,6 @@ def decay_recency_orders_q(spark, sf_dir):
     )
 
 
-_DAILY_COUNT_BUCKETS_SQL = """
-SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket_start,
-       CAST(COUNT(*) AS BIGINT) AS n_hits
-FROM events
-GROUP BY 1
-"""
-
-
-def _percentiles_bucket_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        percentiles_bucket_oracle_sql,
-    )
-
-    return percentiles_bucket_oracle_sql(
-        _DAILY_COUNT_BUCKETS_SQL,
-        value_col="n_hits",
-        percents=(25.0, 50.0, 75.0, 95.0, 99.0),
-    )
-
-
-@q(
-    "events_percentiles_bucket",
-    _percentiles_bucket_oracle(),
-    "percentiles_bucket sibling pipeline aggregation — exact "
-    "nearest-rank percentiles ACROSS the daily event-count buckets "
-    "(p25/p50/p75/p95/p99 of days-by-volume, the capacity-planning "
-    "question). Rank selection is pure integer arithmetic in tenths "
-    "of a percent ((p₁₀·n+999) div 1000) over a bounded "
-    "already-aggregated bucket set — one single-task sorted "
-    "collect_list, never the corpus "
-    "(operators/retrieval.py:percentiles_bucket).",
-)
-def events_percentiles_bucket_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        percentiles_bucket,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("bucket_start")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    return percentiles_bucket(
-        daily, value_col="n_hits", percents=(25.0, 50.0, 75.0, 95.0, 99.0)
-    )
-
-
 _SQS_QUERY = '"table hash" spark -slow'
 
 
@@ -5993,51 +5145,6 @@ def simple_query_string_docs_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return simple_query_string(
         docs, _SQS_QUERY, default_operator="or", top_k=20
-    )
-
-
-_FIS_TX_SQL = """
-SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                   x -> x <> '') AS items
-FROM documents
-"""
-
-
-def _frequent_item_sets_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        frequent_item_sets_oracle_sql,
-    )
-
-    return frequent_item_sets_oracle_sql(
-        _FIS_TX_SQL, min_support=0.4, max_size=2, top_k=25
-    )
-
-
-@q(
-    "frequent_token_sets",
-    _frequent_item_sets_oracle(),
-    "frequent_item_sets aggregation — the OpenSearch ML "
-    "market-basket agg, exact where OpenSearch samples: token sets "
-    "co-occurring in >= 40% of documents. Size-2 candidates expand "
-    "IN-ROW from each doc's sorted distinct token array (no "
-    "self-join, no index) through one map-side-combined groupBy; "
-    "support is one exact-long division "
-    "(operators/retrieval.py:frequent_item_sets).",
-)
-def frequent_token_sets_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        frequent_item_sets,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    tx = docs.select(
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda x: x != F.lit(""),
-        ).alias("items")
-    )
-    return frequent_item_sets(
-        tx, items_col="items", min_support=0.4, max_size=2, top_k=25
     )
 
 
@@ -6267,44 +5374,6 @@ def bm25_explain_doc_q(spark, sf_dir):
     return bm25_explain(docs, ["spark", "merge", "window"], 42)
 
 
-def _categorize_text_oracle() -> str:
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        categorize_text_oracle_sql,
-    )
-
-    return categorize_text_oracle_sql(
-        "SELECT event_type || ' ' || props AS msg FROM events",
-        "msg",
-        max_categories=25,
-    )
-
-
-@q(
-    "categorize_event_messages",
-    _categorize_text_oracle(),
-    "categorize_text aggregation — OpenSearch ML log-template "
-    "grouping, deterministic where OpenSearch runs an online "
-    "categorizer: digit runs mask to <num> so messages differing "
-    "only in ids/counts collapse to one template; representative "
-    "example is the lexicographic MIN original (order-independent). "
-    "One map-side-combined groupBy over the synthesized "
-    "event_type+props message stream "
-    "(operators/retrieval.py:categorize_text_agg).",
-)
-def categorize_event_messages_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        categorize_text_agg,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    msgs = events.select(
-        F.concat(F.col("event_type"), F.lit(" "), F.col("props")).alias(
-            "msg"
-        )
-    )
-    return categorize_text_agg(msgs, "msg", max_categories=25)
-
-
 @q(
     "hybrid_search_normalized",
     f"""
@@ -6451,10 +5520,10 @@ def dsl_bool_search_q(spark, sf_dir):
     "aggs all route to the engine's operators, exact where "
     "OpenSearch sketches). Epoch-floor bucketing is the portable "
     "double-mod form shared with E145 "
-    "(operators/dsl.py:execute_aggs_dsl).",
+    "(operators/aggs.py:execute_aggs_dsl).",
 )
 def aggs_dsl_daily_histogram_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -6991,10 +6060,10 @@ def dsl_bool_filter_search_q(spark, sf_dir):
     "as one output column computed in the SAME map-side-combined "
     "groupBy — nesting adds zero extra shuffles; cardinality is "
     "EXACT where OpenSearch sketches "
-    "(operators/dsl.py:execute_aggs_dsl).",
+    "(operators/aggs.py:execute_aggs_dsl).",
 )
 def aggs_dsl_type_value_stats_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -7288,10 +6357,10 @@ def search_request_retriever_rrf_q(spark, sf_dir):
     "pass computes the running total over the sibling's BOUNDED "
     "bucket relation (<= buckets rows — never corpus work; exact "
     "long arithmetic) exactly as the E153 operator does standalone "
-    "(operators/dsl.py:execute_aggs_dsl pipeline pass).",
+    "(operators/aggs.py:execute_aggs_dsl pipeline pass).",
 )
 def aggs_dsl_daily_cumsum_q(spark, sf_dir):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -8145,8 +7214,6 @@ _R17_WINDOW = [
     "q1_pricing_summary",
     "rolling_weekly_active_users",
     "scd2_point_in_time_enrich",
-    "search_histogram_pipeline",
-    "search_value_histogram",
     "skew_key_report",
     "table_checksums",
     "unpivot_lineitem_metrics",
@@ -8173,6 +7240,8 @@ _R17_WINDOW = [
     "join_semi_high_qty",
     "join_anti_no_orders",
     "join_left_order_counts",
+    "agg_distinct_customers",
+    "agg_rollup_qty",
 ]
 
 assert len(_R17_WINDOW) == 50, f"window must fill exactly 50 slots, got {len(_R17_WINDOW)}"

@@ -71,7 +71,6 @@ HEADLINE = (
     "fuzzy_search_docs",
     "match_phrase_prefix_docs",
     "rare_terms_docs",
-    "search_histogram_pipeline",
     "composite_agg_events_page",
     "percolate_prefix_alerts",
     "range_agg_event_values",
@@ -85,37 +84,26 @@ HEADLINE = (
     "percolate_wildcard_alerts",
     # r12 late additions with corpus-scale cost shapes (the bounded
     # bucket-relation pipeline aggs are wall-noise and stay out):
-    # demote-rerank BM25, vocab-scan + pruned bigram count, and the
-    # exact first-seen cumulative-distinct key aggregate
+    # demote-rerank BM25 and vocab-scan + pruned bigram count
     "boosting_search_docs",
     "phrase_suggest_docs",
-    "cumulative_unique_users",
     # r13: the round's additions (sf0.1 only, same policy) — the
     # corpus-scale new metric aggs (string_stats scans every
     # character; boxplot/MAD build distinct-value distributions; the
-    # 1-row t_test and the broadcast-joined sampler are wall-noise
-    # but tracked for regression anyway as a family)
+    # broadcast-joined sampler is wall-noise but tracked for
+    # regression anyway as a family)
     "events_boxplot",
     "docs_string_stats",
-    "events_t_test",
     "diversified_sample_hits",
-    # r14 additions: the OpenSearch ML-agg family (change_point /
-    # rate / KS / bucket_correlation — daily groupBys + bounded bucket
-    # windows)
-    "events_change_point",
-    "events_monthly_rate",
-    "events_ks_test",
-    "events_bucket_correlation",
+    # r14 additions: the sampler agg (a bounded sample + facet)
     "sampler_lang_facets",
     # r14 continuation: the new search-scoring single-pass shapes
     # (simple_query_string / dis_max — one tokenize with in-row
-    # phrase counting) and the exact market-basket agg (in-row pair
-    # expansion over the corpus).
-    # The bounded scoring queries (rank_feature/pinned/distance/decay/
-    # percentiles_bucket) are wall-noise and stay out.
+    # phrase counting).
+    # The bounded scoring queries (rank_feature/pinned/distance/decay)
+    # are wall-noise and stay out.
     "simple_query_string_docs",
     "dis_max_docs",
-    "frequent_token_sets",
     # r15: the switch-over execution paths with corpus-scale cost
     # shapes — sqs percolation (one positional corpus pass), the
     # recursive nested-bool tree (one tokenize pass) and the two

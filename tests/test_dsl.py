@@ -187,7 +187,7 @@ def events(spark):
 
 
 def test_aggs_dsl_terms_and_metrics(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -218,7 +218,7 @@ def test_aggs_dsl_terms_and_metrics(events):
 
 
 def test_aggs_dsl_histograms_and_percentiles(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -248,7 +248,7 @@ def test_aggs_dsl_histograms_and_percentiles(events):
 
 
 def test_aggs_dsl_range_and_filters(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -273,7 +273,7 @@ def test_aggs_dsl_range_and_filters(events):
 
 
 def test_aggs_dsl_validation(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -482,13 +482,15 @@ def test_search_request_score_sort_on_topk_shape(docs):
 def test_aggs_dsl_histogram_integer_edges(spark):
     """ADVICE r14: histogram bucket edges use pure-integer double-mod
     arithmetic — exact for values beyond double-division precision
-    (|quantized value| > ~9e9) and for negatives."""
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    (|quantized value| > ~9e9) and for negatives. Null, NaN and
+    infinite values form no bucket."""
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
     rows = [(1, 20000.000001), (2, 20000.999999), (3, -0.5),
-            (4, 1e10 + 0.25), (5, 1e10 + 0.75)]
+            (4, 1e10 + 0.25), (5, 1e10 + 0.75), (6, None),
+            (7, float("nan")), (8, float("inf")), (9, float("-inf"))]
     df = spark.createDataFrame(rows, "id long, v double")
     out = execute_aggs_dsl(
         df, {"h": {"histogram": {"field": "v", "interval": 0.5}}}
@@ -499,6 +501,79 @@ def test_aggs_dsl_histogram_integer_edges(spark):
     assert got[-0.5] == 1
     assert got[1e10 + 0.0] == 1
     assert got[1e10 + 0.5] == 1
+    assert sum(got.values()) == 5
+
+
+def test_aggs_dsl_calendar_intervals(spark):
+    """calendar_interval truncates in the session's UTC, as OpenSearch
+    does: 1w buckets start on Monday, 1M equals month, a composite
+    source takes a unit name, and a multiple such as 2d is rejected
+    (that is a fixed_interval). fixed_interval keeps the epoch floor,
+    pre-1970 instants included, and a null timestamp forms no
+    bucket."""
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
+        execute_aggs_dsl,
+    )
+
+    rows = [
+        (1, "2024-01-03 12:00:00"),  # Wednesday
+        (2, "2024-01-07 23:17:00"),  # Sunday of the same week
+        (3, "2024-01-08 00:00:00"),  # Monday
+        (4, "2024-02-29 06:00:00"),
+        (5, "1969-12-31 23:30:00"),  # Wednesday
+        (6, None),
+    ]
+    df = spark.createDataFrame(rows, "id long, ts string").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+    def buckets(interval):
+        out = execute_aggs_dsl(
+            df, {"h": {"date_histogram": {"field": "ts", **interval}}}
+        )["h"]
+        return {
+            r.start: r.doc_count
+            for r in out.select(
+                F.col("bucket_start").cast("string").alias("start"),
+                "doc_count",
+            ).collect()
+        }
+
+    weeks = {
+        "2024-01-01 00:00:00": 2,
+        "2024-01-08 00:00:00": 1,
+        "2024-02-26 00:00:00": 1,
+        "1969-12-29 00:00:00": 1,
+    }
+    assert buckets({"calendar_interval": "1w"}) == weeks
+    assert buckets({"calendar_interval": "week"}) == weeks
+    months = {
+        "2024-01-01 00:00:00": 3,
+        "2024-02-01 00:00:00": 1,
+        "1969-12-01 00:00:00": 1,
+    }
+    assert buckets({"calendar_interval": "1M"}) == months
+    assert buckets({"calendar_interval": "month"}) == months
+    assert buckets({"fixed_interval": "1d"})["1969-12-31 00:00:00"] == 1
+    assert buckets({"fixed_interval": "10m"})["2024-01-07 23:10:00"] == 1
+
+    comp = execute_aggs_dsl(
+        df.filter(F.col("ts").isNotNull()),
+        {"c": {"composite": {
+            "sources": [{"m": {"date_histogram": {
+                "field": "ts", "calendar_interval": "month"}}}],
+            "size": 10,
+        }}},
+    )["c"]
+    assert {
+        r.m: r.doc_count
+        for r in comp.select(
+            F.col("m").cast("string").alias("m"), "doc_count"
+        ).collect()
+    } == months
+
+    with pytest.raises(ValueError, match="calendar_interval"):
+        buckets({"calendar_interval": "2d"})
 
 
 def test_dsl_boosting_span_routes_equal_direct(docs):
@@ -678,7 +753,7 @@ def test_dsl_bool_filter_context(docs):
 
 
 def test_aggs_dsl_sub_aggregations(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -892,11 +967,9 @@ def test_dsl_termlevel_routes_equal_direct(spark, docs):
 
 
 def test_aggs_dsl_metric_agg_routes(events, docs):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
-        execute_aggs_dsl,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         boxplot_agg,
+        execute_aggs_dsl,
         mad_agg,
         multi_terms,
         percentile_ranks,
@@ -937,12 +1010,12 @@ def test_aggs_dsl_metric_agg_routes(events, docs):
 
 
 def test_search_request_significant_text_agg(docs):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
-        execute_search_request,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
         significant_text,
+    )
+    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+        execute_search_request,
     )
 
     page, aggs = execute_search_request(
@@ -1632,11 +1705,9 @@ def test_search_request_retriever_rrf(spark):
 
 
 def test_aggs_dsl_composite_and_filter_leaves(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
-        execute_aggs_dsl,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         composite_agg_page,
+        execute_aggs_dsl,
     )
 
     body = {"comp": {"composite": {
@@ -1693,10 +1764,8 @@ def test_aggs_dsl_composite_and_filter_leaves(events):
 
 
 def test_aggs_dsl_pipeline_buckets_path(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
         histogram_pipeline,
     )
 
@@ -1735,7 +1804,7 @@ def test_aggs_dsl_pipeline_buckets_path(events):
 
 
 def test_aggs_dsl_bucket_script_selector_sort(events):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -1946,7 +2015,7 @@ def test_dsl_prefix_constant_score_routes(spark, docs):
 
 
 def test_aggs_dsl_missing_rare_terms(spark, docs):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
     )
 
@@ -1973,15 +2042,15 @@ def test_search_request_score_dependent_aggs(spark, docs):
     """top_hits under terms / sampler / diversified_sampler consume
     the query scores execute_search_request joins into the hit
     relation — each bit-identical to its dedicated operator."""
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
-        execute_aggs_dsl,
-        execute_search_dsl,
-        execute_search_request,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         diversified_sampler,
+        execute_aggs_dsl,
         sampler_agg,
         top_hits_per_facet,
+    )
+    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+        execute_search_dsl,
+        execute_search_request,
     )
 
     rel = docs.withColumn(
@@ -2046,7 +2115,7 @@ def test_search_request_aggs_docs_with_own_score_field(spark, docs):
         execute_search_dsl,
         execute_search_request,
     )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         top_hits_per_facet,
     )
 
@@ -2139,12 +2208,12 @@ def test_dsl_bool_multi_term_match_es_semantics(spark):
 
 
 def test_aggs_dsl_significant_terms_indexed(spark, docs):
-    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         execute_aggs_dsl,
-        execute_search_request,
-    )
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
         significant_terms,
+    )
+    from aws_dms_cdc_data_pipeline_spark.operators.dsl import (
+        execute_search_request,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
         ensure_token_index,

@@ -1,99 +1,7 @@
-"""Property tests: date/numeric hit-set histograms vs brute-force
-Python references replicating the exact ladder selection and
-integer-exact floor bucketing."""
-
-import math
-from datetime import datetime, timezone
+"""Property tests: the bucket pipeline aggs and composite paging
+(operators/aggs.py) vs brute-force Python references."""
 
 from hypothesis import HealthCheck, given, settings, strategies as st
-
-from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-    _HISTO_LADDER,
-    _NUM_LADDER,
-    date_histogram,
-    numeric_histogram,
-)
-
-
-def _pick(ladder, span, target):
-    for rung in ladder:
-        if span < rung * target:
-            return rung
-    return ladder[-1]
-
-
-def _ref_date(uts_list, target):
-    if not uts_list:
-        return {}
-    iv = _pick(_HISTO_LADDER, max(uts_list) - min(uts_list), target)
-    out = {}
-    for u in uts_list:
-        lo = u - u % iv
-        out[(lo, iv)] = out.get((lo, iv), 0) + 1
-    return out
-
-
-def _ref_num(vals, target):
-    if not vals:
-        return {}
-    uvs = [math.floor(v * 1000000.0) for v in vals]
-    iv = _pick(_NUM_LADDER, max(uvs) - min(uvs), target)
-    out = {}
-    for u in uvs:
-        lo = u - ((u % iv + iv) % iv)
-        out[(lo / 1000000.0, iv / 1000000.0)] = (
-            out.get((lo / 1000000.0, iv / 1000000.0), 0) + 1
-        )
-    return out
-
-
-@settings(max_examples=12, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow,
-                                 HealthCheck.function_scoped_fixture])
-@given(
-    uts=st.lists(
-        # spans the epoch: pre-1970 timestamps have NEGATIVE epoch
-        # seconds, where naive dividend-sign modulo would bucket
-        # upward instead of flooring (regression coverage for the
-        # double-mod form; the Python reference's % is floor-mod)
-        st.integers(-40_000_000, 1_500_000_000 + 40_000_000),
-        min_size=1, max_size=20,
-    ),
-    target=st.integers(1, 40),
-)
-def test_date_histogram_matches_reference(spark, uts, target):
-    rows = [
-        (datetime.fromtimestamp(u, tz=timezone.utc).replace(tzinfo=None),)
-        for u in uts
-    ]
-    hits = spark.createDataFrame(rows, "ts timestamp")
-    got = {
-        (int(r["bucket_start"].replace(tzinfo=timezone.utc).timestamp()),
-         r["interval_sec"]): r["n_hits"]
-        for r in date_histogram(hits, "ts", target_buckets=target).collect()
-    }
-    assert got == _ref_date(uts, target)
-
-
-@settings(max_examples=12, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow,
-                                 HealthCheck.function_scoped_fixture])
-@given(
-    vals=st.lists(
-        st.floats(-1e5, 1e5, allow_nan=False, allow_infinity=False),
-        min_size=1, max_size=20,
-    ),
-    target=st.integers(1, 40),
-)
-def test_numeric_histogram_matches_reference(spark, vals, target):
-    hits = spark.createDataFrame([(v,) for v in vals], "value double")
-    got = {
-        (r["bucket_start"], r["interval"]): r["n_hits"]
-        for r in numeric_histogram(
-            hits, "value", target_buckets=target
-        ).collect()
-    }
-    assert got == _ref_num(vals, target)
 
 
 @settings(max_examples=10, deadline=None,
@@ -106,7 +14,7 @@ def test_numeric_histogram_matches_reference(spark, vals, target):
 def test_histogram_pipeline_matches_reference(spark, counts, window):
     """derivative/cumulative_sum/moving_avg over arbitrary bucket
     counts == a pure-Python reference (trailing partial windows)."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         histogram_pipeline,
     )
 
@@ -148,7 +56,7 @@ def test_composite_paging_covers_all_buckets(spark, buckets, size):
     composite-key order, for arbitrary bucket sets and page sizes."""
     from pyspark.sql import functions as F
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         composite_agg_page,
     )
 

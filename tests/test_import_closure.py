@@ -3,9 +3,10 @@
 Importing the streaming pipeline and the aggregate view must load only
 the modules the engine runs — no search, retrieval or query-registry
 code, and no pandas — so bringing up a CDC stream never pays for the
-rest of the package. The maintenance jobs and the full-load seed are
-held to the same bar. Checked in a fresh interpreter, because the test
-session itself has long since imported everything.
+rest of the package. The maintenance jobs and the full-load seed, and
+the Discover read (``operators.aggs``), are held to the same bar.
+Checked in a fresh interpreter, because the test session itself has
+long since imported everything.
 """
 
 import json
@@ -52,6 +53,14 @@ MAINTENANCE = {
     f"{PKG}.maintenance.retention",
 }
 
+READ = {
+    PKG,
+    f"{PKG}.session",
+    f"{PKG}.operators",
+    f"{PKG}.operators.aggs",
+    f"{PKG}.operators.partitioning",
+}
+
 _PROBE = """
 import json, sys
 import {modules}
@@ -94,3 +103,11 @@ def test_maintenance_import_loads_only_cdc_modules():
     off_path = sorted(set(loaded["package"]) - MAINTENANCE)
     assert not off_path, f"maintenance import loads off-path modules: {off_path}"
     assert not loaded["pandas"], "maintenance import loads pandas"
+
+
+def test_read_import_loads_no_search_stack():
+    loaded = _probe(["operators.aggs"])
+    off_path = sorted(set(loaded["package"]) - READ)
+    assert not off_path, f"aggs import loads off-path modules: {off_path}"
+    assert f"{PKG}.operators.aggs" in loaded["package"]
+    assert not loaded["pandas"], "aggs import loads pandas"

@@ -151,18 +151,6 @@ def test_heavy_text_passes_fan_out_on_poorly_split_sources(spark, tmp_path):
         )
 
 
-def test_top_metrics_is_one_aggregate_no_window(spark, sf_dir):
-    """The argmax computes as a struct-extreme AGGREGATE (map-side
-    partials) — a refactor to a per-bucket rank window would sort
-    corpus-sized data per bucket and fails here."""
-    plan = _plan(spark, sf_dir, "top_metrics_events")
-    assert "Window" not in plan
-    shuffles = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert shuffles <= 2  # bucket aggregate + final order
-
-
 def test_terms_set_prunes_and_stays_shuffle_light(spark, sf_dir):
     """terms_set reads the token index with an isin literal (bucket-
     prunable) and attaches the per-doc required count via ONE join;

@@ -1,11 +1,11 @@
-"""Retrieval-serving operators: RRF fusion, more-like-this, snippets,
-prefix autocomplete (operators/retrieval.py)."""
+"""Retrieval-serving operators (operators/retrieval.py: RRF fusion,
+more-like-this, snippets, suggesters) and the hit-set aggregations
+(operators/aggs.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-    autocomplete_prefix,
     more_like_this,
     rrf_fuse,
     search_snippets,
@@ -159,203 +159,8 @@ def test_spell_suggest_ranking_and_bands(spark):
         spell_suggest(spark, idx, [])
 
 
-def test_retrieval_eval_hand_checked(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        retrieval_eval,
-    )
-
-    # q1: gold {10, 20, 30}; retrieved ranks: 10@1, 20@3 (30 missed)
-    # q2: gold {40}; nothing retrieved
-    res = spark.createDataFrame(
-        [("q1", 10, 1), ("q1", 99, 2), ("q1", 20, 3)],
-        "query_id string, doc_id long, rank long",
-    )
-    gold = spark.createDataFrame(
-        [("q1", 10), ("q1", 20), ("q1", 30), ("q2", 40)],
-        "query_id string, doc_id long",
-    )
-    out = {
-        r["query_id"]: (r["recall_at_k"], r["mrr"], r["ndcg_at_k"])
-        for r in retrieval_eval(res, gold, k=10).collect()
-    }
-    import math
-
-    q = lambda r: round(1e6 / math.log2(r + 1))
-    dcg = q(1) + q(3)
-    idcg = q(1) + q(2) + q(3)
-    assert out["q1"] == (
-        round(2 / 3, 6),
-        1.0,
-        round(dcg / idcg, 6),
-    )
-    assert out["q2"] == (0.0, 0.0, 0.0)
-
-
-def test_facet_counts_and_stats(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        facet_counts,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "en", "a", 100), (2, "en", "a", 200), (3, "de", "b", 50),
-         (4, "en", "b", 10)],
-        "doc_id long, lang string, source string, n_chars long",
-    )
-    hits = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
-    got = {
-        (r["lang"], r["source"]): (
-            r["n_hits"], r["n_chars_min"], r["n_chars_max"], r["n_chars_avg"]
-        )
-        for r in facet_counts(
-            hits, docs, ["lang", "source"], stat_col="n_chars"
-        ).collect()
-    }
-    # doc 4 not in the hit set -> no (en, b) bucket
-    assert got == {("en", "a"): (2, 100, 200, 150.0),
-                   ("de", "b"): (1, 50, 50, 50.0)}
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        facet_counts(hits, docs, [])
-
-
-def test_keyset_page_after_cursor(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        keyset_page,
-    )
-
-    ranked = spark.createDataFrame(
-        [(1, 9.0), (2, 8.0), (3, 8.0), (4, 8.0), (5, 7.0)],
-        "doc_id long, score double",
-    )
-    # cursor at (8.0, doc 3): page = same-score doc 4, then score 7
-    cursor = spark.createDataFrame([(3, 8.0)], "doc_id long, score double")
-    got = [
-        (r["doc_id"], r["score"])
-        for r in keyset_page(ranked, cursor, page_size=2).collect()
-    ]
-    assert got == [(4, 8.0), (5, 7.0)]
-    # pages chain: the union of page-walks is the full ranking, no
-    # skips/duplicates
-    seen, cur = [], spark.createDataFrame(
-        [(0, 1e9)], "doc_id long, score double"
-    )
-    while True:
-        page = keyset_page(ranked, cur, page_size=2).collect()
-        if not page:
-            break
-        seen += [(r["doc_id"], r["score"]) for r in page]
-        last = page[-1]
-        cur = spark.createDataFrame(
-            [(last["doc_id"], last["score"])], "doc_id long, score double"
-        )
-    assert seen == [(1, 9.0), (2, 8.0), (3, 8.0), (4, 8.0), (5, 7.0)]
-
-
-def test_autocomplete_prefix_ranks_by_df(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.search import (
-        ensure_token_index,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "stream stream stone apple"),
-            (2, "stream stone apple"),
-            (3, "stream strike apple"),
-        ],
-        "doc_id long, text string",
-    )
-    idx, _ = ensure_token_index(spark, docs, "t_auto")
-    got = [
-        (r["term"], r["df"], r["total_tf"])
-        for r in autocomplete_prefix(spark, idx, "st").collect()
-    ]
-    assert got == [("stream", 3, 4), ("stone", 2, 2), ("strike", 1, 1)]
-    with pytest.raises(ValueError):
-        autocomplete_prefix(spark, idx, "")
-
-
-def test_date_histogram_buckets_and_auto_interval(spark):
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-    )
-
-    # 4 hits over ~100 s: with target 30 the ladder picks 5 s rungs
-    rows = [
-        (datetime(2024, 1, 1, 0, 0, 0),),
-        (datetime(2024, 1, 1, 0, 0, 3),),   # same 5 s bucket as t=0
-        (datetime(2024, 1, 1, 0, 0, 7),),   # next bucket
-        (datetime(2024, 1, 1, 0, 1, 40),),  # t=100 s
-    ]
-    hits = spark.createDataFrame(rows, "ts timestamp")
-    out = date_histogram(hits, "ts", target_buckets=30).collect()
-    assert all(r["interval_sec"] == 5 for r in out)
-    got = {(r["bucket_start"].isoformat(), r["n_hits"]) for r in out}
-    assert got == {
-        ("2024-01-01T00:00:00", 2),
-        ("2024-01-01T00:00:05", 1),
-        ("2024-01-01T00:01:40", 1),
-    }
-    # ordered by bucket_start
-    starts = [r["bucket_start"] for r in out]
-    assert starts == sorted(starts)
-    # a tighter bucket budget walks UP the ladder: span 100 s with
-    # target 3 needs >= 34 s rungs -> 60 s
-    coarse = date_histogram(hits, "ts", target_buckets=3).collect()
-    assert all(r["interval_sec"] == 60 for r in coarse)
-    assert sum(r["n_hits"] for r in coarse) == 4
-
-    # single-instant hit set: span 0 picks the finest rung, 1 bucket
-    one = date_histogram(
-        spark.createDataFrame(rows[:1], "ts timestamp"), "ts"
-    ).collect()
-    assert len(one) == 1 and one[0]["interval_sec"] == 1
-
-    # empty hit set: empty histogram, stable schema
-    empty = date_histogram(hits.filter(F.lit(False)), "ts")
-    assert empty.collect() == []
-    assert [f.name for f in empty.schema.fields] == [
-        "bucket_start", "n_hits", "interval_sec",
-    ]
-
-    with pytest.raises(ValueError, match="target_buckets"):
-        date_histogram(hits, "ts", target_buckets=0)
-
-
-def test_numeric_histogram_ladder_and_negatives(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        numeric_histogram,
-    )
-
-    # span 0..9.5 with target 10 → 1-unit rungs; negatives floor to -∞
-    rows = [(-1.5,), (-0.2,), (0.3,), (0.9,), (1.1,), (9.5,)]
-    hits = spark.createDataFrame(rows, "value double")
-    out = {(r["bucket_start"], r["n_hits"]) for r in
-           numeric_histogram(hits, "value", target_buckets=12).collect()}
-    got_iv = {r["interval"] for r in
-              numeric_histogram(hits, "value", target_buckets=12).collect()}
-    assert got_iv == {1.0}
-    assert out == {(-2.0, 1), (-1.0, 1), (0.0, 2), (1.0, 1), (9.0, 1)}
-    # tighter budget walks the 1-2-5 ladder: span 11 with target 3
-    # needs >= 3.67 → 5-unit rungs
-    coarse = numeric_histogram(hits, "value", target_buckets=3).collect()
-    assert {r["interval"] for r in coarse} == {5.0}
-    assert sum(r["n_hits"] for r in coarse) == 6
-    # ordering + stable schema on empty input
-    empty = numeric_histogram(hits.filter(F.lit(False)), "value")
-    assert empty.collect() == []
-    assert [f.name for f in empty.schema.fields] == [
-        "bucket_start", "n_hits", "interval",
-    ]
-
-    with pytest.raises(ValueError, match="target_buckets"):
-        numeric_histogram(hits, "value", target_buckets=0)
-
-
 def test_significant_terms_hand_checked(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_terms,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
@@ -398,7 +203,7 @@ def test_significant_terms_hand_checked(spark):
 
 
 def test_top_hits_per_facet_hand_checked(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         top_hits_per_facet,
     )
 
@@ -426,38 +231,12 @@ def test_top_hits_per_facet_hand_checked(spark):
         top_hits_per_facet(hits, docs, ["lang"], hits_per_bucket=0)
 
 
-def test_date_histogram_pre1970_floors_down(spark):
-    """Negative-epoch timestamps floor toward -inf (double-mod form):
-    23:59:57 and 23:59:59 on 1969-12-31 land in the :55 5s bucket,
-    not a bucket above them."""
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-    )
-
-    rows = [
-        (datetime(1969, 12, 31, 23, 59, 57),),
-        (datetime(1969, 12, 31, 23, 59, 59),),
-        (datetime(1970, 1, 1, 0, 0, 2),),
-    ]
-    hits = spark.createDataFrame(rows, "ts timestamp")
-    got = sorted(
-        (r["bucket_start"].isoformat(), r["n_hits"], r["interval_sec"])
-        for r in date_histogram(hits, "ts", target_buckets=3).collect()
-    )
-    assert got == [
-        ("1969-12-31T23:59:55", 2, 5),
-        ("1970-01-01T00:00:00", 1, 5),
-    ]
-
-
 def test_significant_terms_property_vs_reference(spark):
     """Randomized-ish sweep (deterministic seeds) of significant_terms
     vs a Python reference computing the same JLH arithmetic."""
     import random
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_terms,
     )
     from aws_dms_cdc_data_pipeline_spark.operators.search import (
@@ -501,54 +280,12 @@ def test_significant_terms_property_vs_reference(spark):
         assert got == want, (seed, got, want)
 
 
-def test_histograms_ignore_missing_values(spark):
-    """Null timestamps and null/NaN numerics are ignored (OpenSearch
-    missing-value semantics) instead of erroring the ANSI cast or
-    forming a null bucket."""
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-        numeric_histogram,
-    )
-
-    ts_rows = [(datetime(2024, 1, 1),), (None,), (datetime(2024, 1, 1),)]
-    out = date_histogram(
-        spark.createDataFrame(ts_rows, "ts timestamp"), "ts"
-    ).collect()
-    assert len(out) == 1 and out[0]["n_hits"] == 2
-
-    num_rows = [(1.0,), (None,), (float("nan"),), (1.5,)]
-    out2 = numeric_histogram(
-        spark.createDataFrame(num_rows, "value double"), "value"
-    ).collect()
-    assert sum(r["n_hits"] for r in out2) == 2
-
-
-def test_numeric_histogram_ignores_infinities(spark):
-    """±Infinity values are missing values like null/NaN (they would
-    otherwise overflow the ANSI long cast of floor(v*1e6)) — and they
-    must not stretch the min/max span used to pick the interval."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        numeric_histogram,
-    )
-
-    rows = [(1.0,), (float("inf"),), (float("-inf"),), (2.0,), (None,)]
-    out = numeric_histogram(
-        spark.createDataFrame(rows, "value double"), "value"
-    ).collect()
-    assert sum(r["n_hits"] for r in out) == 2
-    # span is 1.0 (finite values only), so the interval stays small —
-    # an inf-stretched span would have picked the top ladder rung
-    assert all(r["interval"] <= 1.0 for r in out)
-
-
 def test_histogram_pipeline_hand_checked(spark):
     """derivative / cumulative_sum / trailing moving_avg over a tiny
     histogram, checked against hand-computed values (OpenSearch
     pipeline-agg semantics: first-bucket derivative omitted/null,
     partial leading windows average what exists)."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         histogram_pipeline,
     )
 
@@ -578,7 +315,7 @@ def test_range_buckets_overlap_gaps_and_empty(spark):
     unbounded sides work, null/NaN values are ignored."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         range_buckets,
     )
 
@@ -610,7 +347,7 @@ def test_composite_agg_page_chains_all_buckets(spark):
     composite-key order."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         composite_agg_page,
     )
     from pyspark.sql import functions as F
@@ -641,9 +378,9 @@ def test_composite_agg_page_chains_all_buckets(spark):
 
 def test_range_buckets_ignores_infinities(spark):
     """±Infinity values are missing per the histogram contract — they
-    match no bucket, including unbounded sides (numeric_histogram
-    sibling semantics, aligned in r12)."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    match no bucket, including unbounded sides (the same missing-value
+    rule as the histogram agg)."""
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         range_buckets,
     )
 
@@ -670,7 +407,7 @@ def test_bucket_script_selector_semantics(spark):
     selector results drop (gap-policy skip); validation guards."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         bucket_script_selector,
     )
 
@@ -712,7 +449,7 @@ def test_filters_agg_semantics(spark):
     collects the remainder, declaration order preserved."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         filters_agg,
     )
 
@@ -757,42 +494,12 @@ def test_filters_agg_semantics(spark):
     assert empty == [("errors", 0), ("big", 0), ("other", 0)]
 
 
-def test_adjacency_matrix_semantics(spark):
-    """Singles + pairwise intersections in key order, empty buckets
-    OMITTED (the OpenSearch contract), separator guarded."""
-    import pytest
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        adjacency_matrix,
-    )
-
-    rows = [("error", 9.0), ("error", 1.0), ("purchase", 9.5), ("view", 2.0)]
-    df = spark.createDataFrame(rows, "event_type string, value double")
-    got = [
-        (r["bucket_key"], r["n_hits"])
-        for r in adjacency_matrix(
-            df,
-            [
-                ("err", "event_type = 'error'"),
-                ("big", "value >= 8.0"),
-                ("buy", "event_type = 'purchase'"),
-            ],
-        ).collect()
-    ]
-    # err∩buy is empty → omitted; keys sort alphabetically
-    assert got == [
-        ("big", 2), ("big&buy", 1), ("big&err", 1), ("buy", 1), ("err", 2),
-    ]
-    with pytest.raises(ValueError, match="separator"):
-        adjacency_matrix(df, [("a&b", "1=1")])
-
-
 def test_bucket_sort_paging_and_gap_policy(spark):
     """bucket_sort: metric sort with tiebreak, from/size paging,
     NULL sort keys drop (gap_policy skip)."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         bucket_sort,
     )
 
@@ -823,7 +530,7 @@ def test_percentile_ranks_exact(spark):
     order; validation."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         percentile_ranks,
     )
 
@@ -840,38 +547,6 @@ def test_percentile_ranks_exact(spark):
         percentile_ranks(df, "value", [1.0, 1.0])
 
 
-def test_date_histogram_dense_zero_fill(spark):
-    """min_doc_count=0 zero-fills gaps between the first and last
-    occupied bucket; default stays sparse; empty hit sets stay
-    empty."""
-    import datetime as dt
-
-    import pytest
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        date_histogram,
-    )
-
-    def t(day, h=0):
-        return dt.datetime(2024, 1, day, h, 0, 0)
-
-    # hits on days 1, 1, 4, 6 → interval lands on 1 day (86400 s)
-    rows = [(t(1),), (t(1, 5),), (t(4),), (t(6),)]
-    df = spark.createDataFrame(rows, "ts timestamp")
-    dense = date_histogram(df, "ts", target_buckets=6, min_doc_count=0)
-    out = [(r["bucket_start"].day, r["n_hits"]) for r in dense.collect()]
-    assert out == [(1, 2), (2, 0), (3, 0), (4, 1), (5, 0), (6, 1)]
-    assert all(r["interval_sec"] == 86400 for r in dense.collect())
-    sparse = date_histogram(df, "ts", target_buckets=6)
-    assert [(r["bucket_start"].day, r["n_hits"]) for r in sparse.collect()] \
-        == [(1, 2), (4, 1), (6, 1)]
-    # empty hit set → empty histogram, both modes
-    empty = df.filter("ts IS NULL")
-    assert date_histogram(empty, "ts", min_doc_count=0).count() == 0
-    with pytest.raises(ValueError, match="min_doc_count"):
-        date_histogram(df, "ts", min_doc_count=2)
-
-
 def test_extended_stats_exact(spark):
     """Hand-checked moments on a tiny set; missing values
     (null/NaN/inf) ignored; variance clamps at zero on a constant
@@ -880,7 +555,7 @@ def test_extended_stats_exact(spark):
 
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         extended_stats,
     )
 
@@ -911,7 +586,7 @@ def test_multi_terms_buckets(spark):
     drop, size cut; validation."""
     import pytest
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         multi_terms,
     )
 
@@ -936,7 +611,7 @@ def test_multi_terms_buckets(spark):
 def test_weighted_avg_exact(spark):
     """Σ(v·w)/Σw on a hand-checked set; a row missing EITHER side
     drops entirely (its weight must not count)."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         weighted_avg,
     )
 
@@ -949,105 +624,6 @@ def test_weighted_avg_exact(spark):
     # (1 + 6 + 5) / (1 + 3 + 0.5) = 12 / 4.5
     assert r["weighted_avg"] == 12.0 / 4.5
     assert r["value_count"] == 3
-
-
-def test_matrix_stats_pairs(spark):
-    """Hand-checked covariance/correlation, complete-row drop,
-    zero-variance NULL correlation, validation."""
-    import pytest
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        matrix_stats,
-    )
-
-    # x and y perfectly correlated (y = 2x), z constant; one
-    # incomplete row must drop from the WHOLE matrix
-    rows = [
-        (1.0, 2.0, 5.0),
-        (2.0, 4.0, 5.0),
-        (3.0, 6.0, 5.0),
-        (4.0, None, 5.0),
-    ]
-    df = spark.createDataFrame(rows, "x double, y double, z double")
-    out = {
-        (r["field_x"], r["field_y"]): r
-    for r in matrix_stats(df, ["x", "y", "z"]).collect()
-    }
-    assert set(out) == {("x", "y"), ("x", "z"), ("y", "z")}
-    xy = out[("x", "y")]
-    # complete rows: (1,2),(2,4),(3,6) → mean 2/4, pop cov = 4/3
-    assert xy["n"] == 3
-    assert xy["mean_x"] == 2.0 and xy["mean_y"] == 4.0
-    assert abs(xy["covariance"] - 4.0 / 3.0) < 1e-9
-    assert abs(xy["correlation"] - 1.0) < 1e-12
-    # constant z: zero variance → correlation NULL, covariance 0
-    assert out[("x", "z")]["correlation"] is None
-    assert out[("x", "z")]["covariance"] == 0.0
-    with pytest.raises(ValueError, match="distinct"):
-        matrix_stats(df, ["x"])
-    with pytest.raises(ValueError, match="distinct"):
-        matrix_stats(df, ["x", "x"])
-
-
-def test_sibling_bucket_stats_extremes_and_ties(spark):
-    """One-row sibling stats: exact sum/min/max, single-division
-    mean, and the SORTED key sets at each extreme (OpenSearch
-    max_bucket/min_bucket report every tied bucket)."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        sibling_bucket_stats,
-    )
-
-    rows = [("b", 9), ("a", 5), ("c", 5), ("d", 9), ("e", 7)]
-    df = spark.createDataFrame(rows, "day string, n_hits long")
-    out = sibling_bucket_stats(df, key_col="day", value_col="n_hits").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["n_buckets"], r["sum_v"], r["min_v"], r["max_v"]) == (5, 35, 5, 9)
-    assert r["avg_v"] == 7.0
-    assert r["min_keys"] == "a c"
-    assert r["max_keys"] == "b d"
-
-
-def test_serial_diff_normalize_semantics(spark):
-    """Lag-N differencing (null-prefixed), percent_of_sum and 0-1
-    range normalization; zero-width range -> NULL; lag=1 reduces to
-    the derivative; validation."""
-    import pytest
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        histogram_pipeline,
-        serial_diff_normalize,
-    )
-
-    rows = [("d1", 2), ("d2", 4), ("d3", 8), ("d4", 2)]
-    df = spark.createDataFrame(rows, "bucket_start string, n_hits long")
-    out = serial_diff_normalize(
-        df, value_col="n_hits", order_col="bucket_start", lag=2
-    ).orderBy("bucket_start").collect()
-    assert [r["serial_diff"] for r in out] == [None, None, 6, -2]
-    assert [r["percent_of_sum"] for r in out] == [
-        2 / 16, 4 / 16, 8 / 16, 2 / 16
-    ]
-    assert [r["range_norm"] for r in out] == [0.0, 2 / 6, 1.0, 0.0]
-    # lag=1 == the E153 derivative on the same input
-    d1 = [
-        r["serial_diff"]
-        for r in serial_diff_normalize(df, lag=1).orderBy("bucket_start").collect()
-    ]
-    d2 = [
-        r["derivative"]
-        for r in histogram_pipeline(df).orderBy("bucket_start").collect()
-    ]
-    assert d1 == d2
-    # constant metric: zero-width range -> NULL everywhere
-    flat = spark.createDataFrame(
-        [("d1", 3), ("d2", 3)], "bucket_start string, n_hits long"
-    )
-    assert [
-        r["range_norm"] for r in serial_diff_normalize(flat).collect()
-    ] == [None, None]
-    with pytest.raises(ValueError, match="lag"):
-        serial_diff_normalize(df, lag=0)
 
 
 def test_phrase_suggest_bigram_lm_ranking(spark):
@@ -1125,119 +701,11 @@ def test_phrase_suggest_bigram_lm_ranking(spark):
     assert ok.columns == ["suggestion", "total_edits", "score", "rank"]
 
 
-def test_cumulative_cardinality_first_seen_exact(spark):
-    """Exact cumulative distinct: users count from their FIRST day
-    only; returning-user-only days report n_new 0 but stay in the
-    series; null keys/timestamps drop."""
-    import datetime as dt
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        cumulative_cardinality,
-    )
-
-    T = dt.datetime
-    rows = [
-        (T(2024, 1, 1, 9), 1), (T(2024, 1, 1, 10), 2),
-        (T(2024, 1, 2, 9), 1),                # returning only
-        (T(2024, 1, 3, 9), 3), (T(2024, 1, 3, 10), 1),
-        (T(2024, 1, 3, 11), None),            # null key drops
-        (None, 9),                            # null ts drops
-    ]
-    df = spark.createDataFrame(rows, "ts timestamp, user_id long")
-    out = [
-        (r["day"], r["n_new"], r["cumulative_distinct"])
-        for r in cumulative_cardinality(df).collect()
-    ]
-    assert out == [
-        ("2024-01-01", 2, 2),
-        ("2024-01-02", 0, 2),
-        ("2024-01-03", 1, 3),
-    ]
-
-
-def test_top_metrics_argmax_total_order(spark):
-    """Per-bucket argmax by sort with a unique tiebreak: sort ties
-    resolve to the higher tie id under max (lower under min); rows
-    missing the sort drop; the metric never participates in the
-    compare; validation."""
-    import datetime as dt
-
-    import pytest
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        top_metrics,
-    )
-
-    T = dt.datetime
-    rows = [
-        ("a", T(2024, 1, 1), 1, 10.0),
-        ("a", T(2024, 1, 2), 2, 99.0),   # latest in a
-        ("b", T(2024, 1, 5), 3, 7.0),
-        ("b", T(2024, 1, 5), 4, 5.0),    # sort tie -> higher id wins max
-        ("b", None, 9, 1000.0),          # null sort drops
-    ]
-    df = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, event_id long, value double"
-    )
-    got = [
-        tuple(r)
-        for r in top_metrics(
-            df, bucket_col="event_type", sort_col="ts",
-            tie_col="event_id", metric_col="value",
-        ).collect()
-    ]
-    us = lambda d: int(d.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)  # noqa: E731
-    assert got == [
-        ("a", us(T(2024, 1, 2)), 2, 99.0),
-        ("b", us(T(2024, 1, 5)), 4, 5.0),
-    ]
-    got_min = [
-        tuple(r)
-        for r in top_metrics(
-            df, bucket_col="event_type", sort_col="ts",
-            tie_col="event_id", metric_col="value", mode="min",
-        ).collect()
-    ]
-    assert got_min == [
-        ("a", us(T(2024, 1, 1)), 1, 10.0),
-        ("b", us(T(2024, 1, 5)), 3, 7.0),
-    ]
-    with pytest.raises(ValueError, match="mode"):
-        top_metrics(
-            df, bucket_col="event_type", sort_col="ts",
-            tie_col="event_id", metric_col="value", mode="median",
-        )
-
-
-def test_moving_percentiles_nearest_rank(spark):
-    """Exact nearest-rank trailing percentiles: element ceil(p*n) of
-    the sorted window; partial leading windows; validation."""
-    import pytest
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        moving_percentiles,
-    )
-
-    rows = [("d1", 4), ("d2", 1), ("d3", 9), ("d4", 2)]
-    df = spark.createDataFrame(rows, "bucket_start string, n_hits long")
-    out = moving_percentiles(
-        df, window=3, percentiles=(0.5, 0.95)
-    ).collect()
-    # windows: [4] [1,4] [1,4,9] [1,2,9] (sorted)
-    assert [(r["p50"], r["p95"]) for r in out] == [
-        (4, 4), (1, 4), (4, 9), (2, 9),
-    ]
-    with pytest.raises(ValueError, match="window"):
-        moving_percentiles(df, window=0)
-    with pytest.raises(ValueError, match="percentiles"):
-        moving_percentiles(df, percentiles=(0.0,))
-
-
 def test_boxplot_exact_nearest_rank(spark):
     """Hand-checked boxplot: ranks ceil(p*n) over sorted values,
     OpenSearch 1.5-IQR whisker values (nearest IN-RANGE data points,
     not the fences), missing values drop, empty input yields no row."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         boxplot_agg,
     )
 
@@ -1261,7 +729,7 @@ def test_boxplot_exact_nearest_rank(spark):
 def test_mad_exact(spark):
     """Hand-checked MAD: median 5, deviations {0,1,1,2,2,3,3,94,4}
     -> nearest-rank median deviation 2; constant column -> MAD 0."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import mad_agg
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import mad_agg
 
     vals = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 99.0]
     df = spark.createDataFrame([(float(v),) for v in vals], "value double")
@@ -1282,7 +750,7 @@ def test_quantile_prefix_no_single_partition_window(spark):
     reference."""
     import random
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         _global_cum,
         _quantile_at_ranks,
     )
@@ -1338,7 +806,7 @@ def test_string_stats_semantics(spark):
     entropy of a uniform 2-symbol alphabet == 1 bit."""
     import pytest as _pt
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         string_stats,
     )
 
@@ -1353,54 +821,12 @@ def test_string_stats_semantics(spark):
     assert r["entropy"] == _pt.approx(1.0, abs=1e-9)
 
 
-def test_t_test_welch_reference(spark):
-    """Welch t vs an independent fixed-point Python reference; n<2
-    buckets yield NULL t; overlapping predicates allowed."""
-    import math
-
-    import pytest as _pt
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        t_test_agg,
-    )
-
-    a = [2.1, 2.5, 2.9, 3.3, 2.7]
-    b = [1.0, 1.8, 1.4, 2.2]
-    rows = [("a", float(v)) for v in a] + [("b", float(v)) for v in b]
-    df = spark.createDataFrame(rows, "grp string, value double")
-    r = t_test_agg(df, "value", "grp = 'a'", "grp = 'b'").collect()[0]
-
-    def mom(xs):
-        q = [round(x * 1e6) for x in xs]
-        n = len(q)
-        s1, s2 = sum(q), sum(v * v for v in q)
-        mean = s1 / n / 1e6
-        var = max((s2 - s1 * s1 / n) / (n - 1.0) / 1e12, 0.0)
-        return n, mean, var
-
-    na, ma, va = mom(a)
-    nb, mb, vb = mom(b)
-    se2 = va / na + vb / nb
-    t_ref = (ma - mb) / math.sqrt(se2)
-    dof_ref = se2 * se2 / (
-        (va / na) ** 2 / (na - 1.0) + (vb / nb) ** 2 / (nb - 1.0)
-    )
-    assert (r["n_a"], r["n_b"]) == (5, 4)
-    assert r["t_stat"] == _pt.approx(t_ref, rel=1e-12)
-    assert r["welch_dof"] == _pt.approx(dof_ref, rel=1e-12)
-    # one-row bucket: t undefined
-    r2 = t_test_agg(df, "value", "grp = 'a'", "value > 2.0").collect()[0]
-    assert r2["n_b"] > 0  # overlap with bucket a is fine
-    r3 = t_test_agg(df, "value", "grp = 'a'", "value < 1.2").collect()[0]
-    assert r3["n_b"] == 1 and r3["t_stat"] is None
-
-
 def test_diversified_sampler_caps_and_order(spark):
     """Per-value cap enforced in (score DESC, id ASC) order; global
     cut after the cap; NULL dedup values form their own bucket."""
     import pytest as _pt
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         diversified_sampler,
     )
 
@@ -1427,52 +853,13 @@ def test_diversified_sampler_caps_and_order(spark):
         diversified_sampler(hits, docs, "lang", shard_size=0)
 
 
-def test_collapse_hits_semantics(spark):
-    """One group per collapse value ordered by best hit; inner_hits
-    cap; NULL group; top_k group cut; validation."""
-    import pytest as _pt
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        collapse_hits,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "en"), (2, "en"), (3, "en"), (4, "de"), (5, None)],
-        "doc_id long, lang string",
-    )
-    hits = spark.createDataFrame(
-        [(1, 9.0), (2, 8.0), (3, 7.0), (4, 6.0), (5, 5.5)],
-        "doc_id long, score double",
-    )
-    out = [
-        tuple(r)
-        for r in collapse_hits(
-            hits, docs, "lang", inner_hits=2, top_k=10
-        ).collect()
-    ]
-    assert out == [
-        (1, "en", 1, 1, 9.0), (1, "en", 2, 2, 8.0),
-        (2, "de", 1, 4, 6.0), (3, None, 1, 5, 5.5),
-    ]
-    # top_k cuts whole GROUPS
-    cut = [
-        (r["group_rank"], r["doc_id"])
-        for r in collapse_hits(
-            hits, docs, "lang", inner_hits=2, top_k=1
-        ).collect()
-    ]
-    assert cut == [(1, 1), (1, 2)]
-    with _pt.raises(ValueError, match="inner_hits"):
-        collapse_hits(hits, docs, "lang", inner_hits=0)
-
-
 def test_significant_text_duplicate_filtering(spark):
     """filter_duplicate_text counts exact duplicate texts once, so
     pasted boilerplate can't manufacture significance; with the
     filter off, duplicates count; validation."""
     import pytest as _pt
 
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         significant_text,
     )
 
@@ -1506,182 +893,10 @@ def test_significant_text_duplicate_filtering(spark):
         significant_text(docs, hits, top_k=0)
 
 
-def test_change_point_planted_step(spark):
-    """A planted step (10 days at ~2.0, then 10 days at ~8.0) locates
-    the split at day 10, direction up, means exact; a flat series
-    still returns its argmax row with stat 0."""
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        change_point_agg,
-    )
-
-    rows = []
-    for d in range(20):
-        base = 2.0 if d < 10 else 8.0
-        for j in range(3):  # 3 events/day, mean per day = base
-            rows.append(
-                (datetime(2024, 3, 1 + d), base + (j - 1) * 0.5)
-            )
-    df = spark.createDataFrame(rows, "ts timestamp, value double")
-    r = change_point_agg(df).collect()[0]
-    assert r["change_day"] == "2024-03-10"
-    assert r["split_index"] == 10 and r["n_buckets"] == 20
-    # daily bucket metric is the SUM of the day's values: 6.0 vs 24.0
-    assert (r["left_mean"], r["right_mean"]) == (6.0, 24.0)
-    assert r["direction"] == "up"
-
-    flat = spark.createDataFrame(
-        [(datetime(2024, 3, 1 + d), 5.0) for d in range(4)],
-        "ts timestamp, value double",
-    )
-    rf = change_point_agg(flat).collect()[0]
-    assert rf["stat"] == 0.0 and rf["direction"] == "flat"
-    assert rf["split_index"] == 1  # earliest-split tie-break
-
-
-def test_rate_agg_calendar_normalization(spark):
-    """Per-day rates divide by each month's TRUE length (leap Feb =
-    29); missing values drop; sums and counts are exact."""
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import rate_agg
-
-    rows = (
-        [(datetime(2024, 2, 1 + d), 2.0) for d in range(29)]
-        + [(datetime(2024, 3, 5), 31.0), (datetime(2024, 3, 20), 31.0)]
-        + [(datetime(2024, 3, 21), None), (None, 7.0)]
-    )
-    df = spark.createDataFrame(rows, "ts timestamp, value double")
-    out = {r["month"]: r for r in rate_agg(df).collect()}
-    assert set(out) == {"2024-02", "2024-03"}
-    feb, mar = out["2024-02"], out["2024-03"]
-    assert (feb["days_in_month"], feb["n_hits"]) == (29, 29)
-    assert feb["value_sum"] == 58.0
-    assert feb["value_rate_per_day"] == 2.0
-    assert feb["count_rate_per_day"] == 1.0
-    assert (mar["days_in_month"], mar["n_hits"]) == (31, 2)
-    assert mar["value_rate_per_day"] == 2.0
-    assert mar["count_rate_per_day"] == round(2 / 31, 6)
-
-
-def test_ks_test_planted_distributions(spark):
-    """Identical daily-count distributions give D=0; disjoint ones
-    give D=1; a hand-checked partial overlap matches the exact
-    sup-distance."""
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        ks_test_agg,
-    )
-
-    def series(counts, month):
-        rows = []
-        for d, c in enumerate(counts):
-            rows += [(datetime(2024, month, 1 + d),)] * c
-        return spark.createDataFrame(rows, "ts timestamp")
-
-    same_a, same_b = series([1, 2, 3], 1), series([1, 2, 3], 2)
-    r = ks_test_agg(same_a, same_b).collect()[0]
-    assert r["d_stat"] == 0.0 and (r["n_a"], r["n_b"]) == (3, 3)
-
-    lo, hi = series([1, 1, 2], 1), series([5, 6, 7], 2)
-    r2 = ks_test_agg(lo, hi).collect()[0]
-    assert r2["d_stat"] == 1.0 and r2["at_value"] == 2
-
-    # A counts {1,1,2,2}, B counts {1,2,2,3}: CDFs at v=1: 2/4 vs
-    # 1/4 (D=.25), v=2: 1 vs 3/4 (D=.25) -> sup .25 at v=1 (tie->min)
-    pa, pb = series([1, 1, 2, 2], 1), series([1, 2, 2, 3], 2)
-    r3 = ks_test_agg(pa, pb).collect()[0]
-    assert r3["d_stat"] == 0.25 and r3["at_value"] == 1
-
-
-def test_bucket_correlation_planted(spark):
-    """Perfectly co-moving series correlate at 1, anti-moving at -1
-    (union day axis zero-fills a missing side); constant series give
-    null correlation."""
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        bucket_correlation_agg,
-    )
-
-    def series(counts):
-        rows = []
-        for d, c in enumerate(counts):
-            rows += [(datetime(2024, 4, 1 + d),)] * c
-        return spark.createDataFrame(rows, "ts timestamp")
-
-    up = bucket_correlation_agg(series([1, 2, 3]), series([2, 4, 6]))
-    r = up.collect()[0]
-    assert r["n_buckets"] == 3 and r["correlation"] == 1.0
-
-    down = bucket_correlation_agg(series([3, 2, 1]), series([1, 2, 3]))
-    assert down.collect()[0]["correlation"] == -1.0
-
-    const = bucket_correlation_agg(series([2, 2, 2]), series([1, 2, 3]))
-    assert const.collect()[0]["correlation"] is None
-
-
-def test_change_point_translation_invariant(spark):
-    """d_k = (n-k)S_k - k(S-S_k) is exactly invariant under adding a
-    constant to every bucket (S_k grows by k*c, S by n*c) — the same
-    split and statistic must come back after translation."""
-    import random
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        change_point_agg,
-    )
-
-    rng = random.Random(7)
-    rows, shifted = [], []
-    for d in range(15):
-        v = rng.uniform(1, 9) + (5.0 if d >= 9 else 0.0)
-        ts = datetime(2024, 5, 1 + d)
-        rows.append((ts, round(v, 6)))
-        shifted.append((ts, round(v, 6) + 100.0))
-    a = change_point_agg(
-        spark.createDataFrame(rows, "ts timestamp, value double")
-    ).collect()[0]
-    b = change_point_agg(
-        spark.createDataFrame(shifted, "ts timestamp, value double")
-    ).collect()[0]
-    assert a["change_day"] == b["change_day"]
-    assert a["split_index"] == b["split_index"]
-    assert a["stat"] == b["stat"]
-    assert b["left_mean"] == round(a["left_mean"] + 100.0, 6)
-
-
-def test_ks_test_bounds_and_symmetry(spark):
-    """0 <= D <= 1 and D(A,B) == D(B,A) on random daily series."""
-    import random
-    from datetime import datetime
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        ks_test_agg,
-    )
-
-    rng = random.Random(21)
-
-    def series(month):
-        rows = []
-        for d in range(12):
-            rows += [(datetime(2024, month, 1 + d),)] * rng.randint(1, 6)
-        return spark.createDataFrame(rows, "ts timestamp")
-
-    a, b = series(6), series(7)
-    ab = ks_test_agg(a, b).collect()[0]
-    ba = ks_test_agg(b, a).collect()[0]
-    assert 0.0 <= ab["d_stat"] <= 1.0
-    assert ab["d_stat"] == ba["d_stat"]
-    assert (ab["n_a"], ab["n_b"]) == (ba["n_b"], ba["n_a"])
-
-
 def test_sampler_agg_facets_only_the_sample(spark):
     """Facets compute over ONLY the sample rows; mean score is the
     exact quantized-long mean per facet."""
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
+    from aws_dms_cdc_data_pipeline_spark.operators.aggs import (
         sampler_agg,
     )
 
@@ -1697,47 +912,3 @@ def test_sampler_agg_facets_only_the_sample(spark):
     assert set(out) == {"en", "de"}  # fr and doc 2 are outside the sample
     assert out["en"]["n_hits"] == 1 and out["en"]["avg_score"] == 2.5
     assert out["de"]["n_hits"] == 2 and out["de"]["avg_score"] == 2.0
-
-
-def test_frequent_item_sets_max_items_cap(spark):
-    """The max_items knob bounds the in-row pair expansion BY
-    CONTRACT: each transaction keeps its first max_items sorted
-    distinct items, deterministically, mirrored by the oracle."""
-    import duckdb
-
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        frequent_item_sets,
-        frequent_item_sets_oracle_sql,
-    )
-
-    rows = [
-        (["e", "a", "c", "b", "d", "a"],),  # distinct-sorted: a b c d e
-        (["b", "a", "c"],),
-        (["a", "b"],),
-        (["z", "a", "q", "b"],),
-    ]
-    tx = spark.createDataFrame(rows, "items array<string>")
-    got = frequent_item_sets(
-        tx, items_col="items", min_support=0.25, max_items=3, top_k=50
-    ).collect()
-    got_rows = sorted(
-        (r.itemset, r.size, r.support_count, r.support) for r in got
-    )
-    # truncation keeps only {a,b,c} of tx1/tx2, {a,b} of tx3,
-    # {a,b,q} of tx4 -> 'd'/'e'/'z' never appear
-    assert not any(
-        it in ("d", "e", "z") for it, _, _, _ in got_rows
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE basket AS SELECT * FROM (VALUES "
-        "(['e','a','c','b','d','a']), (['b','a','c']), "
-        "(['a','b']), (['z','a','q','b'])) t(items)"
-    )
-    want = con.execute(
-        frequent_item_sets_oracle_sql(
-            "SELECT items FROM basket",
-            min_support=0.25, max_items=3, top_k=50,
-        )
-    ).fetchall()
-    assert got_rows == sorted(want)

@@ -1,6 +1,6 @@
 """Unit tests for the r14-continuation scoring/search additions:
-rank_feature, distance_feature, pinned, decay function_score,
-simple_query_string, percentiles_bucket."""
+rank_feature, distance_feature, pinned, decay function_score and
+simple_query_string."""
 
 import math
 
@@ -200,32 +200,6 @@ def test_simple_query_string_phrase_freq_scoring(spark):
     }
     assert set(out) == {1, 2}
     assert out[1] > out[2]
-
-
-def test_percentiles_bucket_rank_edges(spark):
-    from aws_dms_cdc_data_pipeline_spark.operators.retrieval import (
-        percentiles_bucket,
-    )
-
-    b = spark.createDataFrame(
-        [(i, v) for i, v in enumerate([10, 20, 30, 40])], "k long, v long"
-    )
-    out = {
-        r.percent: r.value
-        for r in percentiles_bucket(
-            b, value_col="v", percents=(25.0, 50.0, 75.0, 100.0)
-        ).collect()
-    }
-    # nearest-rank over n=4: ceil(p*n/100) -> 1,2,3,4
-    assert out == {25.0: 10, 50.0: 20, 75.0: 30, 100.0: 40}
-    # tiny p never selects rank 0
-    out1 = percentiles_bucket(b, value_col="v", percents=(0.1,)).collect()
-    assert out1[0].value == 10
-    # empty parent -> empty result
-    empty = b.filter(F.lit(False))
-    assert percentiles_bucket(empty, value_col="v").count() == 0
-    with pytest.raises(ValueError, match="one decimal"):
-        percentiles_bucket(b, value_col="v", percents=(33.33,))
 
 
 def test_distance_feature_origin_hit_scores_boost(spark):

@@ -313,7 +313,7 @@ def test_fan_out_scan_decision_stable_across_persist(spark, tmp_path):
     """The fan-out decision memo must return the FIRST (cold-stats)
     answer on every call — persisting the operator's output must not
     flip it. Pre-memo, a caller that persisted fan_out_scan's direct
-    output (frequent_item_sets) saw the cached relation's inflated
+    output (a pair-expanding agg) saw the cached relation's inflated
     in-memory stats flip the probe to fan-out on warm calls; the memo
     froze the cold answer instead, silently pinning a quadratic
     expansion to the scan's split count (measured 0.93 → 1.39 s at
@@ -355,7 +355,7 @@ def test_fan_out_scan_decision_stable_across_persist(spark, tmp_path):
     fanned = fan_out_scan(mid, min_bytes_per_partition=128 * 1024)
     assert fanned.rdd.getNumPartitions() == target
 
-    # persist the un-fanned output (the frequent_item_sets shape) and
+    # persist the un-fanned output (the pair-expanding agg's shape) and
     # materialize it: in-memory stats now dwarf the parquet estimate,
     # but the memoized decision must not move — same partitioning on
     # a fresh identical plan, both bars
